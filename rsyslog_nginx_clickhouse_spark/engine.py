@@ -9,6 +9,10 @@ Reference workflow → Engine workflow:
   (or ``eng.ingest(...)`` for batch backfill of rotated logs).
 - Grafana panel SQL with $macros                      → ``eng.sql(...)``
   (same query text, ClickHouse function names included).
+- the DDL's ``PARTITION BY toYYYYMMDD(logdate)``      → ``Engine`` declares
+  ``declare_partition_by("nginx", "logdatetime", "logdate")``, so a
+  panel's ``$timeFilter`` also bounds ``logdate`` and reads only the
+  day partitions its range can touch.
 
 >>> eng = Engine(table_root="/data/nginx")          # doctest: +SKIP
 >>> eng.ingest("/var/log/nginx/access.log.1")       # doctest: +SKIP
@@ -22,11 +26,11 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
-from rsyslog_nginx_clickhouse_spark.functions.macros import (
-    expand_macros,
-)
 from rsyslog_nginx_clickhouse_spark.functions.clickhouse import (
     register_clickhouse_functions,
+)
+from rsyslog_nginx_clickhouse_spark.functions.macros import (
+    declare_partition_by,
 )
 from rsyslog_nginx_clickhouse_spark.plans.storage import (
     compact,
@@ -48,6 +52,7 @@ class Engine:
         self.spark = spark or get_spark("engine")
         self.table_root = table_root
         register_clickhouse_functions(self.spark)
+        declare_partition_by(TABLE_NAME, "logdatetime", "logdate")
 
     # ---- ingest (the rsyslog half) ----
 

@@ -304,6 +304,33 @@ def _expand_conditional_test(sql: str, template_vars: dict) -> str:
         sql = _unmask(masked[:m2.start()] + body + masked[after:])
 
 
+#: ClickHouse ``PARTITION BY toYYYYMMDD(date_col)`` — the DDL tells the
+#: server which day a row lives in, so a time range skips whole days.
+#: ``declare_partition_by`` records the same fact for a table here:
+#: ``date_col`` is the date of ``time_col``, give or take one day (a
+#: log line's local date against its instant under the session's UTC).
+#: ``$timeFilter`` over a declared table then also bounds ``date_col``
+#: by the range's dates widened by one day on each side, which every
+#: row the ``time_col`` bound keeps satisfies — the derived conjunct
+#: only lets Catalyst prune day directories, it never changes a result.
+_PARTITION_KEYS: dict[str, tuple[str, str]] = {}
+
+#: the one shape the derived day bound is emitted for: the only
+#: ``$table`` of the statement, filtered directly by ``$timeFilter``
+#: as the first WHERE conjunct of a positive AND chain. Anything else
+#: (``NOT $timeFilter``, an OR, a subquery or join in FROM) keeps the
+#: plain expansion. Matched on literal-masked text.
+_PRUNABLE_TIME_FILTER = re.compile(
+    r"(?is)\bFROM\s+\$table\s+WHERE\s+(?P<f>\$timeFilter)(?!\w)"
+    r"(?=\s*(?:$|\)|(?:AND|GROUP|ORDER|LIMIT|HAVING)\b))")
+
+
+def declare_partition_by(table: str, time_col: str, date_col: str) -> None:
+    """Register ``PARTITION BY date_col`` (the date of ``time_col``,
+    within one day) for a table/view (CH DDL analog)."""
+    _PARTITION_KEYS[table] = (time_col, date_col)
+
+
 def expand_macros(sql: str, table: str, time_col: str = "logdatetime",
                   interval_s: int = 3600,
                   time_from: str | None = None,
@@ -390,6 +417,18 @@ def expand_macros(sql: str, table: str, time_col: str = "logdatetime",
     sql = re.sub(r"\$timeFilterByColumn\(([^)]*)\)", _tfbc, sql)
 
     filt = col_bounds(time_col)
+    part = _PARTITION_KEYS.get(table)
+    m = _PRUNABLE_TIME_FILTER.search(sql)
+    if part and part[0] == time_col and m and sql.count("$table") == 1:
+        days = [filt]
+        if time_from:
+            days.append(f"{part[1]} >= date_sub(CAST("
+                        f"timestamp'{time_from}' AS DATE), 1)")
+        if time_to:
+            days.append(f"{part[1]} <= date_add(CAST("
+                        f"timestamp'{time_to}' AS DATE), 1)")
+        lo, hi = m.span("f")
+        sql = sql[:lo] + " AND ".join(days) + sql[hi:]
     if "$naturalTimeSeries" in sql:
         if not (time_from and time_to):
             raise ValueError(
@@ -2588,7 +2627,7 @@ def _rank_array(arr: str, acc: str, tag: str) -> str:
 #: falls through to the sorted-collect folds below
 _RANK_STAT_BAIL = re.compile(
     r"\b(join|having|limit|union|intersect|except|over|qualify"
-    r"|with|lateral|pivot)\b", re.I)
+    r"|with|lateral|pivot|(?:sort|distribute|cluster)\s+by)\b", re.I)
 _RANK_STAT_CANON = re.compile(
     r"(?is)^\s*select\s+(?P<sel>.*?)\s+from\s+"
     r"(?P<tbl>[A-Za-z_][\w.]*)\s*"
@@ -2596,6 +2635,12 @@ _RANK_STAT_CANON = re.compile(
     r"\bgroup\s+by\s+(?P<g>.*?)\s*"
     r"(?:\border\s+by\s+(?P<o>.*?))?\s*;?\s*$")
 _RANK_STAT_CALL = re.compile(r"\b(rankCorr|mannWhitneyUTest)\s*\(")
+#: GROUP BY keys whose groups are not the key text evaluated per row:
+#: ordinals, parenthesised or not, and ALL (resolved against the select
+#: list only in GROUP BY; in a window PARTITION BY ``1`` is a constant)
+#: and grouping sets
+_RANK_STAT_KEY_BAIL = re.compile(
+    r"(?i)^[\s(]*\d+[\s)]*$|\b(all|rollup|cube|grouping)\b")
 
 
 def _rewrite_grouped_rank_stats(out: str) -> str:
@@ -2674,16 +2719,44 @@ def _rewrite_grouped_rank_stats(out: str) -> str:
         return out
     # group keys for the window PARTITION BY: select-list aliases
     # resolve to their expressions (GROUP BY ug — the outer GROUP BY
-    # keeps the alias; Spark resolves group-by aliases natively there)
+    # keeps the alias; Spark resolves group-by aliases natively there).
+    # The PARTITION BY must form exactly the GROUP BY's groups, so any
+    # key whose resolution the text cannot prove falls back to the fold
+    keys = [k.strip() for k in _split_top_level(grp)]
+    if any(_RANK_STAT_KEY_BAIL.search(k) for k in keys):
+        return out
+    # refs qualified by the table name: the restructure hides the table
+    # behind the __rswin subquery alias
+    qual_ref = re.compile(
+        rf"(?i)\b{re.escape(tbl.rsplit('.', 1)[-1])}\s*\.")
+    if any(qual_ref.search(p) for p in (sel, grp, order or "")):
+        return out
     aliases = {}
+    exprs = []
     for item in _split_top_level(sel):
         am = re.match(r"(?is)^\s*(.*?)\s+as\s+([A-Za-z_]\w*)\s*$",
                       item)
         if am:
             aliases[am.group(2).lower()] = am.group(1)
-    pkeys = [aliases.get(k.strip().lower(), k.strip())
-             for k in _split_top_level(grp)]
-    pk = ", ".join(pkeys)
+            exprs.append(am.group(1))
+        elif re.search(r"(?i)[\w)\]\x00]\s+(?!end\b)[A-Za-z_]\w*\s*$",
+                       item):
+            # a trailing bare word: a no-AS alias (or DISTINCT, IS
+            # NULL, …) — not provably a plain expression
+            return out
+        else:
+            exprs.append(item)
+    for k in keys:
+        a = aliases.get(k.lower())
+        if a is None:
+            continue
+        # an alias that also names a column (GROUP BY then means the
+        # column) or a constant alias: its groups are not provable
+        if not re.search(r"[A-Za-z_]", a) or any(
+                re.search(rf"(?i)\b{re.escape(k)}\b", e)
+                for e in exprs + [where or ""]):
+            return out
+    pk = ", ".join(aliases.get(k.lower(), k) for k in keys)
 
     win_cols: list[str] = []   # window column definitions (aliased)
     repl_for: dict[tuple, str] = {}  # (fn, x, y) → replacement expr

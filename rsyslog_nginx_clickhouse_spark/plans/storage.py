@@ -6,8 +6,16 @@ ORDER BY (logdate, logdatetime) SETTINGS index_granularity=8192``.
 
 Spark mapping (SURVEY §1.3):
 
-- ``partitionBy(partition_col)``      ↔ daily partitions → partition
-  pruning on date predicates (Catalyst prunes directories before scan).
+- ``partitionBy(partition_col)``      ↔ daily partitions. Catalyst prunes
+  directories before the scan on ``logdate`` predicates, and a Grafana
+  ``$timeFilter`` over the engine's table derives one (see
+  ``functions.macros.declare_partition_by``): ``logdate`` between the
+  range's dates widened by one day on each side. The widening makes
+  the derived bound implied by the ``logdatetime`` bound for every
+  row: ``logdate`` is the log line's local date, which equals the UTC
+  date of ``logdatetime`` under ``keep_tz=False`` and is within one
+  day of it under ``keep_tz=True`` (nginx offsets are within ±14 h),
+  so the pruning never changes a result.
 - ``sortWithinPartitions(sort_cols)`` ↔ MergeTree ORDER BY → Parquet
   row-group min/max stats become selective, so time-range predicates
   skip row groups exactly like the sparse primary index skips marks.
@@ -15,6 +23,9 @@ Spark mapping (SURVEY §1.3):
 - ``compact()``                       ↔ background merges: micro-batch
   appends create small sorted parts; periodic compaction rewrites each
   partition into few large sorted files.
+- ``read_table(schema=...)``          ↔ the DDL's column list: the table
+  is read with its declared schema (``NGINX_TABLE_SCHEMA`` by default),
+  so opening it lists the files but runs no schema-inference job.
 
 At 100 TB: partition count = days (bounded), file size controlled by
 ``repartition(n, partition_col)`` per partition before the sorted write,
@@ -26,6 +37,11 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
+
+from rsyslog_nginx_clickhouse_spark.sources.nginx_log import (
+    NGINX_TABLE_SCHEMA,
+)
 
 #: ↔ index_granularity=8192 rows/mark: one 128 MB row group ≈ the same
 #: skipping role at parquet's granularity.
@@ -67,8 +83,15 @@ def write_mergetree_like(df: DataFrame, path: str,
        .parquet(path))
 
 
-def read_table(spark: SparkSession, path: str) -> DataFrame:
+def read_table(spark: SparkSession, path: str,
+               schema: StructType | None = NGINX_TABLE_SCHEMA) -> DataFrame:
     """Read the CURRENT version of a table as a stable snapshot.
+
+    ``schema`` is the table's declared schema; Spark then only lists
+    the files. The columns come out in the order inference gives (data
+    columns, then the partition column), all nullable, and an empty
+    table directory reads as an empty frame. ``None`` infers the
+    schema from a file footer, for tables of another shape.
 
     Resolving the compaction symlink at open pins this reader to one
     version directory; a concurrent ``compact()`` retains that version
@@ -80,7 +103,8 @@ def read_table(spark: SparkSession, path: str) -> DataFrame:
     """
     import os
 
-    return spark.read.parquet(os.path.realpath(path))
+    reader = spark.read if schema is None else spark.read.schema(schema)
+    return reader.parquet(os.path.realpath(path))
 
 
 def compact(spark: SparkSession, path: str,
@@ -89,6 +113,9 @@ def compact(spark: SparkSession, path: str,
             files_per_partition: int = 1,
             keep_old: bool = True) -> None:
     """↔ MergeTree background merge: rewrite into few large sorted parts.
+
+    The current version is read with its inferred schema, so a table of
+    any shape keeps every column it has.
 
     Publication is a VERSIONED-DIRECTORY + symlink flip (the local-FS
     analog of a table-format manifest commit):
@@ -147,7 +174,7 @@ def compact(spark: SparkSession, path: str,
     real = os.path.realpath(base)
     # snapshot markers BEFORE listing data files — see docstring
     markers = glob.glob(os.path.join(real, "_epoch_*_SUCCESS"))
-    df = spark.read.parquet(real)
+    df = read_table(spark, real, None)
     new = f"{base}.compact-v{n}"
     (_salted_repartition(df, partition_col, sort_cols, files_per_partition)
        .sortWithinPartitions(*sort_cols)

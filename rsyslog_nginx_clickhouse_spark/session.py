@@ -11,7 +11,21 @@ import os
 
 from pyspark.sql import SparkSession
 
-DEFAULT_CPUS = os.environ.get("SPARK_GRAFT_CPUS", "32")
+
+
+def _default_driver_memory() -> str:
+    """Half of physical memory, at most 4 GiB: a local driver shares
+    its host, and the heap must not be promised more than it has."""
+    with open("/proc/meminfo") as fh:
+        total_kb = next(int(line.split()[1]) for line in fh
+                        if line.startswith("MemTotal:"))
+    return f"{max(1, min(4096, total_kb // 2048))}m"
+
+
+#: the cores this process may run on, not the host's count: a local
+#: master wider than that oversubscribes them
+DEFAULT_CPUS = os.environ.get("SPARK_GRAFT_CPUS",
+                              str(len(os.sched_getaffinity(0))))
 
 
 def get_spark(app_name: str = "rsyslog-nginx-clickhouse-spark",
@@ -48,7 +62,9 @@ def get_spark(app_name: str = "rsyslog-nginx-clickhouse-spark",
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.parquet.filterPushdown", "true")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"))
+        .config("spark.driver.memory",
+                os.environ.get("SPARK_GRAFT_DRIVER_MEM")
+                or _default_driver_memory())
         .config("spark.ui.enabled", "false")
         # static conf (settable only at session build): keep the stage
         # ticker off stdout so bench.py's JSON line stays parseable
