@@ -24,7 +24,8 @@ Reference workflow → Engine workflow:
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
+from pyspark.sql import functions as F
 
 from rsyslog_nginx_clickhouse_spark.functions.clickhouse import (
     register_clickhouse_functions,
@@ -58,14 +59,17 @@ class Engine:
 
     def ingest(self, log_path: str, **parse_kwargs) -> int:
         """Batch backfill: parse a (rotated) access log into the table.
-        Returns rows ingested."""
-        typed = ingest_batch(self.spark, log_path, **parse_kwargs).cache()
-        try:
-            n = typed.count()  # materializes the cache the write reuses
-            write_mergetree_like(typed, self.table_root)
-        finally:
-            typed.unpersist()
-        return n
+
+        One pass, one Spark job: the row count is an observed metric of
+        the write itself (``DataFrame.observe``), not a separate count
+        over a cached frame. Returns rows ingested: every input line,
+        malformed ones included (they land in the null ``logdate``
+        partition)."""
+        obs = Observation()
+        typed = ingest_batch(self.spark, log_path, **parse_kwargs)
+        write_mergetree_like(typed.observe(obs, F.count(F.lit(1)).alias("n")),
+                             self.table_root)
+        return obs.get["n"]
 
     def stream(self, log_dir: str, checkpoint: str, **kwargs):
         """Continuous ingest of a log directory (exactly-once epochs)."""

@@ -20,6 +20,11 @@ Spark mapping (SURVEY §1.3):
   row-group min/max stats become selective, so time-range predicates
   skip row groups exactly like the sparse primary index skips marks.
 - ``parquet.block.size``              ↔ index_granularity (skip grain).
+- ``compression=zstd``                ↔ ClickHouse's column compression
+  (``ZSTD`` is one of its ``CODEC``s; the server default is LZ4). Every
+  part is zstd parquet, about two thirds of the bytes snappy takes for
+  the same rows; parts written as snappy by older versions stay
+  readable, and the next ``compact()`` rewrites them as zstd.
 - ``compact()``                       ↔ background merges: micro-batch
   appends create small sorted parts; periodic compaction rewrites each
   partition into few large sorted files.
@@ -47,6 +52,9 @@ from rsyslog_nginx_clickhouse_spark.sources.nginx_log import (
 #: skipping role at parquet's granularity.
 DEFAULT_BLOCK_SIZE = 128 * 1024 * 1024
 
+#: ↔ CODEC(ZSTD): the parquet codec of every part the table gets.
+COMPRESSION = "zstd"
+
 
 def _salted_repartition(df: DataFrame, partition_col: str,
                         sort_cols: tuple[str, ...],
@@ -72,13 +80,16 @@ def write_mergetree_like(df: DataFrame, path: str,
                          sort_cols: tuple[str, ...] = ("logdate", "logdatetime"),
                          mode: str = "append",
                          files_per_partition: int | None = None) -> None:
-    """Write ``df`` as a day-partitioned, time-sorted parquet table."""
+    """Write ``df`` as a day-partitioned, time-sorted, zstd parquet
+    table. The one place the table's file format is decided: ingest,
+    the streaming epoch sink and ``compact()`` all write through it."""
     if files_per_partition:
         df = _salted_repartition(df, partition_col, sort_cols,
                                  files_per_partition)
     (df.sortWithinPartitions(*sort_cols)
        .write.mode(mode)
        .option("parquet.block.size", str(DEFAULT_BLOCK_SIZE))
+       .option("compression", COMPRESSION)
        .partitionBy(partition_col)
        .parquet(path))
 
@@ -176,12 +187,8 @@ def compact(spark: SparkSession, path: str,
     markers = glob.glob(os.path.join(real, "_epoch_*_SUCCESS"))
     df = read_table(spark, real, None)
     new = f"{base}.compact-v{n}"
-    (_salted_repartition(df, partition_col, sort_cols, files_per_partition)
-       .sortWithinPartitions(*sort_cols)
-       .write.mode("overwrite")
-       .option("parquet.block.size", str(DEFAULT_BLOCK_SIZE))
-       .partitionBy(partition_col)
-       .parquet(new))
+    write_mergetree_like(df, new, partition_col, sort_cols, "overwrite",
+                         files_per_partition)
     for marker in markers:
         shutil.copy2(marker, new)
     tmplink = base + ".swap"

@@ -104,10 +104,36 @@ def test_window_funnel_multi_no_strict_order_skips_level0(spark):
     plain = {r["user_id"]: r["funnel_level"] for r in window_funnel(
         ev, conds, 10_000_000).collect()}
     assert fused == {u: (ded[u], plain[u]) for u in ded}
-    # the shuffled pair struct skips non-matching events: the level-0
-    # coalesce only appears under strict_order
-    assert "coalesce" not in multi._jdf.queryExecution() \
-        .analyzed().toString().lower()
+    # the shuffled pair struct skips non-matching events: what
+    # collect_list gathers is a CASE WHEN with no ELSE (null for an
+    # unmatched event type, which collect_list drops), not the
+    # level-0 struct only strict_order needs
+    (pair,) = _collect_list_children(multi)
+    assert pair.getClass().getSimpleName() == "CaseWhen"
+    assert pair.elseValue().isEmpty()
+    (branch,) = _jlist(pair.branches())  # (condition, value)
+    assert branch._2().getClass().getSimpleName() == "CreateNamedStruct"
+
+
+def _jlist(seq):
+    return [seq.apply(i) for i in range(seq.size())]
+
+
+def _collect_list_children(df):
+    """The argument of every ``collect_list`` in ``df``'s analyzed
+    plan."""
+    out = []
+    nodes = [df._jdf.queryExecution().analyzed()]
+    while nodes:
+        node = nodes.pop()
+        nodes.extend(_jlist(node.children()))
+        exprs = _jlist(node.expressions())
+        while exprs:
+            e = exprs.pop()
+            if e.getClass().getSimpleName() == "CollectList":
+                out.append(e.child())
+            exprs.extend(_jlist(e.children()))
+    return out
 
 
 # ------------------------------------------------- grouped rank stats
