@@ -64,256 +64,7 @@ def query(name: str, oracle: str | None = None, doc: str = ""):
 #: window must contain every never-verified query and every query
 #: whose resolved function-source+oracle differs from the tree its
 #: last green row verified, and the remaining slots fill
-#: oldest-verified-first. Round-7 ordering, computed by that tool:
-#: (0) NEW this round: bucketed_build (the fingerprinted bucketed-
-#: table build split out of the join, placed BEFORE the join probe so
-#: the join's driver wall is probe-only), ivf_append_probe (the
-#: append path's first independent oracle — VERDICT r6 item 2), and
-#: quantile_rollup_latency (quantileState/quantileMerge analog),
-#: sequence_match_funnel + sequence_count_chains (ClickHouse
-#: sequenceMatch/sequenceCount analogs — Q7), span_dedup (C4-style
-#: repeated-span removal), multimodal_resize (decode + nearest-
-#: neighbor thumbnail path), topk_rollup_users (topKState/topKMerge
-#: analog), semantic_dedup + streaming_semantic_dedup (SemDeDup over
-#: the persisted IVF index, batch and in-flight), and
-#: streaming_kmv_rollup (streaming uniqState maintenance),
-#: argmax_rollup_latest (argMaxState/argMaxMerge analog),
-#: doc_chunk_windows (context-window chunking), and
-#: bloom_pruned_scan (bloom_filter skip-index analog), and
-#: sequence_packing_plan (next-fit example packing, recursive-CTE
-#: oracle) with packed_sequences (the gather join materializing the
-#: packed examples, every byte under the value gate via md5),
-#: timeseries_gap_fill (WITH FILL STEP analog, collect-free dense
-#: spine), limit_by_recent_events (ClickHouse LIMIT n BY through
-#: the SQL entry's ranked-window rewrite), label_centroids
-#: (integer-exact mean pooling per label), dsir_importance
-#: (DSIR log-likelihood-ratio curation scores),
-#: streaming_quantile_rollup (streaming quantileState via the epoch
-#: writer, pairing streaming_kmv_rollup), and
-#: with_totals_event_counts (CH WITH TOTALS -> GROUPING SETS), and
-#: bpe_train_merges + bpe_tokenize_docs (distributed BPE tokenizer
-#: training with the full training replayed in the oracle, plus the
-#: vocab-lookup apply side);
-#: (1) TEXT-CHANGED since their last row: bucketed_join_revenue (now
-#: probes the pre-built tables) and the whole cosine-ranking family —
-#: knn_{ivf,join_ivf,bruteforce,lsh,label_accuracy},
-#: embedding_neardup_{exact,pairs}, embedding_quantization,
-#: similar_activity_users — whose rounding moved to the tie-exact
-#: floor sequence on BOTH engines (ADVICE r6), plus kmv_rollup_users
-#: (scratch-dir fix);
-#: (2) the 21 r4-row entries that rotated past round 6 — oldest in
-#: the registry;
-#: (3) r5-row entries, alphabetical, filling the remaining slots.
-#:
-#: WINDOW BUDGET, stated for the record: the 30 never-verified + 11
-#: text-changed entries are mandatory, leaving 9 of the driver's 50
-#: slots for the 21 r4 rows — so TWELVE r4 rows
-#: (q18_large_volume_customers, q21_waiting_suppliers,
-#: q2_min_cost_supplier, retention_cohort, status_class_share,
-#: stratified_sample, tfidf_top_terms, token_counts, top_bigrams,
-#: top_users, train_test_split, value_histogram) plus the 11 r5
-#: fillers sit beyond the window this round: the deliberate price of
-#: 30 new operators, not an oversight. They are the FIRST rotation cohort for _FRONTLOAD_R8
-#: (r4 rows before r5 rows), and every one of them passes the
-#: identical in-repo gate (tools/selfcheck.py, same oracle compare
-#: as the driver) at HEAD regardless of window position;
-#: rotationcheck enforces that nothing mandatory was displaced.
-#: Round-8 ordering (VERDICT r7 item 1 — execute the _FRONTLOAD_R8
-#: cohort): the window leads with the round's 15 mandatory entries —
-#: 11 NEW (ngram_lm_perplexity_seeded, final_replacing_read,
-#: final_collapsing_read, doc_chunk_tokens, multimodal_decode_jpeg,
-#: image_hash_dedup, prewhere_format_scan, asof_join_sql,
-#: temperature_mixture, hard_negative_mining,
-#: with_fill_sql_histogram) and 4
-#: TEXT-CHANGED
-#: (sequence_match_funnel + sequence_count_chains: oracles drop '0'
-#: labels per the ClickHouse storage rule; semantic_dedup +
-#: streaming_semantic_dedup: corpus-scaled n_lists in query AND
-#: oracle) — then fills oldest-first: ALL 12 r4 rows
-#: (q18_large_volume_customers .. value_histogram, 3 rounds overdue)
-#: and 23 r5 rows, which covers the full 23-row overdue cohort
-#: VERDICT r7 called the round's only verification debt (the 15
-#: youngest r5 fills q13..q8 rotate to r9 — the price of 11 mandatory
-#: slots, same trade as r7's). rotationcheck enforces the result.
-#: Round-9 ordering: the window leads with the round's 22 NEW entries
-#: (rollup_sql_daily, quantiles_array_sql, with_fill_interpolate,
-#: window_lag_lead_sql, scalar_with_threshold, final_summing_read,
-#: mutation_delete_roundtrip, select_except_modifier, bm25_top_docs,
-#: upsample_epochs, curriculum_schedule, mutation_update_roundtrip,
-#: dict_get_enrichment, group_uniq_array_sql, jsoneachrow_roundtrip,
-#: csvwithnames_roundtrip, cube_sql_status, top_n_sql,
-#: limit_with_ties_sql, hybrid_retrieval, shuffle_shard_plan,
-#: streaming_jsoneachrow_ingest
-#: (bm25_top_docs is also
-#: text-changed by the shared-helper refactor, already in the
-#: mandatory set) —
-#: no text-changed entries this round: the r9 macro/operator edits
-#: touch helpers, not registered function sources or oracle strings,
-#: and rotationcheck verifies that), then fills oldest-first: ALL 23
-#: remaining r5 rows (the _FRONTLOAD_R9 cohort VERDICT r7/round-8
-#: planning called the next rotation debt — q13..q8 plus the
-#: non-TPC-H r5 fills), then 5 r6 rows alphabetically. 36 r6 rows
-#: remain one round overdue — the price of 22 mandatory slots — and
-#: rotate first in r10 (_FRONTLOAD_R10 cohort: daily_unique_users,
-#: decontamination,
-#: dedup_components, dedup_keep_best,
-#: duplicated_ngram_fraction, embedding_norms,
-#: error_rate_daily, event_type_share,
-#: ivf_build, multimodal_decode_audio/png/video, multimodal_frames,
-#: nginx_* , orders_moving_avg, orderstatus_pivot,
-#: purchase_last_view_asof, q12/q9, replacing_upsert_roundtrip,
-#: rollup_customer_balance, running_customer_spend,
-#: skew_salted_event_counts, streaming_* , timeseries_5min_by_type,
-#: top3_parts_per_brand, user_sessions, zorder_pruned_scan).
-#: Round-10 ordering (VERDICT r9 items 1-3 + the standing rotation
-#: contract): the window leads with the round's 8 mandatory entries —
-#: 6 NEW (decontamination_bloom: the m-bounded bloom-prefilter
-#: form of eval-set decontamination;
-#: any_join_sql: GLOBAL/ANY/ALL join modifiers;
-#: array_lambda_sql: lambda-first array functions reordered to
-#: Spark's higher-order builtins;
-#: group_array_sql: deterministic groupArray over a sorted
-#: subquery; sample_rowcount_scan: CH row-count SAMPLE n; dict_get_large:
-#: join-backed dictGet over a table-sized dim) and 2 TEXT-CHANGED
-#: (quantiles_array_sql + group_uniq_array_sql: the round's two
-#: driver-red rows, re-shaped so no top-level ArrayType column reaches
-#: the driver canonicalizer — exploded to (event_type, p, q) rows /
-#: serialized via arrayStringConcat, oracles mirrored) — then fills
-#: oldest-first: ALL 36 r6 rows (the _FRONTLOAD_R10 cohort VERDICT r9
-#: item 2 called one round overdue: daily_unique_users …
-#: zorder_pruned_scan), then 6 r7 rows alphabetically
-#: (argmax_rollup_latest … bucketed_build). The round deliberately
-#: adds only 6 new queries — far under the 17-slot budget — so the
-#: whole overdue cohort rotates; 40 r7 rows remain the oldest outside
-#: the window and lead _FRONTLOAD_R11. rotationcheck enforces the
-#: result.
-#: Round-11 ordering (VERDICT r10 items 1-5, 8 + the standing
-#: rotation contract): the window leads with the round's 10 mandatory
-#: entries — 7 NEW (topk_sql: parametric topK(n)(x)/topKIf
-#: exact-frequency rewrite; any_right_join_sql: ANY RIGHT JOIN … ON
-#: with the left-side mirror dedup; array_sort_group_array_sql: the
-#: arraySort(groupArray(x)) order-imposing composite;
-#: multimodal_decode_jpeg_progressive: real SOF2 multi-scan decode,
-#: spectral selection + successive approximation; weighted_agg_sql:
-#: topKWeighted exact-weighted-frequency + avgWeighted with the CH
-#: NULL contract; if_combinators_sql: uniqExactIf/argMaxIf/argMinIf/
-#: uniqIf/medianIf combinator breadth; delta_sum_sql: the deltaSum
-#: counter aggregate in the sorted-subquery idiom) and 3 TEXT-CHANGED
-#: (decontamination_bloom: the exact-verify join dropped its forced
-#: broadcast hint — AQE owns the strategy in the regime the query
-#: documents, VERDICT r10 item 1; group_array_sql: the rewrite now
-#: STRIPS the subquery's redundant ORDER BY — a global corpus sort
-#: Catalyst keeps because collect_list is order-sensitive; sf1 probe
-#: 40x/10x with it, 2.8x without, values oracle-pinned) — then fills
-#: oldest-first: ALL 40 r7 rows (the _FRONTLOAD_R11 cohort VERDICT
-#: r10 item 2 named: bucketed_join_revenue …
-#: with_totals_event_counts); the window is exactly 10 + 40 with no
-#: r8 fills left. The round adds 7 new queries — still under budget —
-#: so the whole overdue cohort rotates; all 50 r8 rows remain the
-#: oldest outside the window and lead _FRONTLOAD_R12.
-#: rotationcheck enforces the result.
-#: Round-12 ordering (VERDICT r11 items 1, 5, 6, 7 + the standing
-#: rotation contract): the window led with the round's 17 mandatory
-#: entries — 15 NEW (multimodal_decode_jpeg_420: real 4:2:0
-#: chroma-subsampled color JPEG decode through the interleaved-MCU
-#: path; funnel_strict_modes: windowFunnel strict_order/strict_dedup/
-#: strict_increase as the exact CH single-slot fold under recursive-
-#: CTE fold oracles; delta_sum_timestamp_sql: the self-ordering
-#: deltaSumTimestamp counter aggregate; topk_weighted_if_sql: the
-#: topKWeightedIf combinator under a weighted-rank oracle;
-#: multimodal_decode_video_420: y4m's DEFAULT C420 colorspace through
-#: the subsampled-plane path; multimodal_decode_audio_stereo8:
-#: stereo + 8-bit PCM WAV with floor-mean downmix; stat_agg_sql:
-#: covarPop/covarSamp/corr/stddevPop/varSamp renames;
-#: bit_uniq_upto_sql: groupBit* + uniqUpTo(N) + sumCount;
-#: sum_map_sql: sumMap/minMap/maxMap per-key folds;
-#: array_diff_cumsum_sql: arrayDifference/arrayCumSum over the
-#: sorted-groupArray composite; group_array_moving_sql:
-#: groupArrayMovingSum/Avg in the sorted-subquery idiom;
-#: sequence_match_timed: sequenceMatch (?t op N) time constraints
-#: via the Arrow DP matcher; quantile_exact_weighted_sql:
-#: quantileExactWeighted/medianExactWeighted crossing-scan folds)
-#: and 2
-#: TEXT-CHANGED (delta_sum_sql: its doc no longer claims
-#: deltaSumTimestamp refuses; streaming_semantic_dedup: the inline
-#: embeddings stream reads via the shape-agnostic _stream_table) —
-#: then fills oldest-first: 33 of the
-#: 49 r8 rows (the _FRONTLOAD_R12 cohort VERDICT r11 item 2 called
-#: due) alphabetically (ADVICE r12 fixed this header's arithmetic:
-#: 15 + 2 mandatory, 33 fills). The 16 remaining r8 rows
-#: (q2_min_cost_supplier, retention_cohort, semantic_dedup,
-#: sequence_count_chains, sequence_match_funnel,
-#: status_class_share, stratified_sample, streaming_semantic_dedup,
-#: temperature_mixture, tfidf_top_terms, token_counts, top_bigrams,
-#: top_users, train_test_split, value_histogram,
-#: with_fill_sql_histogram, minus streaming_semantic_dedup which is
-#: text-changed and therefore IN the window) are the price of the 17
-#: mandatory slots —
-#: they stay the oldest outside the window and lead _FRONTLOAD_R13.
-#: rotationcheck enforces the result.
-#: Round-13 ordering (VERDICT r12 items 2, 3, 5, 6, 7 + the standing
-#: rotation contract): the window leads with the round's 16 mandatory
-#: entries — 14 NEW (window_funnel_sql: the verbatim
-#: windowFunnel(W[, mode])(ts, c1..cN) spelling as one aggregate()
-#: slot fold; sequence_match_count_sql: verbatim sequenceMatch /
-#: sequenceCount incl. the (?t<=N) NFA fold; with_fill_desc_interpolate:
-#: ORDER BY ... DESC WITH FILL + general INTERPOLATE (col AS expr)
-#: chained previous-row evaluation; state_merge_sql: the
-#: uniqState/uniqMerge + quantileState/quantileMerge
-#: materialized-view idiom; histogram_sql: histogram(N)(x) as
-#: deterministic equal-width bins; streaming_window_funnel_sql: the
-#: same verbatim text over a STREAMING view — the rewrite's
-#: collect_list state is a standard streaming aggregation;
-#: additive_state_merge_sql: sum/count/min/max/avgState + Merge, the
-#: SummingMergeTree MV idiom; with_fill_multikey: ORDER BY series, t
-#: WITH FILL — per-prefix grids, partitioned interpolation;
-#: argmax_state_linreg_sql: argMax/argMinState + Merge and
-#: simpleLinearRegression; topk_state_merge_sql: the truncated
-#: heavy-hitters states, replay-oracled; array_reduce_sql:
-#: arrayReduce('agg', arr) deterministic folds;
-#: entropy_shape_stats_sql: entropy + skew/kurt Pop/Samp;
-#: interval_length_sum_sql: union-of-segments coverage;
-#: sequence_next_node_sql: next-event attribution) and 2
-#: TEXT-CHANGED
-#: (delta_sum_timestamp_sql + sum_map_sql: docs reworded per ADVICE
-#: r12 — the deltaSumTimestamp determinization claim and the sumMap
-#: zero-drop deviation) — then fills oldest-first: ALL 15 r8 rows
-#: still outside the window (the _FRONTLOAD_R13 cohort VERDICT r12
-#: item 2 named: q2_min_cost_supplier .. with_fill_sql_histogram)
-#: and 19 r9 rows alphabetically. 31 r9 rows remain the oldest
-#: outside the window and lead _FRONTLOAD_R14 — the price of 16
-#: mandatory slots. rotationcheck enforces the result.
-#: Round-14 ordering (VERDICT r13 item 1 — execute the _FRONTLOAD_R14
-#: rotation): 13 NEW rows (group_array_bounded_sql +
-#: estimator_alias_sql: driver-oracle rows for the two post-bench r13
-#: rewrite commits — VERDICT item 2; any_last_sql: the
-#: anyLast/anyIf/anyLastIf ReplacingMergeTree idiom — item 3;
-#: materialized_view_sql + streaming_materialized_view: the CREATE
-#: MATERIALIZED VIEW DDL analog, batch inserts and the streaming
-#: insert-trigger maintainer — item 4; exact_substring_dedup: the
-#: suffix-adjacency ExactSubstr analog — item 5;
-#: nonneg_derivative_sql: the nonNegativeDerivative window fn +
-#: boundingRatio aggregate; assoc_stats_sql: the cramersV/
-#: theilsU/contingency categorical-association family;
-#: rank_corr_sql: exact Spearman rankCorr;
-#: edit_distance_neardup: PassJoin banded levenshtein pairs;
-#: lttb_downsample_sql: the LTTB plot downsampler;
-#: two_sample_tests_sql: studentTTest/welchTTest/mannWhitneyUTest;
-#: sparkbar_map_sql: sparkbar + sumMapFiltered +
-#: quantileDeterministic — all
-#: mid-round additions) and 9 TEXT-CHANGED
-#: (entropy_shape_stats_sql: the
-#: ADVICE r13 skewSamp/kurtSamp factor fix — ((n-1)/n)^1.5 and ^2;
-#: sequence_next_node_sql: last_match now anchors the follower-less
-#: tail chain; window_funnel_sql + sequence_match_count_sql: the
-#: duplicate-condition refusal contract in the doc; stat_agg_sql +
-#: delta_sum_sql + group_uniq_array_sql + quantiles_array_sql:
-#: rotated by the NEW helper-coverage gate — their tokens sit on
-#: rewrite lines the round-14 edits touched) — then fills
-#: oldest-first: ALL 29 r9 rows still outside the window (the
-#: _FRONTLOAD_R14 cohort VERDICT r13 item 1 named) and 0 r10 rows. The remaining 48 r10 rows are the oldest outside
-#: the window and lead _FRONTLOAD_R15. rotationcheck enforces the
-#: result (including the new helper-coverage mode).
+#: oldest-verified-first.
 #: Round-15 ordering (VERDICT r14 items 1, 2, 6 + the standing
 #: rotation contract): the window leads with the round's 3 mandatory
 #: TEXT-CHANGED entries — funnel_strict_modes (the three strict-mode
@@ -388,495 +139,6 @@ _FRONTLOAD_R15 = [
     "streaming_user_counts",
     "streaming_view_purchase_join",
     "timeseries_5min_by_type",
-]
-
-_FRONTLOAD_R14 = [
-    # new this round — never driver-verified
-    "group_array_bounded_sql",   # NEW: bounded groupArray(N)(x)
-    "estimator_alias_sql",       # NEW: uniqTheta/median*/Timing
-    "any_last_sql",              # NEW: anyLast/anyIf/anyLastIf
-    "materialized_view_sql",     # NEW: CREATE MATERIALIZED VIEW
-    "streaming_materialized_view",  # NEW: the MV streaming maintainer
-    "exact_substring_dedup",     # NEW: suffix-adjacency ExactSubstr
-    "nonneg_derivative_sql",     # NEW: nonNegativeDerivative+boundingRatio
-    "assoc_stats_sql",           # NEW: cramersV/theilsU/contingency
-    "rank_corr_sql",             # NEW: exact Spearman rankCorr
-    "edit_distance_neardup",     # NEW: PassJoin levenshtein pairs
-    "lttb_downsample_sql",       # NEW: LTTB downsampler
-    "two_sample_tests_sql",      # NEW: studentTTest/welch/mannWhitneyU
-    "sparkbar_map_sql",          # NEW: sparkbar/sumMapFiltered/qDet
-    "sum_map_sql",               # helper-coverage: map_aggs edit
-    # text-changed this round
-    "entropy_shape_stats_sql",   # ADVICE r13: Samp factor fix
-    "sequence_next_node_sql",    # ADVICE r13: last_match tail anchor
-    "window_funnel_sql",         # duplicate-condition contract doc
-    "sequence_match_count_sql",  # duplicate-condition contract doc
-    "stat_agg_sql",              # helper-coverage: varPop/varSamp
-    "delta_sum_sql",             # helper-coverage: deltaSum token
-    "group_uniq_array_sql",      # helper-coverage: groupUniqArray
-    "quantiles_array_sql",       # helper-coverage: quantilesExact
-    "weighted_agg_sql",          # helper-coverage: avgWeighted region
-    # text-changed by the round-14 OPTIMIZATION pass (materialization
-    # boundary before the final global sort — the range exchange's
-    # sampling pass re-executed the expensive child; results
-    # oracle-identical, plans in plans/r14/): these two displace the
-    # two alphabetically-last r9 fills (upsample_epochs,
-    # user_event_gaps — same last-verified round as every other fill,
-    # so oldest-first ordering is preserved)
-    "span_dedup",                # r14 opt: pre-sort exchange
-    "curation_pipeline",         # r14 opt: pre-sort exchange
-    # the 27 r9 rows — oldest in the registry, alphabetical
-    "q16_supplier_part_counts",
-    "q17_small_qty_revenue",
-    "q19_disjunctive_revenue",
-    "q1_pricing_summary",
-    "q20_promo_suppliers",
-    "q22_idle_customers",
-    "q3_shipping_priority",
-    "q4_order_priority",
-    "q5_regional_revenue",
-    "q6_forecast_revenue",
-    "q7_volume_shipping",
-    "q8_market_share",
-    "quality_scores",
-    "repeat_users_intersect",
-    "repetition_stats",
-    "revenue_cube",
-    "rollup_sql_daily",
-    "scalar_with_threshold",
-    "select_except_modifier",
-    "shuffle_shard_plan",
-    "source_overlap",
-    "streaming_jsoneachrow_ingest",
-    "text_stats",
-    "token_shard_plan",
-    "top_n_sql",
-]
-
-_FRONTLOAD_R13 = [
-    # new this round — never driver-verified
-    "window_funnel_sql",           # NEW: windowFunnel SQL spelling
-    "sequence_match_count_sql",    # NEW: sequenceMatch/Count SQL
-    "with_fill_desc_interpolate",  # NEW: DESC fill + expr interp
-    "state_merge_sql",             # NEW: -State/-Merge spellings
-    "histogram_sql",               # NEW: histogram(N)(x)
-    "streaming_window_funnel_sql",  # NEW: streaming funnel SQL text
-    "additive_state_merge_sql",    # NEW: sum/count/avg State+Merge
-    "with_fill_multikey",          # NEW: per-series WITH FILL
-    "argmax_state_linreg_sql",     # NEW: argMax states + linreg
-    "topk_state_merge_sql",        # NEW: topK states, replay oracle
-    "array_reduce_sql",            # NEW: arrayReduce folds
-    "entropy_shape_stats_sql",     # NEW: entropy + skew/kurt
-    "interval_length_sum_sql",     # NEW: union-of-segments
-    "sequence_next_node_sql",      # NEW: next-event attribution
-    # text-changed this round — ADVICE r12 doc rewordings
-    "delta_sum_timestamp_sql",
-    "sum_map_sql",
-    # the 15 r8 rows still outside the window — oldest in the
-    # registry (the standing-contract cohort), alphabetical
-    "q2_min_cost_supplier",
-    "retention_cohort",
-    "semantic_dedup",
-    "sequence_count_chains",
-    "sequence_match_funnel",
-    "status_class_share",
-    "stratified_sample",
-    "temperature_mixture",
-    "tfidf_top_terms",
-    "token_counts",
-    "top_bigrams",
-    "top_users",
-    "train_test_split",
-    "value_histogram",
-    "with_fill_sql_histogram",
-    # r9 rows, alphabetical fill (19 of 50)
-    "approx_daily_users",
-    "approx_latency_quantiles",
-    "bm25_top_docs",
-    "bot_traffic_share",
-    "corpus_selection",
-    "csvwithnames_roundtrip",
-    "cube_sql_status",
-    "curriculum_schedule",
-    "customers_without_orders",
-    "dict_get_enrichment",
-    "final_summing_read",
-    "hybrid_retrieval",
-    "jsoneachrow_roundtrip",
-    "limit_with_ties_sql",
-    "mutation_delete_roundtrip",
-    "mutation_update_roundtrip",
-    "q13_order_count_distribution",
-    "q14_promo_revenue",
-    "q15_top_supplier",
-]
-
-_FRONTLOAD_R12 = [
-    # new this round — never driver-verified
-    "multimodal_decode_jpeg_420",  # NEW: 4:2:0 color JPEG decode
-    "funnel_strict_modes",         # NEW: windowFunnel strict modes
-    "delta_sum_timestamp_sql",     # NEW: deltaSumTimestamp
-    "topk_weighted_if_sql",        # NEW: topKWeightedIf combinator
-    "multimodal_decode_video_420",   # NEW: C420 y4m decode
-    "multimodal_decode_audio_stereo8",  # NEW: stereo/8-bit WAV
-    "stat_agg_sql",                # NEW: covar/corr/stddev/var
-    "bit_uniq_upto_sql",           # NEW: groupBit*/uniqUpTo/sumCount
-    "sum_map_sql",                 # NEW: sumMap/minMap/maxMap
-    "array_diff_cumsum_sql",       # NEW: arrayDifference/CumSum
-    "group_array_moving_sql",      # NEW: groupArrayMovingSum/Avg
-    "sequence_match_timed",        # NEW: sequenceMatch (?t op N)
-    "quantile_exact_weighted_sql",  # NEW: quantileExactWeighted
-    "retention_sql",               # NEW: retention() SQL spelling
-    "streaming_window_funnel",     # NEW: stateful streaming funnel
-    # text-changed this round — doc no longer claims the refusal /
-    # the inline embeddings stream reads via _stream_table
-    "delta_sum_sql",
-    "streaming_semantic_dedup",
-    # 33 of the 49 r8 rows — oldest in the registry (due per the
-    # standing contract), alphabetical
-    "asof_join_sql",
-    "big_spender_customers",
-    "collapsing_state_roundtrip",
-    "curation_pipeline",
-    "dedup_exact",
-    "dedup_minhash_lsh",
-    "dedup_ngram_jaccard",
-    "dedup_simhash",
-    "doc_chunk_tokens",
-    "doc_fingerprints",
-    "domain_mixture",
-    "events_in_sessions_rangejoin",
-    "final_collapsing_read",
-    "final_replacing_read",
-    "funnel_view_click_purchase",
-    "grafana_adhoc_filters",
-    "grafana_from_to_macros",
-    "grafana_natural_timeseries",
-    "grafana_timeseries",
-    "hard_negative_mining",
-    "image_hash_dedup",
-    "lang_detect",
-    "latency_quantiles",
-    "multimodal_decode_bmp",
-    "multimodal_decode_jpeg",
-    "multimodal_features",
-    "ngram_lm_perplexity_seeded",
-    "parts_above_brand_avg",
-    "pii_redaction",
-    "q10_returned_items",
-    "q11_important_parts",
-    "q18_large_volume_customers",
-    "q21_waiting_suppliers",
-]
-
-_FRONTLOAD_R11 = [
-    # new this round — never driver-verified
-    "topk_sql",                   # NEW: topK(n)(x)/topKIf combinator
-    "any_right_join_sql",         # NEW: ANY RIGHT JOIN … ON mirror
-    "array_sort_group_array_sql",  # NEW: arraySort(groupArray(x))
-    "multimodal_decode_jpeg_progressive",  # NEW: SOF2 decode
-    "weighted_agg_sql",           # NEW: topKWeighted + avgWeighted
-    "if_combinators_sql",         # NEW: uniqExactIf/argMaxIf breadth
-    "delta_sum_sql",              # NEW: deltaSum counter aggregate
-    # text-changed this round — the verify join lost its forced hint
-    # / the redundant inner ORDER BY is now stripped (plan change,
-    # values oracle-pinned) / the query text now carries a SETTINGS
-    # clause exercising the r11 strip
-    "decontamination_bloom",
-    "group_array_sql",
-    "prewhere_format_scan",
-    # the 40 r7 rows — oldest in the registry (one round overdue)
-    "bucketed_join_revenue",
-    "doc_chunk_windows",
-    "dsir_importance",
-    "embedding_neardup_exact",
-    "embedding_neardup_pairs",
-    "embedding_quantization",
-    "gopher_quality_filter",
-    "grafana_columns_macro",
-    "grafana_conditional_filters",
-    "grafana_per_second_columns_macro",
-    "grafana_per_second_macro",
-    "grafana_rate_columns_macro",
-    "grafana_rate_macro",
-    "ivf_append_probe",
-    "kmv_rollup_users",
-    "knn_bruteforce",
-    "knn_ivf",
-    "knn_join_ivf",
-    "knn_label_accuracy",
-    "knn_lsh",
-    "knn_pq_adc",
-    "label_centroids",
-    "limit_by_recent_events",
-    "mixture_rebalance_plan",
-    "multimodal_resize",
-    "ngram_lm_perplexity",
-    "packed_sequences",
-    "pq_encode",
-    "props_json_stats",
-    "quantile_rollup_latency",
-    "sample_clause_scan",
-    "sequence_packing_plan",
-    "similar_activity_users",
-    "span_dedup",
-    "streaming_kmv_rollup",
-    "streaming_quantile_rollup",
-    "timeseries_gap_fill",
-    "topk_rollup_users",
-    "ttl_rollup_compaction",
-    "with_totals_event_counts",
-]
-
-_FRONTLOAD_R10 = [
-    # new this round — never driver-verified
-    "group_array_sql",           # NEW: deterministic groupArray
-    "sample_rowcount_scan",      # NEW: row-count SAMPLE n form
-    "dict_get_large",            # NEW: join-backed large dictGet
-    "any_join_sql",              # NEW: GLOBAL/ANY/ALL join modifiers
-    "array_lambda_sql",          # NEW: CH lambda-first array fns
-    "decontamination_bloom",     # NEW: bloom-prefiltered decontam
-    # text-changed this round — the two r9 driver-red rows, re-shaped
-    "quantiles_array_sql",       # exploded to scalar rows
-    "group_uniq_array_sql",      # set serialized to a ','-string
-    # the 36 r6 rows — oldest in the registry (one round overdue)
-    "daily_unique_users",
-    "decontamination",
-    "dedup_components",
-    "dedup_keep_best",
-    "duplicated_ngram_fraction",
-    "embedding_norms",
-    "error_rate_daily",
-    "event_type_share",
-    "ivf_build",
-    "multimodal_decode_audio",
-    "multimodal_decode_png",
-    "multimodal_decode_video",
-    "multimodal_frames",
-    "nginx_dead_letters",
-    "nginx_pipeline",
-    "nginx_pipeline_rulebase",
-    "nginx_table_roundtrip",
-    "orders_moving_avg",
-    "orderstatus_pivot",
-    "purchase_last_view_asof",
-    "q12_priority_shipping",
-    "q9_product_profit",
-    "replacing_upsert_roundtrip",
-    "rollup_customer_balance",
-    "running_customer_spend",
-    "skew_salted_event_counts",
-    "streaming_dedup",
-    "streaming_hourly_counts",
-    "streaming_sessions",
-    "streaming_summed_rollup",
-    "streaming_user_counts",
-    "streaming_view_purchase_join",
-    "timeseries_5min_by_type",
-    "top3_parts_per_brand",
-    "user_sessions",
-    "zorder_pruned_scan",
-    # r7 rows, alphabetical fill (6 of 46)
-    "argmax_rollup_latest",
-    "array_join_token_counts",
-    "bloom_pruned_scan",
-    "bpe_tokenize_docs",
-    "bpe_train_merges",
-    "bucketed_build",
-]
-
-_FRONTLOAD_R9 = [
-    # new this round — never driver-verified
-    "rollup_sql_daily",          # NEW: GROUP BY ... WITH ROLLUP text
-    "quantiles_array_sql",       # NEW: quantilesExact(..)(x) combinator
-    "with_fill_interpolate",     # NEW: WITH FILL ... INTERPOLATE LOCF
-    "window_lag_lead_sql",       # NEW: lagInFrame/leadInFrame surface
-    "scalar_with_threshold",     # NEW: CH scalar WITH constants
-    "final_summing_read",        # NEW: FROM t FINAL (summing)
-    "mutation_delete_roundtrip",  # NEW: ALTER TABLE DELETE analog
-    "select_except_modifier",    # NEW: SELECT * EXCEPT star modifier
-    "bm25_top_docs",             # NEW: BM25 lexical retrieval
-    "upsample_epochs",           # NEW: per-source epoch replication
-    "curriculum_schedule",       # NEW: interleaved curriculum shards
-    "mutation_update_roundtrip",  # NEW: ALTER TABLE UPDATE analog
-    "dict_get_enrichment",       # NEW: CH dictGet dictionary surface
-    "group_uniq_array_sql",      # NEW: groupUniqArray aggregate
-    "jsoneachrow_roundtrip",     # NEW: JSONEachRow source round-trip
-    "csvwithnames_roundtrip",    # NEW: CSVWithNames source round-trip
-    "cube_sql_status",           # NEW: GROUP BY ... WITH CUBE text
-    "top_n_sql",                 # NEW: SELECT TOP n synonym
-    "limit_with_ties_sql",       # NEW: LIMIT n WITH TIES rank form
-    "hybrid_retrieval",          # NEW: BM25 recall + dense rerank
-    "shuffle_shard_plan",        # NEW: seeded global shuffle + shards
-    "streaming_jsoneachrow_ingest",  # NEW: streaming format-source run
-    # the 23 remaining r5 rows — oldest in the registry (4 rounds)
-    "q13_order_count_distribution",
-    "q14_promo_revenue",
-    "q15_top_supplier",
-    "q16_supplier_part_counts",
-    "q17_small_qty_revenue",
-    "q19_disjunctive_revenue",
-    "q1_pricing_summary",
-    "q20_promo_suppliers",
-    "q22_idle_customers",
-    "q3_shipping_priority",
-    "q4_order_priority",
-    "q5_regional_revenue",
-    "q6_forecast_revenue",
-    "q7_volume_shipping",
-    "q8_market_share",
-    "quality_scores",
-    "repeat_users_intersect",
-    "repetition_stats",
-    "revenue_cube",
-    "source_overlap",
-    "text_stats",
-    "token_shard_plan",
-    "user_event_gaps",
-    # r6 rows, alphabetical fill (16 of 41)
-    "approx_daily_users",
-    "approx_latency_quantiles",
-    "bot_traffic_share",
-    "corpus_selection",
-    "customers_without_orders",
-]
-
-_FRONTLOAD_R8 = [
-    # new/text-changed this round — never/no-longer driver-verified
-    # (names are spliced in here as they land, evicting tail fills)
-    "sequence_match_funnel",    # oracle now drops '0' labels (ADVICE)
-    "sequence_count_chains",    # same storage-rule filter
-    "semantic_dedup",           # n_lists now scales max(16, ceil(√n))
-    "streaming_semantic_dedup",  # base index scales the same way
-    "ngram_lm_perplexity_seeded",  # NEW: broadcast-weights CCNet form
-    "final_replacing_read",     # NEW: FROM t FINAL (replacing)
-    "final_collapsing_read",    # NEW: FROM t FINAL (collapsing)
-    "doc_chunk_tokens",         # NEW: token-boundary window chunking
-    "multimodal_decode_jpeg",   # NEW: dependency-free baseline JPEG
-    "image_hash_dedup",         # NEW: perceptual image near-dup pairs
-    "prewhere_format_scan",     # NEW: CH PREWHERE + FORMAT surface
-    "asof_join_sql",            # NEW: CH ASOF JOIN SQL surface
-    "temperature_mixture",      # NEW: mT5 alpha-temperature weights
-    "hard_negative_mining",     # NEW: filtered-kNN contrastive mining
-    "with_fill_sql_histogram",  # NEW: ORDER BY ... WITH FILL surface
-    # the 12 r4 rows — oldest in the registry (3 rounds overdue)
-    "q18_large_volume_customers",
-    "q21_waiting_suppliers",
-    "q2_min_cost_supplier",
-    "retention_cohort",
-    "status_class_share",
-    "stratified_sample",
-    "tfidf_top_terms",
-    "token_counts",
-    "top_bigrams",
-    "top_users",
-    "train_test_split",
-    "value_histogram",
-    # r5 rows, oldest-first fill (alphabetical within the round)
-    "big_spender_customers",
-    "collapsing_state_roundtrip",
-    "curation_pipeline",
-    "dedup_exact",
-    "dedup_minhash_lsh",
-    "dedup_ngram_jaccard",
-    "dedup_simhash",
-    "doc_fingerprints",
-    "domain_mixture",
-    "events_in_sessions_rangejoin",
-    "funnel_view_click_purchase",
-    "grafana_adhoc_filters",
-    "grafana_from_to_macros",
-    "grafana_natural_timeseries",
-    "grafana_timeseries",
-    "lang_detect",
-    "latency_quantiles",
-    "multimodal_decode_bmp",
-    "multimodal_features",
-    "parts_above_brand_avg",
-    "pii_redaction",
-    "q10_returned_items",
-    "q11_important_parts",
-    "q13_order_count_distribution",
-]
-
-_FRONTLOAD_R7 = [
-    # (0) new this round — never driver-verified
-    "bucketed_build",
-    "ivf_append_probe",
-    "quantile_rollup_latency",
-    "sequence_match_funnel",
-    "span_dedup",
-    "sequence_count_chains",
-    "multimodal_resize",
-    "topk_rollup_users",
-    "semantic_dedup",
-    "streaming_semantic_dedup",
-    "streaming_kmv_rollup",
-    "argmax_rollup_latest",
-    "doc_chunk_windows",
-    "bloom_pruned_scan",
-    "sequence_packing_plan",
-    "packed_sequences",
-    "timeseries_gap_fill",
-    "limit_by_recent_events",
-    "label_centroids",
-    "dsir_importance",
-    "streaming_quantile_rollup",
-    "with_totals_event_counts",
-    "bpe_train_merges",
-    "bpe_tokenize_docs",
-    "ngram_lm_perplexity",
-    "sample_clause_scan",
-    "ttl_rollup_compaction",
-    "pq_encode",
-    "knn_pq_adc",
-    "array_join_token_counts",
-    # (1) text-changed since their last green driver row
-    "bucketed_join_revenue",
-    "knn_ivf",
-    "knn_join_ivf",
-    "knn_bruteforce",
-    "knn_lsh",
-    "knn_label_accuracy",
-    "embedding_neardup_exact",
-    "embedding_neardup_pairs",
-    "embedding_quantization",
-    "similar_activity_users",
-    "kmv_rollup_users",
-    # (2) r4 rows — rotated past round 6, oldest in the registry
-    "gopher_quality_filter",
-    "grafana_columns_macro",
-    "grafana_conditional_filters",
-    "grafana_per_second_columns_macro",
-    "grafana_per_second_macro",
-    "grafana_rate_columns_macro",
-    "grafana_rate_macro",
-    "mixture_rebalance_plan",
-    "props_json_stats",
-    "q18_large_volume_customers",
-    "q21_waiting_suppliers",
-    "q2_min_cost_supplier",
-    "retention_cohort",
-    "status_class_share",
-    "stratified_sample",
-    "tfidf_top_terms",
-    "token_counts",
-    "top_bigrams",
-    "top_users",
-    "train_test_split",
-    "value_histogram",
-    # (3) r5 rows, alphabetical
-    "big_spender_customers",
-    "collapsing_state_roundtrip",
-    "curation_pipeline",
-    "dedup_exact",
-    "dedup_minhash_lsh",
-    "dedup_ngram_jaccard",
-    "dedup_simhash",
-    "doc_fingerprints",
-    "domain_mixture",
-    "events_in_sessions_rangejoin",
-    "funnel_view_click_purchase",
 ]
 
 

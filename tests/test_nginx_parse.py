@@ -7,9 +7,12 @@ import datetime
 from rsyslog_nginx_clickhouse_spark.sources.nginx_log import (
     NGINX_TABLE_SCHEMA,
     dead_letters,
+    ingest_batch,
     parse_lines,
+    read_access_log,
     to_typed_table,
 )
+from rsyslog_nginx_clickhouse_spark.sources.rulebase import load_rulebase
 
 GOLDEN = ('127.0.0.1 - - [06/Apr/2020:09:54:48 -0400] "GET / HTTP/1.1" '
           '200 612 "-" "curl/7.29.0" "-"')
@@ -86,3 +89,49 @@ def test_unknown_month_yields_null_date(spark):
     line = GOLDEN.replace("Apr", "Foo")
     typed = to_typed_table(_parse(spark, line)).collect()[0]
     assert typed["logdate"] is None and typed["logdatetime"] is None
+
+
+# nginx.rule:3 as a liblognorm rule, the same 16 fields as NGINX_LINE_REGEX
+NGINX_RULE = (
+    'rule=:%clientip:word% %ident:word% %auth:word% '
+    '[%day:char-to:/%/%month:char-to:/%/%year:number%:%rtime:word% '
+    '%tz:char-to:]%] "%verb:word% %request:word% HTTP/%httpversion:float%" '
+    '%response:number% %bytes:number% "%referrer:char-to:"%" '
+    '"%agent:char-to:"%"%blob:rest%\n')
+
+
+def _seq(s):
+    return [s.apply(i) for i in range(s.size())]
+
+
+def _regex_runs_per_row(df) -> int:
+    """RegExpReplace nodes the executed plan evaluates per row.
+
+    A scan node is skipped: its DataFilters (a filter pushed into the
+    text scan) only prune files, the Filter above it evaluates them.
+    """
+    def in_expr(e):
+        return ((e.getClass().getSimpleName() == "RegExpReplace")
+                + sum(in_expr(c) for c in _seq(e.children())))
+
+    def in_plan(p):
+        own = 0 if p.getClass().getSimpleName() == "FileSourceScanExec" \
+            else sum(in_expr(e) for e in _seq(p.expressions()))
+        return own + sum(in_plan(c) for c in _seq(p.children()))
+
+    return in_plan(df._jdf.queryExecution().executedPlan())
+
+
+def test_rule_regex_runs_once_per_line(spark, tmp_path):
+    log = tmp_path / "access.log"
+    log.write_text(GOLDEN + "\nnot an access log line\n")
+    rule_file = tmp_path / "nginx.rule"
+    rule_file.write_text("version=2\n" + NGINX_RULE)
+    raw = read_access_log(spark, str(log))
+    rule = load_rulebase(str(rule_file))[0]
+    assert _regex_runs_per_row(ingest_batch(spark, str(log))) == 1
+    assert _regex_runs_per_row(parse_lines(raw, rule=rule)) == 1
+    assert _regex_runs_per_row(dead_letters(parse_lines(raw))) == 1
+    # the loaded rule parses like the built-in one
+    assert parse_lines(raw, rule=rule).collect() == \
+        parse_lines(raw).collect()

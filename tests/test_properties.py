@@ -3,10 +3,16 @@ invariants that goldens can't cover exhaustively."""
 
 from __future__ import annotations
 
-import hypothesis.strategies as st
-from hypothesis import HealthCheck, given, settings
+import re
 
-from rsyslog_nginx_clickhouse_spark.sources.nginx_log import parse_lines
+import hypothesis.strategies as st
+from hypothesis import HealthCheck, example, given, settings
+
+from rsyslog_nginx_clickhouse_spark.sources.nginx_log import (
+    NGINX_LINE_REGEX,
+    PARSED_FIELDS,
+    parse_lines,
+)
 
 # Field alphabets mirror what the regex tokens accept: word → \S+,
 # char-to:" → [^"]*, etc. Rendering from structured values and parsing
@@ -48,6 +54,47 @@ def test_parse_roundtrip_any_field_values(spark, clientip, auth, verb,
     assert row["bytes"] == str(nbytes)
     assert row["referrer"] == referrer
     assert row["agent"] == agent
+
+
+_MONTH = st.sampled_from(["Jan", "Feb", "Jun", "Dec", "Xyz", ""])
+_rendered = st.builds(
+    lambda ip, auth, mon, verb, req, status, nbytes, ref, agent, blob: (
+        f'{ip} - {auth} [06/{mon}/2020:09:54:48 -0400] '
+        f'"{verb} {req} HTTP/1.1" {status} {nbytes} "{ref}" "{agent}"{blob}'),
+    _word, _word, _MONTH, _word, _word,
+    st.integers(0, 10**20), st.integers(0, 10**20),
+    _quoted, _quoted, _quoted)
+# valid lines, lines carrying the \x01 capture separator, truncated lines
+# and free text (which covers the empty line)
+_line = st.one_of(
+    _rendered,
+    st.tuples(_rendered, st.integers(0, 200)).map(
+        lambda t: t[0][:t[1]] + "\x01" + t[0][t[1]:]),
+    st.tuples(_rendered, st.integers(0, 200)).map(lambda t: t[0][:t[1]]),
+    st.text(alphabet=st.sampled_from(" x1[]/:\"\x01"), max_size=40))
+
+
+@settings(max_examples=25, deadline=None,
+          suppress_health_check=[HealthCheck.function_scoped_fixture])
+@given(lines=st.lists(_line, min_size=1, max_size=20))
+@example(lines=["", "\x01" * 15, "a\x01" * 15 + "a"])
+def test_parse_matches_per_field_python_regex(spark, lines):
+    """parse_lines equals applying NGINX_LINE_REGEX with Python's re, one
+    field at a time; a line carrying the \x01 capture separator is
+    dead-lettered whether or not the rule matches it."""
+    rx = re.compile(NGINX_LINE_REGEX)
+    parsed = parse_lines(
+        spark.createDataFrame([(x,) for x in lines], "value string"))
+    assert parsed.columns == ["message", "_parse_ok", *PARSED_FIELDS]
+    rows = parsed.collect()
+    assert sorted(r["message"] for r in rows) == sorted(lines)
+    for row in rows:
+        line = row["message"]
+        m = rx.match(line)
+        ok = m is not None and "\x01" not in line
+        assert row["_parse_ok"] is ok, line
+        for i, name in enumerate(PARSED_FIELDS):
+            assert row[name] == (m.group(i + 1) if ok else None), (line, name)
 
 
 def test_minhash_signature_is_order_and_dup_invariant(spark):
