@@ -70,9 +70,9 @@ def query(name: str, oracle: str | None = None, doc: str = ""):
 #: TEXT-CHANGED entries — funnel_strict_modes (the three strict-mode
 #: folds now run from ONE collect_list shuffle via
 #: operators/funnel.window_funnel_multi instead of three shuffles +
-#: two joins — VERDICT item 1; results oracle-identical, plans in
-#: plans/r15/) and rank_corr_sql + two_sample_tests_sql (the
-#: round-15 grouped-rank-stat window rewrite —
+#: two joins — VERDICT item 1; results oracle-identical, the
+#: before/after plans are not kept) and rank_corr_sql +
+#: two_sample_tests_sql (the round-15 grouped-rank-stat window rewrite —
 #: _rewrite_grouped_rank_stats, VERDICT item 2 — replans their
 #: rankCorr / mannWhitneyUTest calls, their docs say so now, and
 #: they are also the exercising rows for the touched helper tokens)

@@ -6,13 +6,16 @@ from __future__ import annotations
 import datetime
 import os
 
+import pytest
 from pyspark.sql import functions as F
 
+from rsyslog_nginx_clickhouse_spark.engine import Engine
 from rsyslog_nginx_clickhouse_spark.plans.storage import (
     compact,
     read_table,
     write_mergetree_like,
 )
+from rsyslog_nginx_clickhouse_spark.session import CHECKPOINT_MANAGER_CLASS
 from rsyslog_nginx_clickhouse_spark.sources.nginx_log import ingest_batch
 from rsyslog_nginx_clickhouse_spark.streaming.ingest import start_ingest
 
@@ -146,6 +149,40 @@ def test_epoch_writer_replay_never_duplicates(spark, tmp_path):
              glob.glob(os.path.join(table, "**", "*.parquet"),
                        recursive=True)}
     assert all(n.startswith("epoch-") for n in names)
+
+
+@pytest.mark.parametrize("lose_marker", [False, True])
+def test_stream_restart_after_lost_commit(spark, tmp_path, lose_marker):
+    """A crash after the epoch's files landed but before the checkpoint
+    commit (and, in the second case, before the table's epoch marker):
+    the restart replays the epoch and the table still holds every input
+    line exactly once, counted from the input files."""
+    log_dir = str(tmp_path / "logs")
+    table = str(tmp_path / "table")
+    ckpt = str(tmp_path / "ckpt")
+    for i, chunk in enumerate((LINES[:3], LINES[3:5], LINES[5:])):
+        _write_log(log_dir, f"part{i}.log", chunk + [f"garbage {i}"])
+    assert (spark.conf.get("spark.sql.streaming.checkpointFileManagerClass")
+            == CHECKPOINT_MANAGER_CLASS)
+    eng = Engine(table, spark)
+    eng.stream(log_dir, ckpt, max_files_per_trigger=1).awaitTermination(120)
+
+    commits = os.path.join(ckpt, "commits")
+    last = max(int(f) for f in os.listdir(commits) if f.isdigit())
+    assert last == 2
+    for name in (str(last), f".{last}.crc"):
+        os.remove(os.path.join(commits, name))
+    if lose_marker:
+        os.remove(os.path.join(table, f"_epoch_{last}_SUCCESS"))
+    eng.stream(log_dir, ckpt, max_files_per_trigger=1).awaitTermination(120)
+    assert os.path.exists(os.path.join(commits, str(last)))  # replayed
+
+    lines = [line for f in sorted((tmp_path / "logs").iterdir())
+             for line in f.read_text().splitlines()]
+    valid = sum(not line.startswith("garbage") for line in lines)
+    got = eng.sql("SELECT count(*) AS n, count(logdatetime) AS valid "
+                  "FROM $table").first()
+    assert (got.n, got.valid) == (len(lines), valid) == (11, 8)
 
 
 def test_socket_live_tail(spark):
