@@ -57,93 +57,9 @@ def query(name: str, oracle: str | None = None, doc: str = ""):
     return deco
 
 
-#: The driver's correctness snapshot covers only the FIRST 50 registry
-#: entries per round, so queries lacking a CURRENT green driver row
-#: are front-loaded each round. The rotation policy is EXECUTABLE
-#: (tools/rotationcheck.py, run by gate.sh — VERDICT r5 item 8): the
-#: window must contain every never-verified query and every query
-#: whose resolved function-source+oracle differs from the tree its
-#: last green row verified, and the remaining slots fill
-#: oldest-verified-first.
-#: Round-15 ordering (VERDICT r14 items 1, 2, 6 + the standing
-#: rotation contract): the window leads with the round's 3 mandatory
-#: TEXT-CHANGED entries — funnel_strict_modes (the three strict-mode
-#: folds now run from ONE collect_list shuffle via
-#: operators/funnel.window_funnel_multi instead of three shuffles +
-#: two joins — VERDICT item 1; results oracle-identical, the
-#: before/after plans are not kept) and rank_corr_sql +
-#: two_sample_tests_sql (the round-15 grouped-rank-stat window rewrite —
-#: _rewrite_grouped_rank_stats, VERDICT item 2 — replans their
-#: rankCorr / mannWhitneyUTest calls, their docs say so now, and
-#: they are also the exercising rows for the touched helper tokens)
-#: — then fills oldest-first:
-#: ALL 4 r9 rows (upsample_epochs + user_event_gaps, displaced by the
-#: r14 optimization rotation — VERDICT item 6 — plus
-#: window_lag_lead_sql + with_fill_interpolate, same r9 cohort) and
-#: 43 of the 46 r10 rows alphabetically. The 3 remaining r10 rows
-#: (top3_parts_per_brand, user_sessions, zorder_pruned_scan) are the
-#: oldest outside the window and lead _FRONTLOAD_R16 — the price of
-#: the 3 mandatory slots. rotationcheck enforces the result.
-_FRONTLOAD_R15 = [
-    # text-changed this round — the fused multi-mode funnel fold
-    "funnel_strict_modes",
-    # helper-coverage: the grouped-rank-stat window rewrite tokens
-    "rank_corr_sql",
-    "two_sample_tests_sql",
-    # the 4 r9 rows — oldest in the registry
-    "upsample_epochs",
-    "user_event_gaps",
-    "window_lag_lead_sql",
-    "with_fill_interpolate",
-    # 43 of the 46 r10 rows, alphabetical
-    "any_join_sql",
-    "argmax_rollup_latest",
-    "array_join_token_counts",
-    "array_lambda_sql",
-    "bloom_pruned_scan",
-    "bpe_tokenize_docs",
-    "bpe_train_merges",
-    "bucketed_build",
-    "daily_unique_users",
-    "decontamination",
-    "dedup_components",
-    "dedup_keep_best",
-    "dict_get_large",
-    "duplicated_ngram_fraction",
-    "embedding_norms",
-    "error_rate_daily",
-    "event_type_share",
-    "ivf_build",
-    "multimodal_decode_audio",
-    "multimodal_decode_png",
-    "multimodal_decode_video",
-    "multimodal_frames",
-    "nginx_dead_letters",
-    "nginx_pipeline",
-    "nginx_pipeline_rulebase",
-    "nginx_table_roundtrip",
-    "orders_moving_avg",
-    "orderstatus_pivot",
-    "purchase_last_view_asof",
-    "q12_priority_shipping",
-    "q9_product_profit",
-    "replacing_upsert_roundtrip",
-    "rollup_customer_balance",
-    "running_customer_spend",
-    "sample_rowcount_scan",
-    "skew_salted_event_counts",
-    "streaming_dedup",
-    "streaming_hourly_counts",
-    "streaming_sessions",
-    "streaming_summed_rollup",
-    "streaming_user_counts",
-    "streaming_view_purchase_join",
-    "timeseries_5min_by_type",
-]
-
-
 def load_all() -> dict[str, Query]:
-    """Import all query modules (side effect: fills REGISTRY)."""
+    """Import all query modules (side effect: fills REGISTRY) and
+    return REGISTRY, in registration order."""
     from rsyslog_nginx_clickhouse_spark.queries import (  # noqa: F401
         adhoc,
         llm,
@@ -153,11 +69,4 @@ def load_all() -> dict[str, Query]:
         tpch_plus,
     )
 
-    # loud invariant: a misspelled front-load name would silently
-    # demote that query out of the driver's 50-entry verification
-    # window and shrink the round's coverage with no error anywhere
-    missing = [n for n in _FRONTLOAD_R15 if n not in REGISTRY]
-    assert not missing, f"_FRONTLOAD names not in registry: {missing}"
-    ordered = {n: REGISTRY[n] for n in _FRONTLOAD_R15}
-    ordered.update(REGISTRY)
-    return ordered
+    return REGISTRY

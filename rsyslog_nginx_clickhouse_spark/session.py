@@ -170,8 +170,9 @@ def get_spark(app_name: str = "rsyslog-nginx-clickhouse-spark",
                 os.environ.get("SPARK_GRAFT_DRIVER_MEM")
                 or _default_driver_memory())
         .config("spark.ui.enabled", "false")
-        # static conf (settable only at session build): keep the stage
-        # ticker off stdout so bench.py's JSON line stays parseable
+        # static conf (settable only at session build): no stage ticker
+        # in the console, where perfbench/run.py prints its JSON line
+        # and the tools/ checkers their summary lines
         .config("spark.ui.showConsoleProgress", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         .config("spark.sql.maxMetadataStringLength", "10000")
@@ -190,12 +191,11 @@ def get_spark(app_name: str = "rsyslog-nginx-clickhouse-spark",
                  ("spark.sql.execution.arrow.pyspark.enabled", "true"),
                  # plan-text metadata (DataFilters/PushedFilters/...)
                  # truncates at this many chars; with the 100-char
-                 # default the cut point depends on the DIGIT WIDTH of
-                 # expression ids, so bench._plan_sig's id-normalized
-                 # signature flip-flopped between identical plans
-                 # (q2_min_cost_supplier's r12 "instability" was
-                 # exactly this — VERDICT r12 item 1). Untruncated
-                 # metadata is id-invariant after normalization.
+                 # default a long filter list loses its closing ']'
+                 # and tools/plancheck.py's `PushedFilters: [...]`
+                 # match under-counts pushdown on the tree plan, at a
+                 # cut point that moves with the digit width of
+                 # expression ids.
                  ("spark.sql.maxMetadataStringLength", "10000"),
                  ("spark.sql.streaming.checkpointFileManagerClass",
                   CHECKPOINT_MANAGER_CLASS)):

@@ -225,199 +225,3 @@ def test_zorder_many_columns_stays_positive(spark):
     keys = [r["z"] for r in df.select(
         zorder_key(df, ["a", "b", "c", "d", "e"]).alias("z")).collect()]
     assert all(z >= 0 for z in keys)  # sign bit never set, no wrap
-
-
-def test_bench_fold_best_presignature_fallback():
-    """VERDICT r6 item 5 + ADVICE r6: (a) a best round that predates
-    plan signatures must still yield a fallback signature (earliest
-    sig-bearing round) so a deliberate plan rewrite adjudicates as
-    plan-changed, not 'real'; (b) a stale signature from a previous
-    best round must not survive a new sig-less best."""
-    import importlib.util
-
-    spec = importlib.util.spec_from_file_location(
-        "bench_mod", os.path.join(os.path.dirname(__file__),
-                                  os.pardir, "bench.py"))
-    bench = importlib.util.module_from_spec(spec)
-    spec.loader.exec_module(bench)
-
-    docs = [
-        # r1: best wall for q, but recorded no signatures
-        ("BENCH_r01.json", {"queries": {"q": 0.374, "p": 1.0}}),
-        # r4: first round with a signature (slower wall)
-        ("BENCH_r04.json", {"queries": {"q": 0.6, "p": 2.0},
-                            "plan_sig": {"q": "sigA", "p": "sigP"}}),
-        # r5: new sig-less best for p — its stale r4 sig must be popped
-        ("BENCH_r05.json", {"queries": {"p": 0.5}}),
-    ]
-    best, rnd, sigs, first_sigs = bench._fold_best(docs)
-    assert best == {"q": 0.374, "p": 0.5}
-    assert rnd["q"] == "BENCH_r01.json"
-    # (a) best round has no sig; fallback resolves to the r4 signature
-    assert "q" not in sigs and first_sigs["q"] == ("sigA", "BENCH_r04.json")
-    # (b) p's best moved to sig-less r5: the r4 sig must NOT linger
-    assert "p" not in sigs and first_sigs["p"] == ("sigP", "BENCH_r04.json")
-
-
-def test_bench_adjudicate_same_plan_rebaseline():
-    """VERDICT r6 item 5, second remedy: when the all-time best round
-    predates signatures AND the earliest recorded signature matches
-    the current plan (the plan changed before signatures existed),
-    the adjudicator re-baselines against the durable same-plan best
-    (BENCH_BEST.json) instead of probing against a wall that belongs
-    to a plan that no longer exists."""
-    import importlib.util
-
-    spec = importlib.util.spec_from_file_location(
-        "bench_mod2", os.path.join(os.path.dirname(__file__),
-                                   os.pardir, "bench.py"))
-    bench = importlib.util.module_from_spec(spec)
-    spec.loader.exec_module(bench)
-
-    best_known = (
-        {"q": 0.374},                       # all-time best (r1, sig-less)
-        {"q": "BENCH_r01.json"},
-        {},                                  # best round recorded no sig
-        {"q": ("sigB", "BENCH_r05.json")},   # earliest sig == HEAD sig
-    )
-    by_sig = {"q": {"sig": "sigB", "best": 1.0}}
-    # 1.4s is 3.7x (and +1.0s) past the r1 wall but only 1.4x the
-    # same-plan best → plan-changed (re-baselined), and NO probe runs
-    # (registry=None would throw if the probe branch were taken)
-    out = bench._adjudicate(None, None, {"q": 1.4}, {"q": "sigB"}, None,
-                            best_known=best_known, best_by_sig=by_sig)
-    assert out["q"]["verdict"] == "plan-changed"
-    assert out["q"]["best_same_plan"] == 1.0
-    # without the same-plan baseline the branch would have probed:
-    # prove the gate is the baseline, not the ratio
-    try:
-        bench._adjudicate(None, None, {"q": 1.4}, {"q": "sigB"}, None,
-                          best_known=best_known, best_by_sig={})
-        raised = False
-    except (AttributeError, TypeError):  # probe branch hit registry=None
-        raised = True
-    assert raised
-    # ABS slack: 1.6x the best but within the additive-variance margin
-    # (0.23s over) → not adjudicated at all (BENCH_BEST ratchets to the
-    # luckiest sample; sub-second deltas are fixed-overhead noise)
-    out = bench._adjudicate(None, None, {"q": 0.6}, {"q": "sigB"}, None,
-                            best_known=best_known, best_by_sig={})
-    assert out == {}
-    # ... but ≥ 2x the all-time best adjudicates EVEN inside the
-    # margin (VERDICT r9 item 4): the plan-changed re-baseline must
-    # ship in the artifact, not read as an unexplained 2x
-    out = bench._adjudicate(None, None, {"q": 0.9}, {"q": "sigB"}, None,
-                            best_known=best_known, best_by_sig=by_sig)
-    assert out["q"]["verdict"] == "plan-changed"
-    assert out["q"]["best_same_plan"] == 1.0
-
-
-def test_bench_update_best_by_sig(tmp_path, monkeypatch):
-    """BENCH_BEST.json semantics: same signature rolls the best DOWN
-    (taking the cleaner of in-suite wall and isolated probe); a
-    changed signature RESETS the entry — a new plan starts its own
-    baseline rather than inheriting the old plan's wall."""
-    import importlib.util
-    import json as _json
-
-    spec = importlib.util.spec_from_file_location(
-        "bench_mod3", os.path.join(os.path.dirname(__file__),
-                                   os.pardir, "bench.py"))
-    bench = importlib.util.module_from_spec(spec)
-    spec.loader.exec_module(bench)
-    monkeypatch.setattr(bench, "BEST_PATH", str(tmp_path / "best.json"))
-
-    bench._update_best_by_sig({"q": 1.0}, {"q": "sigA"}, {})
-    bench._update_best_by_sig(  # clean probe beats wall → probe wins
-        {"q": 0.9}, {"q": "sigA"},
-        {"q": {"probe": 0.7, "probe_load": 0.4}})
-    got = _json.load(open(bench.BEST_PATH))
-    assert got["q"] == {"sig": "sigA", "best": 0.7}
-    bench._update_best_by_sig(  # probe at-load is not a clean sample
-        {"q": 0.65}, {"q": "sigA"},
-        {"q": {"probe": 0.3, "probe_load": 8.2}})
-    got = _json.load(open(bench.BEST_PATH))
-    assert got["q"] == {"sig": "sigA", "best": 0.65}
-    # sig change on an UNFLAGGED wall (not in adjudications → within
-    # noise of the all-time best) may reset
-    bench._update_best_by_sig({"q": 2.0}, {"q": "sigB"}, {})
-    got = _json.load(open(bench.BEST_PATH))
-    assert got["q"] == {"sig": "sigB", "best": 2.0}
-    # sig change on an ADJUDICATED wall with no clean probe must NOT
-    # reset — r12 wrote q2_min_cost_supplier's 5.539s suite wall over
-    # a 1.292s baseline exactly this way (VERDICT r12 item 1)
-    bench._update_best_by_sig(
-        {"q": 5.5}, {"q": "sigC"},
-        {"q": {"verdict": "plan-changed"}})
-    got = _json.load(open(bench.BEST_PATH))
-    assert got["q"] == {"sig": "sigB", "best": 2.0}
-    # ... but with a clean solo probe the reset proceeds, from the
-    # probe (the cleaner sample), not the suite wall
-    bench._update_best_by_sig(
-        {"q": 5.5}, {"q": "sigC"},
-        {"q": {"verdict": "plan-changed",
-               "probe": 1.8, "probe_load": 0.3}})
-    got = _json.load(open(bench.BEST_PATH))
-    assert got["q"] == {"sig": "sigC", "best": 1.8}
-
-
-def test_bench_adjudicate_probe_invalid_when_slower_than_suite():
-    """A probe SLOWER than the in-suite wall cannot be a clean sample
-    (isolated-idle is a lower bound): the verdict must be
-    'probe-invalid', never 'real' — observed live: source_overlap
-    probed 5.88 s vs an in-suite 2.93 s at load 4.9 and shipped a
-    'real' conviction on a ghost."""
-    import importlib.util
-    import time as _t
-
-    spec = importlib.util.spec_from_file_location(
-        "bench_mod3", os.path.join(os.path.dirname(__file__),
-                                   os.pardir, "bench.py"))
-    bench = importlib.util.module_from_spec(spec)
-    spec.loader.exec_module(bench)
-
-    class _Sink:
-        def __init__(self, secs):
-            self.secs = secs
-
-        def mode(self, m):
-            return self
-
-        def format(self, f):
-            return self
-
-        def save(self):
-            _t.sleep(self.secs)
-
-    class _Q:
-        def __init__(self, secs):
-            self._sink = _Sink(secs)
-
-        def spark(self, spark, sf):
-            class _DF:
-                write = self._sink
-            return _DF()
-
-    class _Catalog:
-        def clearCache(self):
-            pass
-
-    class _Spark:
-        catalog = _Catalog()
-
-    import gc as _gc
-
-    best_known = ({"q": 0.4}, {"q": "BENCH_r04.json"},
-                  {"q": "sigA"}, {"q": ("sigA", "BENCH_r04.json")})
-    # in-suite wall 1.2 s (3x and +0.8s past best, same sig, no
-    # same-plan baseline); the fake query takes ~1.6 s isolated →
-    # probe > wall → invalid
-    out = bench._adjudicate({"q": _Q(1.6)}, _Spark(), {"q": 1.2},
-                            {"q": "sigA"}, _gc,
-                            best_known=best_known, best_by_sig={})
-    assert out["q"]["verdict"] == "probe-invalid"
-    # and a FAST clean probe still adjudicates steal as before
-    out = bench._adjudicate({"q": _Q(0.05)}, _Spark(), {"q": 1.2},
-                            {"q": "sigA"}, _gc,
-                            best_known=best_known, best_by_sig={})
-    assert out["q"]["verdict"] == "steal"

@@ -1,126 +1,25 @@
 """Round-13 regression tests.
 
-Covers VERDICT r12 items 1-3: the bench ratchet's plan-changed branch
-must take a solo probe before a new signature may re-baseline
-BENCH_BEST, the contended-run gate must look at the 5-min load
-average too, and the behavioral aggregates gain their verbatim CH
-SQL spellings (windowFunnel / sequenceMatch / sequenceCount).
+Covers untruncated plan metadata (the session conf that
+tools/plancheck.py's pushed-filter count depends on) and the verbatim
+CH SQL spellings of the behavioral aggregates (windowFunnel /
+sequenceMatch / sequenceCount), WITH FILL, -State/-Merge and
+histogram(N)(x).
 """
-
-import importlib.util
-import os
 
 import pytest
 
 
-def _load_bench_mod(name):
-    spec = importlib.util.spec_from_file_location(
-        name, os.path.join(os.path.dirname(__file__),
-                           os.pardir, "bench.py"))
-    mod = importlib.util.module_from_spec(spec)
-    spec.loader.exec_module(mod)
-    return mod
-
-
-class _Sink:
-    def __init__(self, secs):
-        self.secs = secs
-
-    def mode(self, m):
-        return self
-
-    def format(self, f):
-        return self
-
-    def save(self):
-        import time as _t
-        _t.sleep(self.secs)
-
-
-class _Query:
-    def __init__(self, secs):
-        self._sink = _Sink(secs)
-
-    def spark(self, spark, sf):
-        sink = self._sink
-
-        class _DF:
-            write = sink
-        return _DF()
-
-
-class _Spark:
-    class catalog:
-        @staticmethod
-        def clearCache():
-            pass
-
-
-_BEST_KNOWN = ({"q": 1.0}, {"q": "BENCH_r04.json"},
-               {"q": "sigA"}, {"q": ("sigA", "BENCH_r04.json")})
-
-
-def test_plan_changed_sig_reset_takes_solo_probe():
-    """VERDICT r12 item 1: a changed plan signature resets the query's
-    BENCH_BEST baseline, so the plan-changed verdict must carry a solo
-    probe — the in-suite wall alone wrote q2_min_cost_supplier 5.539s
-    over its 1.292s baseline in r12."""
-    import gc as _gc
-
-    bench = _load_bench_mod("bench_mod_r13a")
-    out = bench._adjudicate({"q": _Query(0.05)}, _Spark(),
-                            {"q": 5.5}, {"q": "sigB"}, _gc,
-                            best_known=_BEST_KNOWN, best_by_sig={})
-    assert out["q"]["verdict"] == "plan-changed"
-    assert out["q"]["probe"] > 0
-    assert "probe_load" in out["q"]
-
-
-def test_plan_changed_with_same_sig_baseline_skips_probe():
-    """No reset happens when BENCH_BEST already holds the new sig
-    (the min-fold applies), so no probe is needed — registry=None
-    would throw if the probe ran."""
-    bench = _load_bench_mod("bench_mod_r13b")
-    by_sig = {"q": {"sig": "sigB", "best": 5.0}}
-    out = bench._adjudicate(None, None, {"q": 5.5}, {"q": "sigB"},
-                            None, best_known=_BEST_KNOWN,
-                            best_by_sig=by_sig)
-    assert out["q"]["verdict"] == "plan-changed"
-    assert "probe" not in out["q"]
-
-
-def test_plan_changed_contended_skips_probe():
-    """A contended run never ratchets, so the plan-changed probe is
-    skipped there (registry=None would throw if it ran)."""
-    bench = _load_bench_mod("bench_mod_r13c")
-    out = bench._adjudicate(None, None, {"q": 5.5}, {"q": "sigB"},
-                            None, best_known=_BEST_KNOWN,
-                            best_by_sig={}, contended=True)
-    assert out["q"]["verdict"] == "plan-changed"
-    assert "probe" not in out["q"]
-
-
 def test_plan_metadata_not_truncated(spark):
-    """q2_min_cost_supplier's r12 plan-sig flip-flop was a rendering
-    artifact: plan metadata truncates at maxMetadataStringLength
-    (default 100), so the cut point of DataFilters depended on the
-    digit width of expression ids and two identical plans hashed
-    differently. The session pins the length high enough that
-    metadata never truncates."""
+    """Plan metadata truncates at maxMetadataStringLength (default
+    100), which can cut `PushedFilters: [...]` before its closing
+    bracket; tools/plancheck.py reads that list from the tree plan to
+    count pushed filters, so a cut list under-reports pushdown at a
+    point that depends on the digit width of expression ids. The
+    session pins the length high enough that metadata never
+    truncates."""
     assert int(spark.conf.get("spark.sql.maxMetadataStringLength")) \
         >= 10000
-
-
-def test_contended_gate_includes_5min_load():
-    """VERDICT r12 item 2: the r12 'quiet' run started at 1-min load
-    0.05 but 5-min 3.91 and its probes ran at load 2.3-10.3 — the
-    start gate must consider the 5-min average."""
-    bench = _load_bench_mod("bench_mod_r13d")
-    assert bench.CONTENDED_LOAD_5M > 0
-    assert bench.PROBE_LOAD_CEILING > 0
-    # the drain window must be long enough for a genuine suite-heat
-    # 5-min average to decay below the gate (~5-min time constant)
-    assert bench.DRAIN_WAIT_S >= 300
 
 
 # ------------------- behavioral-aggregate SQL spellings (item 3) --

@@ -82,47 +82,6 @@ def test_any_last_family(spark):
     assert out == "anyLast(x)"
 
 
-def test_bench_seed_vs_clear_ceilings(tmp_path, monkeypatch):
-    """VERDICT r13 item 6: a probe at clearing-grade load (< 3.0 but
-    >= 1.5) may still roll a SAME-sig best down (load only inflates
-    samples — the min is conservative) but must NOT seed a new-sig
-    reset; seeding needs a genuinely idle box (< 1.5)."""
-    import importlib.util
-    import json as _json
-    import os as _os
-
-    spec = importlib.util.spec_from_file_location(
-        "bench_mod14", _os.path.join(_os.path.dirname(__file__),
-                                     _os.pardir, "bench.py"))
-    bench = importlib.util.module_from_spec(spec)
-    spec.loader.exec_module(bench)
-    monkeypatch.setattr(bench, "BEST_PATH", str(tmp_path / "best.json"))
-    assert bench.SEED_LOAD_CEILING < bench.PROBE_LOAD_CEILING
-
-    bench._update_best_by_sig({"q": 1.0}, {"q": "sigA"}, {})
-    # clearing-grade probe (load 2.6) still rolls the same-sig floor
-    bench._update_best_by_sig(
-        {"q": 0.9}, {"q": "sigA"},
-        {"q": {"probe": 0.7, "probe_load": 2.6}})
-    got = _json.load(open(bench.BEST_PATH))
-    assert got["q"] == {"sig": "sigA", "best": 0.7}
-    # ... but must NOT reset to a new signature (r13's 2.7-2.94
-    # probes were legal for clearing, soft evidence for seeding)
-    bench._update_best_by_sig(
-        {"q": 5.0}, {"q": "sigB"},
-        {"q": {"verdict": "plan-changed",
-               "probe": 2.0, "probe_load": 2.6}})
-    got = _json.load(open(bench.BEST_PATH))
-    assert got["q"] == {"sig": "sigA", "best": 0.7}
-    # an idle-box probe seeds the reset
-    bench._update_best_by_sig(
-        {"q": 5.0}, {"q": "sigB"},
-        {"q": {"verdict": "plan-changed",
-               "probe": 2.0, "probe_load": 1.1}})
-    got = _json.load(open(bench.BEST_PATH))
-    assert got["q"] == {"sig": "sigB", "best": 2.0}
-
-
 def test_exact_substring_matches(spark):
     """The suffix-adjacency operator: exact cross-doc match lengths,
     capped; same-doc repeats don't count; the all-equal (full-cap)

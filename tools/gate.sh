@@ -2,22 +2,18 @@
 # The full pre-ship gate, one command — what CI should run.
 # Order: cheapest signal first, so a red fails fast.
 #
-#   bash tools/gate.sh            # pytest + oracle + plans + determinism
-#   bash tools/gate.sh --bench    # ... plus the sf0.1 bench at the end
+#   bash tools/gate.sh    # pytest + benchmark tests + oracle + plans + determinism
 #
+# Timing is not gated here: `python3 perfbench/run.py` is the benchmark.
 # Exit nonzero on the first failing stage.
 set -euo pipefail
 cd "$(dirname "$0")/.."
 
-echo "== 1/5 rotation invariant (selftest + live) =="
-# full output, not `| tail -1`: the per-query VIOLATION lines are the
-# actionable part of a red (ADVICE r6); the tool prints one summary
-# line plus only violations, so this stays terse when green
-python tools/rotationcheck.py --selftest
-python tools/rotationcheck.py
-
-echo "== 2/5 pytest =="
+echo "== 1/5 pytest =="
 python -m pytest tests/ -x -q
+
+echo "== 2/5 benchmark tests (perfbench) =="
+python -m pytest perfbench/tests -q
 
 echo "== 3/5 oracle selfcheck (sf0.01, all queries) =="
 python tools/selfcheck.py /root/testdata/sf0.01 2>/dev/null | tail -3 | tee /tmp/gate_selfcheck.txt
@@ -30,8 +26,4 @@ echo "== 5/5 re-execution determinism =="
 python tools/determinism.py 2>/dev/null | tail -2 | tee /tmp/gate_det.txt
 grep -q ", 0 flaky" /tmp/gate_det.txt
 
-if [[ "${1:-}" == "--bench" ]]; then
-  echo "== bench (sf0.1) =="
-  python bench.py 2>/dev/null | tail -1
-fi
 echo "GATE GREEN"
