@@ -10,9 +10,10 @@ Reference workflow → Engine workflow:
 - Grafana panel SQL with $macros                      → ``eng.sql(...)``
   (same query text, ClickHouse function names included).
 - the DDL's ``PARTITION BY toYYYYMMDD(logdate)``      → ``Engine`` declares
-  ``declare_partition_by("nginx", "logdatetime", "logdate")``, so a
-  panel's ``$timeFilter`` also bounds ``logdate`` and reads only the
-  day partitions its range can touch.
+  the table's partition column (``plans.storage.PARTITION_COL``) for its
+  time column with ``declare_partition_by``, so a panel's
+  ``$timeFilter`` also bounds ``logdate`` and reads only the day
+  partitions its range can touch.
 
 >>> eng = Engine(table_root="/data/nginx")          # doctest: +SKIP
 >>> eng.ingest("/var/log/nginx/access.log.1")       # doctest: +SKIP
@@ -27,19 +28,24 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
+from rsyslog_nginx_clickhouse_spark.functions import macros
 from rsyslog_nginx_clickhouse_spark.functions.clickhouse import (
     register_clickhouse_functions,
 )
-from rsyslog_nginx_clickhouse_spark.functions.macros import (
-    declare_partition_by,
-)
 from rsyslog_nginx_clickhouse_spark.plans.storage import (
+    PARTITION_COL,
+    SORT_COLS,
     compact,
     read_table,
     write_mergetree_like,
 )
 from rsyslog_nginx_clickhouse_spark.session import get_spark
-from rsyslog_nginx_clickhouse_spark.sources.nginx_log import ingest_batch
+from rsyslog_nginx_clickhouse_spark.sources.nginx_log import (
+    dead_letters,
+    ingest_batch,
+    parse_lines,
+    read_access_log,
+)
 from rsyslog_nginx_clickhouse_spark.streaming.ingest import start_ingest
 
 TABLE_NAME = "nginx"
@@ -53,7 +59,7 @@ class Engine:
         self.spark = spark or get_spark("engine")
         self.table_root = table_root
         register_clickhouse_functions(self.spark)
-        declare_partition_by(TABLE_NAME, "logdatetime", "logdate")
+        macros.declare_partition_by(TABLE_NAME, SORT_COLS[-1], PARTITION_COL)
 
     # ---- ingest (the rsyslog half) ----
 
@@ -85,34 +91,23 @@ class Engine:
     def table(self) -> DataFrame:
         return read_table(self.spark, self.table_root)
 
-    def sql(self, query: str, time_col: str = "logdatetime",
-            interval_s: int = 3600, time_from: str | None = None,
-            time_to: str | None = None, **macro_kwargs) -> DataFrame:
+    def sql(self, query: str, **macro_kwargs) -> DataFrame:
         """Run (Grafana-macro / ClickHouse-flavored) SQL over the table.
 
-        ``macro_kwargs`` passes the rest of the macro surface through:
-        ``adhoc_filters=[(col, op, value), ...]`` for $adhoc and
-        ``template_vars={name: value}`` for $conditionalTest / $name
-        substitution.
+        ``macro_kwargs`` go to ``functions.macros.expand_macros``, which
+        holds their defaults: ``time_col``, ``interval_s``, ``time_from``
+        / ``time_to`` (the dashboard range), ``adhoc_filters=[(col, op,
+        value), ...]`` for $adhoc and ``template_vars={name: value}`` for
+        $conditionalTest / $name substitution.
         """
-        from rsyslog_nginx_clickhouse_spark.functions import macros
-
         self.table().createOrReplaceTempView(TABLE_NAME)
         # single dispatcher: macros.sql handles $-expansion AND the
         # ClickHouse aggregate rewrites for plain queries (two copies of
         # this logic had already drifted once)
         return macros.sql(self.spark, query, table=TABLE_NAME,
-                          time_col=time_col, interval_s=interval_s,
-                          time_from=time_from, time_to=time_to,
                           **macro_kwargs)
 
     def dead_letters(self, log_path: str) -> DataFrame:
         """Lines the parser rejected (debug tee, R2)."""
-        from rsyslog_nginx_clickhouse_spark.sources.nginx_log import (
-            dead_letters,
-            parse_lines,
-            read_access_log,
-        )
-
         return dead_letters(parse_lines(
             read_access_log(self.spark, log_path)))

@@ -3,10 +3,12 @@
 Reference DDL (/root/reference/nginx.click:1):
 ``ENGINE=MergeTree PARTITION BY toYYYYMMDD(logdate)
 ORDER BY (logdate, logdatetime) SETTINGS index_granularity=8192``.
+``PARTITION_COL`` and ``SORT_COLS`` below state that layout once; every
+write, compaction and the engine's pruning declaration read them.
 
 Spark mapping (SURVEY §1.3):
 
-- ``partitionBy(partition_col)``      ↔ daily partitions. Catalyst prunes
+- ``partitionBy(PARTITION_COL)``      ↔ daily partitions. Catalyst prunes
   directories before the scan on ``logdate`` predicates, and a Grafana
   ``$timeFilter`` over the engine's table derives one (see
   ``functions.macros.declare_partition_by``): ``logdate`` between the
@@ -16,10 +18,11 @@ Spark mapping (SURVEY §1.3):
   date of ``logdatetime`` under ``keep_tz=False`` and is within one
   day of it under ``keep_tz=True`` (nginx offsets are within ±14 h),
   so the pruning never changes a result.
-- ``sortWithinPartitions(sort_cols)`` ↔ MergeTree ORDER BY → Parquet
+- ``sortWithinPartitions(*SORT_COLS)`` ↔ MergeTree ORDER BY → Parquet
   row-group min/max stats become selective, so time-range predicates
   skip row groups exactly like the sparse primary index skips marks.
-- ``parquet.block.size``              ↔ index_granularity (skip grain).
+- index_granularity                   ↔ the row-group size, parquet's
+  default of 128 MiB: the skip grain at parquet's granularity.
 - ``compression=zstd``                ↔ ClickHouse's column compression
   (``ZSTD`` is one of its ``CODEC``s; the server default is LZ4). Every
   part is zstd parquet, about two thirds of the bytes snappy takes for
@@ -27,13 +30,13 @@ Spark mapping (SURVEY §1.3):
   readable, and the next ``compact()`` rewrites them as zstd.
 - ``compact()``                       ↔ background merges: micro-batch
   appends create small sorted parts; periodic compaction rewrites each
-  partition into few large sorted files.
+  partition into one sorted file.
 - ``read_table(schema=...)``          ↔ the DDL's column list: the table
   is read with its declared schema (``NGINX_TABLE_SCHEMA`` by default),
   so opening it lists the files but runs no schema-inference job.
 
 At 100 TB: partition count = days (bounded), file size controlled by
-``repartition(n, partition_col)`` per partition before the sorted write,
+``repartition(n, PARTITION_COL)`` per partition before the sorted write,
 so no small-file explosion and no global shuffle (repartition hashes on
 the partition key only).
 """
@@ -48,16 +51,17 @@ from rsyslog_nginx_clickhouse_spark.sources.nginx_log import (
     NGINX_TABLE_SCHEMA,
 )
 
-#: ↔ index_granularity=8192 rows/mark: one 128 MB row group ≈ the same
-#: skipping role at parquet's granularity.
-DEFAULT_BLOCK_SIZE = 128 * 1024 * 1024
+#: ↔ PARTITION BY toYYYYMMDD(logdate): one directory per day.
+PARTITION_COL = "logdate"
+
+#: ↔ ORDER BY (logdate, logdatetime): the row order inside every part.
+SORT_COLS = ("logdate", "logdatetime")
 
 #: ↔ CODEC(ZSTD): the parquet codec of every part the table gets.
 COMPRESSION = "zstd"
 
 
-def _salted_repartition(df: DataFrame, partition_col: str,
-                        sort_cols: tuple[str, ...],
+def _salted_repartition(df: DataFrame,
                         files_per_partition: int) -> DataFrame:
     """Spread a partitioned write across the cluster without a
     small-file explosion: salt WITHIN the partition key (hashing on the
@@ -68,29 +72,24 @@ def _salted_repartition(df: DataFrame, partition_col: str,
     files_per_partition writers TOTAL. Per-day FILE count stays bounded
     by the salt domain. Shared by the write and compaction paths.
     """
-    salt = F.pmod(F.xxhash64(*[F.col(c) for c in sort_cols]),
+    salt = F.pmod(F.xxhash64(*[F.col(c) for c in SORT_COLS]),
                   F.lit(files_per_partition))
     n = files_per_partition * max(
         1, df.sparkSession.sparkContext.defaultParallelism)
-    return df.repartition(n, F.col(partition_col), salt)
+    return df.repartition(n, F.col(PARTITION_COL), salt)
 
 
-def write_mergetree_like(df: DataFrame, path: str,
-                         partition_col: str = "logdate",
-                         sort_cols: tuple[str, ...] = ("logdate", "logdatetime"),
-                         mode: str = "append",
+def write_mergetree_like(df: DataFrame, path: str, mode: str = "append",
                          files_per_partition: int | None = None) -> None:
     """Write ``df`` as a day-partitioned, time-sorted, zstd parquet
     table. The one place the table's file format is decided: ingest,
     the streaming epoch sink and ``compact()`` all write through it."""
     if files_per_partition:
-        df = _salted_repartition(df, partition_col, sort_cols,
-                                 files_per_partition)
-    (df.sortWithinPartitions(*sort_cols)
+        df = _salted_repartition(df, files_per_partition)
+    (df.sortWithinPartitions(*SORT_COLS)
        .write.mode(mode)
-       .option("parquet.block.size", str(DEFAULT_BLOCK_SIZE))
        .option("compression", COMPRESSION)
-       .partitionBy(partition_col)
+       .partitionBy(PARTITION_COL)
        .parquet(path))
 
 
@@ -118,12 +117,9 @@ def read_table(spark: SparkSession, path: str,
     return reader.parquet(os.path.realpath(path))
 
 
-def compact(spark: SparkSession, path: str,
-            partition_col: str = "logdate",
-            sort_cols: tuple[str, ...] = ("logdate", "logdatetime"),
-            files_per_partition: int = 1,
-            keep_old: bool = True) -> None:
-    """↔ MergeTree background merge: rewrite into few large sorted parts.
+def compact(spark: SparkSession, path: str, keep_old: bool = True) -> None:
+    """↔ MergeTree background merge: rewrite each partition into one
+    sorted part.
 
     The current version is read with its inferred schema, so a table of
     any shape keeps every column it has.
@@ -187,8 +183,7 @@ def compact(spark: SparkSession, path: str,
     markers = glob.glob(os.path.join(real, "_epoch_*_SUCCESS"))
     df = read_table(spark, real, None)
     new = f"{base}.compact-v{n}"
-    write_mergetree_like(df, new, partition_col, sort_cols, "overwrite",
-                         files_per_partition)
+    write_mergetree_like(df, new, "overwrite", files_per_partition=1)
     for marker in markers:
         shutil.copy2(marker, new)
     tmplink = base + ".swap"

@@ -155,17 +155,33 @@ def get_spark(app_name: str = "rsyslog-nginx-clickhouse-spark",
             "correctness-load-bearing barriers. Unset it; plan auditors "
             "call plans.barrier.set_audit_mode(True) instead.")
     cpus = str(cpus or DEFAULT_CPUS)
+    # the runtime-settable SQL confs: set on the builder, and set again
+    # after getOrCreate, which IGNORES builder confs when a session
+    # already exists (e.g. created by a test harness) — above all the
+    # UTC pin, which oracle parity depends on
+    sql_confs = {
+        "spark.sql.shuffle.partitions": cpus,
+        "spark.sql.adaptive.enabled": "true",
+        "spark.sql.adaptive.coalescePartitions.enabled": "true",
+        "spark.sql.adaptive.skewJoin.enabled": "true",
+        "spark.sql.session.timeZone": "UTC",
+        "spark.sql.execution.arrow.pyspark.enabled": "true",
+        "spark.sql.parquet.filterPushdown": "true",
+        "spark.sql.autoBroadcastJoinThreshold": str(64 * 1024 * 1024),
+        # plan-text metadata (DataFilters/PushedFilters/...) truncates
+        # at this many chars; with the 100-char default a long filter
+        # list loses its closing ']' and tools/plancheck.py's
+        # `PushedFilters: [...]` match under-counts pushdown on the
+        # tree plan, at a cut point that moves with the digit width of
+        # expression ids.
+        "spark.sql.maxMetadataStringLength": "10000",
+        "spark.sql.streaming.checkpointFileManagerClass":
+            CHECKPOINT_MANAGER_CLASS,
+    }
     builder = (
         SparkSession.builder
         .master(f"local[{cpus}]")
         .appName(app_name)
-        .config("spark.sql.shuffle.partitions", cpus)
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.sql.parquet.filterPushdown", "true")
         .config("spark.driver.memory",
                 os.environ.get("SPARK_GRAFT_DRIVER_MEM")
                 or _default_driver_memory())
@@ -174,31 +190,10 @@ def get_spark(app_name: str = "rsyslog-nginx-clickhouse-spark",
         # in the console, where perfbench/run.py prints its JSON line
         # and the tools/ checkers their summary lines
         .config("spark.ui.showConsoleProgress", "false")
-        .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
-        .config("spark.sql.maxMetadataStringLength", "10000")
-        .config("spark.sql.streaming.checkpointFileManagerClass",
-                CHECKPOINT_MANAGER_CLASS)
+        .config(map={**sql_confs, **_local_fs_confs()})
     )
-    for k, v in _local_fs_confs().items():
-        builder = builder.config(k, v)
     spark = builder.getOrCreate()
-    # getOrCreate IGNORES builder confs when a session already exists
-    # (e.g. created by a test harness): re-apply the runtime-settable
-    # ones — above all the UTC pin, which oracle parity depends on.
-    for k, v in (("spark.sql.session.timeZone", "UTC"),
-                 ("spark.sql.shuffle.partitions", cpus),
-                 ("spark.sql.adaptive.enabled", "true"),
-                 ("spark.sql.execution.arrow.pyspark.enabled", "true"),
-                 # plan-text metadata (DataFilters/PushedFilters/...)
-                 # truncates at this many chars; with the 100-char
-                 # default a long filter list loses its closing ']'
-                 # and tools/plancheck.py's `PushedFilters: [...]`
-                 # match under-counts pushdown on the tree plan, at a
-                 # cut point that moves with the digit width of
-                 # expression ids.
-                 ("spark.sql.maxMetadataStringLength", "10000"),
-                 ("spark.sql.streaming.checkpointFileManagerClass",
-                  CHECKPOINT_MANAGER_CLASS)):
+    for k, v in sql_confs.items():
         spark.conf.set(k, v)
     spark.sparkContext.setLogLevel("WARN")
     return spark

@@ -37,16 +37,15 @@ from rsyslog_nginx_clickhouse_spark.plans.storage import write_mergetree_like
 
 
 def stream_access_log(spark: SparkSession, log_dir: str,
-                      max_files_per_trigger: int | None = None,
-                      max_bytes_per_trigger: str | None = None) -> DataFrame:
+                      max_files_per_trigger: int | None = None) -> DataFrame:
     """Streaming source over an access-log directory (S1 equivalent).
 
     Back-pressure / queue semantics: rsyslog's ruleset call
     (/root/reference/nginx.conf:56) implicitly runs through bounded
     action queues that throttle the producer when the sink lags. The
     Structured Streaming analog is admission control at the source —
-    ``maxFilesPerTrigger`` / ``maxBytesPerTrigger`` cap how much of a
-    backlog one micro-batch admits, so a multi-day replay drains as a
+    ``maxFilesPerTrigger`` caps how many files of a backlog one
+    micro-batch admits, so a multi-day replay drains as a
     sequence of bounded epochs (bounded executor memory, steady
     checkpoint cadence) instead of one monster batch. Downstream there
     is no unbounded queue to overflow: each epoch is fully written and
@@ -56,8 +55,6 @@ def stream_access_log(spark: SparkSession, log_dir: str,
     reader = spark.readStream.format("text")
     if max_files_per_trigger is not None:
         reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    if max_bytes_per_trigger is not None:
-        reader = reader.option("maxBytesPerTrigger", max_bytes_per_trigger)
     raw = reader.load(log_dir)
     return to_typed_table(parse_lines(raw))
 
@@ -70,6 +67,15 @@ def idempotent_epoch_writer(table_path: str, write_fn=None):
     half-staged / half-published / published-but-unmarked) converges to
     exactly one copy of the epoch's rows. See start_ingest docstring.
 
+    Markers and published names carry the streaming query's id as well
+    as the epoch number: every checkpoint numbers its epochs from 0, so
+    a second checkpoint streaming into the same table would otherwise
+    find the first one's markers and skip its own epochs as committed,
+    and its purge would delete the first one's files. The id is stored
+    in the checkpoint, so a restart replays under the same names.
+    Called directly (outside a streaming query) there is no id, and the
+    names carry the epoch number alone.
+
     ``write_fn(batch_df, staging_path)`` overrides the staged write
     (default: the sorted day-partitioned mergetree write) — used by any
     foreachBatch sink that appends to plain parquet, e.g. the summing
@@ -80,10 +86,13 @@ def idempotent_epoch_writer(table_path: str, write_fn=None):
     import shutil
 
     def sink(batch_df: DataFrame, epoch_id: int) -> None:
-        marker = os.path.join(table_path, f"_epoch_{epoch_id}_SUCCESS")
+        query_id = batch_df.sparkSession.sparkContext.getLocalProperty(
+            "sql.streaming.queryId")
+        epoch = epoch_id if query_id is None else f"{query_id}-{epoch_id}"
+        marker = os.path.join(table_path, f"_epoch_{epoch}_SUCCESS")
         if os.path.exists(marker):
             return  # epoch fully committed; checkpoint replay
-        staging = os.path.join(table_path, f"_staging_{epoch_id}")
+        staging = os.path.join(table_path, f"_staging_{epoch}")
         # A replay of a HALF-STAGED epoch must start from an empty
         # staging dir: the default write is mode="overwrite" (clears it
         # implicitly), but a custom write_fn may append (the summing
@@ -100,7 +109,7 @@ def idempotent_epoch_writer(table_path: str, write_fn=None):
         # files first, or a stale higher-index file from the earlier
         # attempt would survive and duplicate rows
         for stale in glob.glob(os.path.join(
-                table_path, "**", f"epoch-{epoch_id}-*.parquet"),
+                table_path, "**", f"epoch-{epoch}-*.parquet"),
                 recursive=True):
             os.remove(stale)
         for i, src in enumerate(sorted(
@@ -110,7 +119,7 @@ def idempotent_epoch_writer(table_path: str, write_fn=None):
             dest_dir = os.path.join(table_path, rel_dir)
             os.makedirs(dest_dir, exist_ok=True)
             os.replace(src, os.path.join(
-                dest_dir, f"epoch-{epoch_id}-{i:05d}.parquet"))
+                dest_dir, f"epoch-{epoch}-{i:05d}.parquet"))
         shutil.rmtree(staging, ignore_errors=True)
         with open(marker, "w"):
             pass
@@ -119,15 +128,18 @@ def idempotent_epoch_writer(table_path: str, write_fn=None):
 
 
 def start_ingest(spark: SparkSession, log_dir: str, table_path: str,
-                 checkpoint: str, trigger_once: bool = True,
+                 checkpoint: str,
                  max_files_per_trigger: int | None = None) -> StreamingQuery:
     """Tail → parse → enrich → typed table, exactly-once per micro-batch.
 
+    The query runs with the ``availableNow`` trigger: it drains every
+    file that is in ``log_dir`` when it starts, then stops, so each
+    call is one bounded catch-up (the caller awaits its termination).
     foreachBatch writes each epoch through plans/storage.py (sorted,
     day-partitioned) — the K1 sink with batching the reference lacks.
     ``max_files_per_trigger`` bounds each epoch's admission (the rsyslog
-    action-queue analog — see stream_access_log); with availableNow the
-    whole backlog still drains, just in bounded slices.
+    action-queue analog — see stream_access_log); the whole backlog
+    still drains, just in bounded slices.
 
     Exactly-once, not just at-least-once: foreachBatch alone re-runs an
     epoch whose write finished but whose checkpoint commit didn't (crash
@@ -140,16 +152,13 @@ def start_ingest(spark: SparkSession, log_dir: str, table_path: str,
     stores swap the rename for a Delta/Iceberg transactional commit —
     same contract, provided by the table format.
     """
-    sink = idempotent_epoch_writer(table_path)
-    writer = (stream_access_log(
-                  spark, log_dir,
-                  max_files_per_trigger=max_files_per_trigger)
-              .writeStream
-              .foreachBatch(sink)
-              .option("checkpointLocation", checkpoint))
-    if trigger_once:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return (stream_access_log(spark, log_dir,
+                              max_files_per_trigger=max_files_per_trigger)
+            .writeStream
+            .foreachBatch(idempotent_epoch_writer(table_path))
+            .option("checkpointLocation", checkpoint)
+            .trigger(availableNow=True)
+            .start())
 
 
 def streaming_timeseries(typed_stream: DataFrame, time_col: str = "logdatetime",

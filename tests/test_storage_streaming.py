@@ -165,7 +165,8 @@ def test_stream_restart_after_lost_commit(spark, tmp_path, lose_marker):
     assert (spark.conf.get("spark.sql.streaming.checkpointFileManagerClass")
             == CHECKPOINT_MANAGER_CLASS)
     eng = Engine(table, spark)
-    eng.stream(log_dir, ckpt, max_files_per_trigger=1).awaitTermination(120)
+    q = eng.stream(log_dir, ckpt, max_files_per_trigger=1)
+    q.awaitTermination(120)
 
     commits = os.path.join(ckpt, "commits")
     last = max(int(f) for f in os.listdir(commits) if f.isdigit())
@@ -173,7 +174,7 @@ def test_stream_restart_after_lost_commit(spark, tmp_path, lose_marker):
     for name in (str(last), f".{last}.crc"):
         os.remove(os.path.join(commits, name))
     if lose_marker:
-        os.remove(os.path.join(table, f"_epoch_{last}_SUCCESS"))
+        os.remove(os.path.join(table, f"_epoch_{q.id}-{last}_SUCCESS"))
     eng.stream(log_dir, ckpt, max_files_per_trigger=1).awaitTermination(120)
     assert os.path.exists(os.path.join(commits, str(last)))  # replayed
 
@@ -183,6 +184,23 @@ def test_stream_restart_after_lost_commit(spark, tmp_path, lose_marker):
     got = eng.sql("SELECT count(*) AS n, count(logdatetime) AS valid "
                   "FROM $table").first()
     assert (got.n, got.valid) == (len(lines), valid) == (11, 8)
+
+
+def test_two_checkpoints_stream_into_one_table(spark, tmp_path):
+    """Every checkpoint numbers its epochs from 0: a second stream into
+    the table must neither skip its epochs as already committed by the
+    first one, nor purge the first one's files."""
+    table = str(tmp_path / "table")
+    eng = Engine(table, spark)
+    other = [line.replace("1.1.1.1", "3.3.3.3") for line in LINES[:5]]
+    for name, lines in (("a", LINES[:5]), ("b", other)):
+        log_dir = str(tmp_path / f"logs_{name}")
+        _write_log(log_dir, "access.log", lines)
+        eng.stream(log_dir, str(tmp_path / f"ckpt_{name}")) \
+            .awaitTermination(120)
+    got = eng.sql("SELECT clientip, count(*) AS n FROM $table "
+                  "GROUP BY clientip").collect()
+    assert {r.clientip: r.n for r in got} == {"1.1.1.1": 5, "3.3.3.3": 5}
 
 
 def test_socket_live_tail(spark):

@@ -1,5 +1,6 @@
-"""The table's write path: every part is zstd parquet, and a batch
-ingest is one Spark job whose row count comes from the write itself."""
+"""The table's write path: every part is zstd parquet laid out as the
+DDL says, and a batch ingest is one Spark job whose row count comes from
+the write itself."""
 
 from __future__ import annotations
 
@@ -10,7 +11,6 @@ import threading
 import pyarrow.parquet as pq
 
 from rsyslog_nginx_clickhouse_spark.engine import Engine
-from rsyslog_nginx_clickhouse_spark.plans.storage import DEFAULT_BLOCK_SIZE
 from rsyslog_nginx_clickhouse_spark.sources.nginx_log import ingest_batch
 
 LINES = [
@@ -20,6 +20,13 @@ LINES = [
     '2.2.2.2 - - [07/Apr/2020:10:00:0%d +0000] "GET /b HTTP/1.1" 404 20 "-" "ua" "-"' % i
     for i in range(3)
 ] + ["garbage line"]
+
+#: two days interleaved, each out of time order
+OUT_OF_ORDER = [
+    '3.3.3.3 - - [%02d/Apr/2020:%s +0000] "GET /c HTTP/1.1" 200 1 "-" "ua" "-"'
+    % (day, hms) for hms in ("23:59:59", "00:00:00", "12:30:00", "06:15:00")
+    for day in (7, 6)
+]
 
 PANEL = ("SELECT $timeSeries AS t, count(*) AS c "
          "FROM $table WHERE $timeFilter GROUP BY t ORDER BY t")
@@ -75,6 +82,37 @@ def test_ingest_stream_and_compact_write_zstd(spark, tmp_path):
     assert eng.table().count() == len(LINES) + 5
 
 
+def _assert_ddl_layout(files):
+    """PARTITION BY logdate ORDER BY (logdate, logdatetime): each file
+    sits under the day of its rows, and its rows never go back in time."""
+    assert files
+    for f in files:
+        ts = pq.ParquetFile(f).read(columns=["logdatetime"]) \
+            .column(0).to_pylist()
+        assert {f"logdate={t.date()}" for t in ts} == \
+            {os.path.basename(os.path.dirname(f))}, f
+        assert ts == sorted(ts), f
+
+
+def test_ingest_stream_and_compact_keep_the_ddl_layout(spark, tmp_path):
+    eng = Engine(table_root=str(tmp_path / "nginx"), spark=spark)
+    log = str(tmp_path / "access.log")
+    _write_log(log, OUT_OF_ORDER)
+    eng.ingest(log)
+    ingested = _parquet_files(eng.table_root)
+    _assert_ddl_layout(ingested)
+
+    logs = str(tmp_path / "live")
+    _write_log(os.path.join(logs, "a.log"), OUT_OF_ORDER[::-1][:5])
+    eng.stream(logs, str(tmp_path / "ckpt")).awaitTermination(120)
+    epoch = _parquet_files(eng.table_root) - ingested
+    _assert_ddl_layout(epoch)
+
+    eng.compact()  # merges each day's ingested and streamed rows
+    _assert_ddl_layout(_parquet_files(eng.table_root))
+    assert eng.table().count() == len(OUT_OF_ORDER) + 5
+
+
 def test_ingest_runs_one_job_and_counts_every_line(spark, tmp_path):
     eng = Engine(table_root=str(tmp_path / "nginx"), spark=spark)
     log = str(tmp_path / "access.log")
@@ -119,7 +157,6 @@ def test_mixed_codec_table_reads_and_compacts(spark, tmp_path):
     (ingest_batch(spark, old)
         .sortWithinPartitions("logdate", "logdatetime")
         .write.mode("append")
-        .option("parquet.block.size", str(DEFAULT_BLOCK_SIZE))
         .option("compression", "snappy")
         .partitionBy("logdate")
         .parquet(root))

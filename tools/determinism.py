@@ -6,7 +6,9 @@ execution; this proves Spark == Spark across executions — the property
 that catches partition-order-dependent results (collect_set render
 order, first()/any_value picks, non-total sort keys, rounding applied
 after a nondeterministic reduce), which could coincidentally match the
-oracle once and flake the next round. Usage:
+oracle once and flake the next round. A query that raises is counted
+as an error, not as flaky: it says nothing about determinism. The exit
+status is nonzero when any query is flaky or errors. Usage:
 
     python tools/determinism.py [sf_dir] [query ...]
 """
@@ -29,7 +31,7 @@ def main() -> int:
     only = set(sys.argv[2:])
     registry = load_all()
     spark = get_spark("determinism")
-    n_pass = n_fail = 0
+    n_pass = n_flaky = n_error = 0
     for name, q in registry.items():
         if only and name not in only:
             continue
@@ -42,16 +44,16 @@ def main() -> int:
                 spark.catalog.clearCache()
                 gc.collect()
         except Exception as e:
-            print(f"FAIL {name}: error: {e}")
-            n_fail += 1
+            print(f"ERROR {name}: {e}")
+            n_error += 1
             continue
         if hashes[0] == hashes[1]:
             n_pass += 1
         else:
-            print(f"FAIL {name}: run1={hashes[0]} run2={hashes[1]}")
-            n_fail += 1
-    print(f"\n{n_pass} deterministic, {n_fail} flaky")
-    return 1 if n_fail else 0
+            print(f"FLAKY {name}: run1={hashes[0]} run2={hashes[1]}")
+            n_flaky += 1
+    print(f"\n{n_pass} deterministic, {n_flaky} flaky, {n_error} errors")
+    return 1 if n_flaky or n_error else 0
 
 
 if __name__ == "__main__":

@@ -24,6 +24,6 @@ python tools/plancheck.py /root/testdata/sf0.001 2>/dev/null | tail -2
 
 echo "== 5/5 re-execution determinism =="
 python tools/determinism.py 2>/dev/null | tail -2 | tee /tmp/gate_det.txt
-grep -q ", 0 flaky" /tmp/gate_det.txt
+grep -q ", 0 flaky, 0 errors" /tmp/gate_det.txt
 
 echo "GATE GREEN"
