@@ -78,7 +78,11 @@ class Engine:
         return obs.get["n"]
 
     def stream(self, log_dir: str, checkpoint: str, **kwargs):
-        """Continuous ingest of a log directory (exactly-once epochs)."""
+        """Drain every file now in ``log_dir`` into the table, then stop.
+
+        A bounded ``availableNow`` query (exactly-once epochs; await its
+        termination), started from a parse plan that ``start_ingest``
+        builds once per landing directory and reuses on later calls."""
         return start_ingest(self.spark, log_dir, self.table_root,
                             checkpoint, **kwargs)
 

@@ -292,3 +292,111 @@ def test_watermark_drops_late_rows_across_restarts(spark, tmp_path):
     # fresh rows were not dropped
     assert rows.get("2020-04-06 12:00:00") == 1
     assert rows.get("2020-04-06 13:00:00") == 1
+
+
+@pytest.fixture
+def plan_builds(monkeypatch):
+    """Records the ``log_dir`` of every parse-plan build ``start_ingest``
+    makes."""
+    from rsyslog_nginx_clickhouse_spark.streaming import ingest
+
+    build, builds = ingest.stream_access_log, []
+
+    def counting(spark, log_dir, **kwargs):
+        builds.append(log_dir)
+        return build(spark, log_dir, **kwargs)
+
+    monkeypatch.setattr(ingest, "stream_access_log", counting)
+    return builds
+
+
+def _client_counts(spark, table):
+    rows = read_table(spark, table).groupBy("clientip").count().collect()
+    return {r.clientip: r["count"] for r in rows}
+
+
+def test_stream_builds_its_plan_once_per_landing_directory(
+        spark, tmp_path, plan_builds):
+    """Three drains of one landing directory, a new file landed before
+    each, build one parse plan between them; each file's rows are
+    visible exactly once after its drain. Another landing directory, or
+    another ``max_files_per_trigger``, gets a plan of its own."""
+    log_dir = str(tmp_path / "logs")
+    table = str(tmp_path / "table")
+    eng = Engine(table, spark)
+    want = {}
+    for i in range(3):
+        ip = f"10.0.0.{i}"
+        _write_log(log_dir, f"part{i}.log",
+                   [line.replace("1.1.1.1", ip) for line in LINES[:5]])
+        eng.stream(log_dir, str(tmp_path / "ckpt")).awaitTermination(120)
+        want[ip] = 5
+        assert _client_counts(spark, table) == want
+    assert plan_builds == [log_dir]
+
+    other_dir = str(tmp_path / "other_logs")
+    _write_log(other_dir, "a.log", LINES[5:])
+    eng.stream(other_dir, str(tmp_path / "ckpt_other")).awaitTermination(120)
+    eng.stream(log_dir, str(tmp_path / "ckpt_bounded"),
+               max_files_per_trigger=1).awaitTermination(120)
+    assert plan_builds == [log_dir, other_dir, log_dir]
+    assert _client_counts(spark, table) == {
+        ip: 2 * n for ip, n in want.items()} | {"2.2.2.2": 3}
+
+
+def _instants(df):
+    return sorted(df.select("message", F.unix_micros("logdatetime"))
+                  .collect())
+
+
+def test_stream_replans_after_time_zone_change(spark, tmp_path, plan_builds):
+    """Analysis writes the session time zone into the plan's
+    ``try_to_timestamp``: a drain after a zone change must parse its new
+    file in the new zone (as a batch ingest would), and rows landed
+    before it keep their instants."""
+    log_dir = str(tmp_path / "logs")
+    table = str(tmp_path / "table")
+    ckpt = str(tmp_path / "ckpt")
+    eng = Engine(table, spark)
+    _write_log(log_dir, "a.log", LINES[:5])
+    eng.stream(log_dir, ckpt).awaitTermination(120)
+    rows_a = _instants(read_table(spark, table))
+
+    zone = spark.conf.get("spark.sql.session.timeZone")
+    assert zone == "UTC"
+    b_dir = str(tmp_path / "b")
+    _write_log(b_dir, "b.log", LINES[5:])
+    try:
+        spark.conf.set("spark.sql.session.timeZone", "America/Los_Angeles")
+        os.replace(os.path.join(b_dir, "b.log"),
+                   os.path.join(log_dir, "b.log"))
+        eng.stream(log_dir, ckpt).awaitTermination(120)
+        want_b = _instants(ingest_batch(
+            spark, os.path.join(log_dir, "b.log")))
+    finally:
+        spark.conf.set("spark.sql.session.timeZone", zone)
+    got = read_table(spark, table)
+    assert _instants(got.where("clientip = '2.2.2.2'")) == want_b
+    assert _instants(got.where("clientip = '1.1.1.1'")) == rows_a
+    # a UTC parse of B lands 7 hours (PDT) before the Los Angeles one
+    assert want_b != _instants(ingest_batch(
+        spark, os.path.join(log_dir, "b.log")))
+    assert plan_builds == [log_dir, log_dir]
+
+
+def test_two_tables_stream_one_landing_directory(spark, tmp_path,
+                                                 plan_builds):
+    """Two engines drain the same landing directory into their own
+    tables through their own checkpoints: they share one parse plan,
+    and each table holds every landed row exactly once."""
+    log_dir = str(tmp_path / "logs")
+    engines = [Engine(str(tmp_path / f"table_{i}"), spark) for i in range(2)]
+    for i, chunk in enumerate((LINES[:5], LINES[5:])):
+        _write_log(log_dir, f"part{i}.log", chunk)
+        for j, eng in enumerate(engines):
+            eng.stream(log_dir, str(tmp_path / f"ckpt_{j}")) \
+                .awaitTermination(120)
+    assert plan_builds == [log_dir]
+    for eng in engines:
+        assert _client_counts(spark, eng.table_root) == {
+            "1.1.1.1": 5, "2.2.2.2": 3}
