@@ -496,6 +496,17 @@ def nginx_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
                         "request", "httpv", "response", "bytes", "agent")
 
 
+def reference_config_path(name: str) -> str:
+    """Path of the reference's config file ``name`` (``nginx.rule`` or
+    ``nginx.table``), the one place its directory is looked up.
+
+    The verbatim files stay out of the repo (copy hygiene), so the
+    directory is overridable: point SPARK_GRAFT_REFERENCE_DIR at any
+    directory holding nginx.rule and nginx.table."""
+    return os.path.join(
+        os.environ.get("SPARK_GRAFT_REFERENCE_DIR", "/root/reference"), name)
+
+
 @query(
     "nginx_pipeline_rulebase",
     oracle="""
@@ -524,14 +535,7 @@ def nginx_pipeline_rulebase(spark: SparkSession, sf_dir: str) -> DataFrame:
         load_rulebase,
     )
 
-    # Config location is overridable (ADVICE r5): the verbatim files
-    # stay out of the repo (copy hygiene), so on a machine without the
-    # reference checkout point SPARK_GRAFT_REFERENCE_DIR at any dir
-    # holding nginx.rule + nginx.table instead of failing on a
-    # hardcoded path mid-selfcheck.
-    ref_dir = os.environ.get("SPARK_GRAFT_REFERENCE_DIR",
-                             "/root/reference")
-    rule_path = os.path.join(ref_dir, "nginx.rule")
+    rule_path = reference_config_path("nginx.rule")
     if not os.path.exists(rule_path):
         raise FileNotFoundError(
             f"{rule_path} not found: nginx_pipeline_rulebase parses the "
@@ -539,7 +543,7 @@ def nginx_pipeline_rulebase(spark: SparkSession, sf_dir: str) -> DataFrame:
             "SPARK_GRAFT_REFERENCE_DIR to a directory containing "
             "nginx.rule and nginx.table")
     rule = load_rulebase(rule_path)[0]
-    months = load_lookup_table(os.path.join(ref_dir, "nginx.table"))
+    months = load_lookup_table(reference_config_path("nginx.table"))
     lines = _render_log_lines(load(spark, sf_dir, "events"))
     typed = to_typed_table(parse_lines(lines, rule=rule),
                            month_table=months)

@@ -4,9 +4,15 @@ plan shape is scale-invariant for these properties."""
 
 from __future__ import annotations
 
+import os
+import warnings
+
 import pytest
 
 from rsyslog_nginx_clickhouse_spark.queries import load_all
+from rsyslog_nginx_clickhouse_spark.queries.reference import (
+    reference_config_path,
+)
 from tools.plancheck import audit
 
 
@@ -41,9 +47,16 @@ def test_events_time_range_reaches_the_scan(spark, sf_dir):
 
 
 def test_no_query_plans_a_cartesian_product(spark, sf_dir):
+    rule_path = reference_config_path("nginx.rule")
     for name in sorted(load_all()):
         if name.startswith("streaming"):
             continue  # streaming entries execute on construction
+        if name == "nginx_pipeline_rulebase" and not os.path.exists(rule_path):
+            # its config is the reference's verbatim file, kept out of the
+            # repo: leave out this one query, not every one after it
+            warnings.warn(f"{name} not audited: {rule_path} not found "
+                          "(set SPARK_GRAFT_REFERENCE_DIR)", UserWarning)
+            continue
         a = audit(_plan(spark, sf_dir, name))
         assert a["cartesian"] == 0, name
         spark.catalog.clearCache()

@@ -1,9 +1,9 @@
 """Runtime rulebase / lookup-table loaders (sources/rulebase.py).
 
-Golden tests load the reference's VERBATIM config files
-(/root/reference/nginx.rule, /root/reference/nginx.table — read
-directly, not copied into the repo) and assert the compiled parser
-reproduces the hardcoded transliteration's verified behavior.
+Golden tests load the reference's VERBATIM config files (nginx.rule,
+nginx.table in SPARK_GRAFT_REFERENCE_DIR — read directly, not copied
+into the repo) and assert the compiled parser reproduces the hardcoded
+transliteration's verified behavior.
 """
 
 from __future__ import annotations
@@ -13,6 +13,9 @@ import re
 
 import pytest
 
+from rsyslog_nginx_clickhouse_spark.queries.reference import (
+    reference_config_path,
+)
 from rsyslog_nginx_clickhouse_spark.sources.lookup import MONTHS
 from rsyslog_nginx_clickhouse_spark.sources.nginx_log import (
     NGINX_LINE_REGEX,
@@ -28,10 +31,11 @@ from rsyslog_nginx_clickhouse_spark.sources.rulebase import (
     parse_rulebase,
 )
 
-REF_RULE = "/root/reference/nginx.rule"
-REF_TABLE = "/root/reference/nginx.table"
+REF_RULE = reference_config_path("nginx.rule")
+REF_TABLE = reference_config_path("nginx.table")
 have_reference = pytest.mark.skipif(
-    not os.path.exists(REF_RULE), reason="reference repo not present")
+    not os.path.exists(REF_RULE),
+    reason=f"{REF_RULE} not found: set SPARK_GRAFT_REFERENCE_DIR")
 
 
 # --- token translator unit behavior -----------------------------------
