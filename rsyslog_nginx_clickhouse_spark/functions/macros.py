@@ -9,11 +9,23 @@ The reference's one published query (/root/reference/README.md:279-285):
 (README.md:275). Expansion is pre-parse string templating — it never
 touches the planner (SURVEY §3.3), so Catalyst sees plain SQL and all
 pushdown/pruning applies to the expanded predicate.
+
+Every text rewrite here is built on three primitives, each stated once:
+
+- ``_mask_literals`` / ``_unmask_literals``: string literals are
+  swapped for placeholders before a rewrite and restored after it, so
+  rewrites only ever see string data masked — a quoted ``(``, ``,``,
+  ``$table`` or function name is data, never syntax;
+- ``_scan_balanced``: the matching ``)`` of a ``(`` (``_take_call_args``
+  adds the top-level argument split);
+- ``_rewrite_calls``: find a call, splice its replacement, resume the
+  search after the splice.
 """
 
 from __future__ import annotations
 
 import re
+from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -130,19 +142,85 @@ def _split_expr_alias(arg: str) -> tuple[str, str]:
         "'expr AS name' — the alias becomes the output column")
 
 
+#: SQL string literal, honoring BOTH escape conventions ('' and \')
+_STR_LIT = re.compile(r"'(?:[^'\\]|\\.|'')*'")
+
+
+def _mask_literals(text: str) -> tuple[str, dict[str, str]]:
+    """``text`` with each string literal replaced by a placeholder, and
+    the placeholder → literal map that restores them. A masked literal
+    is its own key: ``lits.get(tok)`` is the literal when ``tok`` is
+    exactly one."""
+    lits: dict[str, str] = {}
+
+    def _mark(m: re.Match) -> str:
+        mark = f"\x00{len(lits)}\x00"
+        lits[mark] = m.group(0)
+        return mark
+
+    return _STR_LIT.sub(_mark, text), lits
+
+
+def _unmask_literals(text: str, lits: dict[str, str]) -> str:
+    """Every placeholder of ``_mask_literals`` back to its literal."""
+    return re.sub(r"\x00\d+\x00", lambda m: lits[m.group(0)], text)
+
+
+def _scan_balanced(text: str, open_pos: int) -> int:
+    """Index of the ')' matching the '(' at ``open_pos`` (text must be
+    literal-masked so quotes cannot hide parens); -1 if unbalanced."""
+    depth = 0
+    for i in range(open_pos, len(text)):
+        if text[i] == "(":
+            depth += 1
+        elif text[i] == ")":
+            depth -= 1
+            if depth == 0:
+                return i
+    return -1
+
+
+def _split_top_level(s: str) -> list[str]:
+    """Split on commas at paren-depth 0 (literals are already masked)."""
+    parts, cur, depth = [], [], 0
+    for ch in s:
+        if ch == "(":
+            depth += 1
+        elif ch == ")":
+            depth -= 1
+        if ch == "," and depth == 0:
+            parts.append("".join(cur))
+            cur = []
+        else:
+            cur.append(ch)
+    parts.append("".join(cur))
+    return parts
+
+
 def _take_call_args(sql: str, open_paren: int) -> tuple[list[str], int]:
     """Args of the call whose ``(`` is at ``open_paren`` (top-level
     comma split) and the index just past its ``)``."""
-    depth, i = 1, open_paren + 1
-    while i < len(sql) and depth:
-        if sql[i] == "(":
-            depth += 1
-        elif sql[i] == ")":
-            depth -= 1
-        i += 1
-    if depth:
+    close = _scan_balanced(sql, open_paren)
+    if close < 0:
         raise ValueError("unbalanced parens in macro call")
-    return [a for a in _split_top_level(sql[open_paren + 1:i - 1])], i
+    return _split_top_level(sql[open_paren + 1:close]), close + 1
+
+
+def _rewrite_calls(out: str, rx: str,
+                   build: Callable[[str, re.Match], tuple[str, int]]
+                   ) -> str:
+    """Replace each call ``rx`` finds (the pattern ends at the call's
+    ``(``) with ``build(out, m)``, which returns the replacement and
+    the index just past the call. The search resumes after the
+    replacement, so a call nested in the arguments is not rewritten
+    again inside it."""
+    pattern = re.compile(rx)
+    pos = 0
+    while m := pattern.search(out, pos):
+        repl, end = build(out, m)
+        out = out[:m.start()] + repl + out[end:]
+        pos = m.start() + len(repl)
+    return out
 
 
 def expand_function_macros(sql: str, bucket: str) -> str:
@@ -178,18 +256,7 @@ def expand_function_macros(sql: str, bucket: str) -> str:
     name = m.group(1)
     # mask string literals so a ')' or ',' INSIDE a quoted value can't
     # derail the paren scan / arg split; restored on the final string
-    lits: list[str] = []
-
-    def _mask(mm: re.Match) -> str:
-        lits.append(mm.group(0))
-        return f"\x00{len(lits) - 1}\x00"
-
-    sql = _STR_LIT.sub(_mask, sql)
-
-    def _unmask(s: str) -> str:
-        return re.sub(r"\x00(\d+)\x00",
-                      lambda mm: lits[int(mm.group(1))], s)
-
+    sql, lits = _mask_literals(sql)
     args, after = _take_call_args(sql, m.end() - 1)
     tail = sql[after:].strip()  # "FROM $table WHERE ..." — kept intact
     if not tail.lower().startswith("from"):
@@ -212,10 +279,11 @@ def expand_function_macros(sql: str, bucket: str) -> str:
                  (_split_expr_alias(a) for a in args)]
         inner = ", ".join(f"{e} AS {al}" for e, al in pairs)
         outer = ", ".join(f"{al} / dt AS {al}" for _, al in pairs)
-        return _unmask(f"SELECT t, {outer} FROM ("
-                f"SELECT t, {', '.join(al for _, al in pairs)}, {dt} AS dt"
-                f" FROM (SELECT {bucket} AS t, {inner} {tail}"
-                f" GROUP BY t)) ORDER BY t")
+        return _unmask_literals(
+            f"SELECT t, {outer} FROM ("
+            f"SELECT t, {', '.join(al for _, al in pairs)}, {dt} AS dt"
+            f" FROM (SELECT {bucket} AS t, {inner} {tail}"
+            f" GROUP BY t)) ORDER BY t", lits)
 
     if name == "perSecond":
         pairs = [(e, _check_alias(al)) for e, al in
@@ -227,10 +295,11 @@ def expand_function_macros(sql: str, bucket: str) -> str:
         outer = ", ".join(
             f"CASE WHEN d_{al} < 0 THEN NULL ELSE d_{al} / dt END"
             f" AS {al}PerSecond" for _, al in pairs)
-        return _unmask(f"SELECT t, {outer} FROM ("
-                f"SELECT t, {diffs}, {dt} AS dt"
-                f" FROM (SELECT {bucket} AS t, {inner} {tail}"
-                f" GROUP BY t)) ORDER BY t")
+        return _unmask_literals(
+            f"SELECT t, {outer} FROM ("
+            f"SELECT t, {diffs}, {dt} AS dt"
+            f" FROM (SELECT {bucket} AS t, {inner} {tail}"
+            f" GROUP BY t)) ORDER BY t", lits)
 
     # the *Columns family: args = (key, value)
     if len(args) != 2:
@@ -240,26 +309,29 @@ def expand_function_macros(sql: str, bucket: str) -> str:
     vexpr, val = _split_expr_alias(args[1])
     _check_alias(val)
     if name == "columns":
-        return _unmask(f"SELECT {bucket} AS t, {kexpr} AS {kal}, "
-                f"{vexpr} AS {val} {tail} "
-                f"GROUP BY t, {kal} ORDER BY t, {kal}")
+        return _unmask_literals(
+            f"SELECT {bucket} AS t, {kexpr} AS {kal}, "
+            f"{vexpr} AS {val} {tail} "
+            f"GROUP BY t, {kal} ORDER BY t, {kal}", lits)
     pdt = ("(unix_timestamp(t) - unix_timestamp("
            f"lag(t) OVER (PARTITION BY {kal} ORDER BY t)))")
     if name == "rateColumns":
-        return _unmask(f"SELECT t, {kal}, {val} / dt AS {val} FROM ("
-                f"SELECT t, {kal}, {val}, {pdt} AS dt"
-                f" FROM (SELECT {bucket} AS t, {kexpr} AS {kal},"
-                f" {vexpr} AS {val} {tail} GROUP BY t, {kal}))"
-                f" ORDER BY t, {kal}")
-    # perSecondColumns
-    return _unmask(f"SELECT t, {kal}, CASE WHEN d < 0 THEN NULL"
-            f" ELSE d / dt END AS {val}PerSecond FROM ("
-            f"SELECT t, {kal},"
-            f" ({val} - lag({val}) OVER (PARTITION BY {kal} ORDER BY t))"
-            f" AS d, {pdt} AS dt"
+        return _unmask_literals(
+            f"SELECT t, {kal}, {val} / dt AS {val} FROM ("
+            f"SELECT t, {kal}, {val}, {pdt} AS dt"
             f" FROM (SELECT {bucket} AS t, {kexpr} AS {kal},"
-            f" max({vexpr}) AS {val} {tail} GROUP BY t, {kal}))"
-            f" ORDER BY t, {kal}")
+            f" {vexpr} AS {val} {tail} GROUP BY t, {kal}))"
+            f" ORDER BY t, {kal}", lits)
+    # perSecondColumns
+    return _unmask_literals(
+        f"SELECT t, {kal}, CASE WHEN d < 0 THEN NULL"
+        f" ELSE d / dt END AS {val}PerSecond FROM ("
+        f"SELECT t, {kal},"
+        f" ({val} - lag({val}) OVER (PARTITION BY {kal} ORDER BY t))"
+        f" AS d, {pdt} AS dt"
+        f" FROM (SELECT {bucket} AS t, {kexpr} AS {kal},"
+        f" max({vexpr}) AS {val} {tail} GROUP BY t, {kal}))"
+        f" ORDER BY t, {kal}", lits)
 
 
 def _expand_conditional_test(sql: str, template_vars: dict) -> str:
@@ -272,13 +344,7 @@ def _expand_conditional_test(sql: str, template_vars: dict) -> str:
     and is left untouched.
     """
     while True:
-        lits: list[str] = []
-
-        def _mask(mm: re.Match) -> str:
-            lits.append(mm.group(0))
-            return f"\x00{len(lits) - 1}\x00"
-
-        masked = _STR_LIT.sub(_mask, sql)
+        masked, lits = _mask_literals(sql)
         # the loop exit MUST test the MASKED text: a raw-sql search
         # finds in-literal occurrences that masking then hides, which
         # crashed here on m2=None
@@ -296,12 +362,8 @@ def _expand_conditional_test(sql: str, template_vars: dict) -> str:
         val = template_vars.get(var[1:])
         body = ",".join(args[:-1]).strip() if val not in (
             None, "", [], ()) else ""
-
-        def _unmask(s: str) -> str:
-            return re.sub(r"\x00(\d+)\x00",
-                          lambda mm: lits[int(mm.group(1))], s)
-
-        sql = _unmask(masked[:m2.start()] + body + masked[after:])
+        sql = _unmask_literals(
+            masked[:m2.start()] + body + masked[after:], lits)
 
 
 #: ClickHouse ``PARTITION BY toYYYYMMDD(date_col)`` — the DDL tells the
@@ -397,13 +459,7 @@ def expand_macros(sql: str, table: str, time_col: str = "logdatetime",
     # template-var substitution above intentionally runs UNMASKED —
     # Grafana core substitutes '$var' inside quoted literals too, and
     # dashboards rely on it ('... WHERE etype = ''$etype''').
-    lits: list[str] = []
-
-    def _mask(mm: re.Match) -> str:
-        lits.append(mm.group(0))
-        return f"\x00{len(lits) - 1}\x00"
-
-    sql = _STR_LIT.sub(_mask, sql)
+    sql, lits = _mask_literals(sql)
 
     # $timeFilterByColumn(col) — identifier-validated, same bounds
     # translation as $timeFilter but on the named column
@@ -453,15 +509,11 @@ def expand_macros(sql: str, table: str, time_col: str = "logdatetime",
         if not time_to:
             raise ValueError("$to used without time_to")
         out = re.sub(r"\$to\b", str(_epoch_s(time_to)), out)
-    out = re.sub(r"\x00(\d+)\x00", lambda mm: lits[int(mm.group(1))], out)
+    out = _unmask_literals(out, lits)
     # $adhoc expands after unmasking, LAST: its quoted filter VALUES
     # are user data and were never exposed to the substitutions above
     out = out.replace("$adhoc", adhoc_predicate(adhoc_filters))
     return rewrite_aggregates(out)
-
-
-#: SQL string literal, honoring BOTH escape conventions ('' and \')
-_STR_LIT = re.compile(r"'(?:[^'\\]|\\.|'')*'")
 
 
 #: ClickHouse scalar WITH — ``WITH <expr> AS <name>[, ...] SELECT …``
@@ -503,35 +555,13 @@ def rewrite_scalar_with(query: str) -> str:
                 f"WITH {expr.strip()!r}: scalar-WITH expressions must "
                 f"be constants — subqueries belong in a standard CTE")
         binds[sm.group("name")] = expr.strip()
-    body = m.group("body")
-    lits: list[str] = []
-
-    def _mask(mm: re.Match) -> str:
-        lits.append(mm.group(0))
-        return f"\x00{len(lits) - 1}\x00"
-
-    body = _STR_LIT.sub(_mask, body)
+    body, lits = _mask_literals(m.group("body"))
     for name, expr in binds.items():
         # (?<!\.) keeps qualified references (t.k) pointing at the
         # COLUMN, as ClickHouse resolves them — only bare identifiers
         # are the named constant
         body = re.sub(rf"(?<!\.)\b{name}\b", f"({expr})", body)
-    return re.sub(r"\x00(\d+)\x00", lambda mm: lits[int(mm.group(1))],
-                  body)
-
-
-def _scan_balanced(text: str, open_pos: int) -> int:
-    """Index of the ')' matching the '(' at ``open_pos`` (text must be
-    literal-masked so quotes cannot hide parens); -1 if unbalanced."""
-    depth = 0
-    for i in range(open_pos, len(text)):
-        if text[i] == "(":
-            depth += 1
-        elif text[i] == ")":
-            depth -= 1
-            if depth == 0:
-                return i
-    return -1
+    return _unmask_literals(body, lits)
 
 
 #: trailing ORDER BY of an inner subquery: bare-identifier keys only,
@@ -578,13 +608,7 @@ def rewrite_group_array(query: str) -> str:
     if not re.search(r"\b(groupArray|deltaSum|any(?:Last)?If\s*\(|"
                      r"anyLast\s*\()", query):
         return query
-    lits: list[str] = []
-
-    def _mask(m: re.Match) -> str:
-        lits.append(m.group(0))
-        return f"\x00{len(lits) - 1}\x00"
-
-    out = _STR_LIT.sub(_mask, query)
+    out, lits = _mask_literals(query)
     if not re.search(r"\b(groupArray|deltaSum|any(?:Last)?If\s*\(|"
                      r"anyLast\s*\()", out):
         return query  # only string DATA mentions it — untouched
@@ -657,8 +681,7 @@ def rewrite_group_array(query: str) -> str:
         r"sort_array(collect_list(\1), false)", out)
     if not re.search(r"\b(groupArray(?:MovingSum|MovingAvg)?|deltaSum"
                      r"|anyLast(?:If)?|anyIf)\s*\(", out):
-        return re.sub(r"\x00(\d+)\x00",
-                      lambda m: lits[int(m.group(1))], out)
+        return _unmask_literals(out, lits)
     # collect the ORDER BY key lists of all immediate FROM/JOIN (…)
     # blocks. EVERY such subquery must be sorted with the SAME key
     # list (ADVICE r10): with several subqueries, only one of them
@@ -848,8 +871,7 @@ def rewrite_group_array(query: str) -> str:
                 f"CAST(__de.__v AS DOUBLE) AS __dp) END, "
                 f"__df -> __df.__ds)")
         pos = close + 1
-    out = "".join(pieces)
-    return re.sub(r"\x00(\d+)\x00", lambda m: lits[int(m.group(1))], out)
+    return _unmask_literals("".join(pieces), lits)
 
 
 def rewrite_aggregates(out: str) -> str:
@@ -863,14 +885,7 @@ def rewrite_aggregates(out: str) -> str:
     values), and masking also makes the paren/comma scanning immune to
     quote-escape conventions.
     """
-    out = rewrite_group_array(out)
-    lits: list[str] = []
-
-    def _mask(m: re.Match) -> str:
-        lits.append(m.group(0))
-        return f"\x00{len(lits) - 1}\x00"
-
-    out = _STR_LIT.sub(_mask, out)
+    out, lits = _mask_literals(rewrite_group_array(out))
     # ClickHouse's zero-arg count() — Spark requires an argument.
     # IGNORECASE: CH resolves standard aggregates case-insensitively,
     # so a reference-era COUNT() must rewrite too.
@@ -1003,8 +1018,7 @@ def rewrite_aggregates(out: str) -> str:
     out = _default_quantile_fraction(out)
     out = _rewrite_if_combinators(out)
     out = _rewrite_multi_if(out)
-    out = _rewrite_array_lambdas(out)
-    return re.sub(r"\x00(\d+)\x00", lambda m: lits[int(m.group(1))], out)
+    return _unmask_literals(_rewrite_array_lambdas(out), lits)
 
 
 def _rewrite_retention(out: str) -> str:
@@ -1020,12 +1034,7 @@ def _rewrite_retention(out: str) -> str:
     — one partial-aggregatable shuffle, zero Python (the operator
     form is operators/funnel.retention; this is its SQL spelling).
     2-32 conditions like CH."""
-    rx = re.compile(r"\bretention\s*\(")
-    pos = 0
-    while True:
-        m = rx.search(out, pos)
-        if not m:
-            return out
+    def build(out: str, m: re.Match) -> tuple[str, int]:
         args, end = _take_call_args(out, m.end() - 1)
         if not 2 <= len(args) <= 32:
             raise ValueError(f"retention takes 2-32 conditions, "
@@ -1035,8 +1044,9 @@ def _rewrite_retention(out: str) -> str:
         elems = [f"CAST({flags[0]} AS INT)"] + [
             f"CAST({flags[0]} * {f} AS INT)" for f in flags[1:]]
         repl = f"array({', '.join(elems)})"
-        out = out[:m.start()] + repl + out[end:]
-        pos = m.start() + len(repl)
+        return repl, end
+
+    return _rewrite_calls(out, r"\bretention\s*\(", build)
 
 
 def _rewrite_quantile_weighted(out: str) -> str:
@@ -1057,13 +1067,7 @@ def _rewrite_quantile_weighted(out: str) -> str:
     policy); an empty group yields NULL. One partial-aggregatable
     shuffle; literal p only (the topK policy); default p = 0.5.
     """
-    rx = re.compile(r"\b(quantileExactWeighted|medianExactWeighted)"
-                    r"\s*\(")
-    pos = 0
-    while True:
-        m = rx.search(out, pos)
-        if not m:
-            return out
+    def build(out: str, m: re.Match) -> tuple[str, int]:
         first, after = _take_call_args(out, m.end() - 1)
         if m.group(1) == "quantileExactWeighted" \
                 and out[after:].lstrip().startswith("("):
@@ -1099,8 +1103,10 @@ def _rewrite_quantile_weighted(out: str) -> str:
             f"__qa ELSE struct(__qa.r + __qe.w AS r, "
             f"CASE WHEN __qa.r + __qe.w >= __qt THEN __qe.v END "
             f"AS res) END, __qf -> __qf.res)), 1)")
-        out = out[:m.start()] + repl + out[end:]
-        pos = m.start() + len(repl)
+        return repl, end
+
+    return _rewrite_calls(
+        out, r"\b(quantileExactWeighted|medianExactWeighted)\s*\(", build)
 
 
 #: arrayReduce aggregate names with deterministic, NULL-skipping
@@ -1122,7 +1128,7 @@ _ARRAY_REDUCE = {
 }
 
 
-def _rewrite_array_reduce(out: str, lits: list[str]) -> str:
+def _rewrite_array_reduce(out: str, lits: dict[str, str]) -> str:
     """ClickHouse ``arrayReduce('agg', arr)`` (round 13): apply an
     aggregate function to array elements as a SCALAR expression. Only
     the deterministic NULL-skipping folds map (min/max/sum/avg/count/
@@ -1130,12 +1136,7 @@ def _rewrite_array_reduce(out: str, lits: list[str]) -> str:
     implementation-dependent aggregates (any, groupArray, uniq's HLL
     estimate) are refused loudly. Multi-array and -If forms are out
     of scope — refused by the single-argument check."""
-    rx = re.compile(r"\barrayReduce\s*\(")
-    pos = 0
-    while True:
-        m = rx.search(out, pos)
-        if not m:
-            return out
+    def build(out: str, m: re.Match) -> tuple[str, int]:
         args, end = _take_call_args(out, m.end() - 1)
         if len(args) != 2:
             raise ValueError(
@@ -1153,8 +1154,9 @@ def _rewrite_array_reduce(out: str, lits: list[str]) -> str:
                 f"estimator aggregates cannot be replayed "
                 f"value-exactly)")
         repl = "(" + tmpl.format(a=f"({args[1].strip()})") + ")"
-        out = out[:m.start()] + repl + out[end:]
-        pos = m.start() + len(repl)
+        return repl, end
+
+    return _rewrite_calls(out, r"\barrayReduce\s*\(", build)
 
 
 def _rewrite_entropy_intervals(out: str) -> str:
@@ -1174,12 +1176,7 @@ def _rewrite_entropy_intervals(out: str) -> str:
       zero measure either way). Values compute as DOUBLE; rows with
       NULL or inverted bounds (e < s) are skipped like CH.
     """
-    rx = re.compile(r"\bentropy\s*\(")
-    pos = 0
-    while True:
-        m = rx.search(out, pos)
-        if not m:
-            break
+    def entropy(out: str, m: re.Match) -> tuple[str, int]:
         args, end = _take_call_args(out, m.end() - 1)
         if len(args) != 1:
             raise ValueError(f"entropy(x): need exactly 1 argument, "
@@ -1196,8 +1193,10 @@ def _rewrite_entropy_intervals(out: str) -> str:
             f"0.0 - aggregate(__eh, CAST(0 AS DOUBLE), "
             f"(__ea, __ee) -> __ea + (__ee.c / __en) "
             f"* log2(__ee.c / __en)))[0])[0]")
-        out = out[:m.start()] + repl + out[end:]
-        pos = m.start() + len(repl)
+        return repl, end
+
+    out = _rewrite_calls(out, r"\bentropy\s*\(", entropy)
+
     # maxIntersections / maxIntersectionsPosition (round 13): the
     # peak number of simultaneously-open [s, e) intervals, and the
     # position where that peak is FIRST reached. The sweep sorts
@@ -1205,12 +1204,7 @@ def _rewrite_entropy_intervals(out: str) -> str:
     # positions — CH's ordering, which makes touching intervals
     # non-overlapping (half-open semantics) — then folds a running
     # sum tracking (max, argmax-first).
-    rx = re.compile(r"\bmaxIntersections(Position)?\s*\(")
-    pos = 0
-    while True:
-        m = rx.search(out, pos)
-        if not m:
-            break
+    def max_intersections(out: str, m: re.Match) -> tuple[str, int]:
         want_pos = m.group(1) is not None
         args, end = _take_call_args(out, m.end() - 1)
         if len(args) != 2:
@@ -1237,14 +1231,12 @@ def _rewrite_entropy_intervals(out: str) -> str:
                 f"(__ma, __me) -> {step}, "
                 f"__mf -> {'__mf.mp' if want_pos else '__mf.mx'})")
         repl = fold if want_pos else f"CAST({fold} AS BIGINT)"
-        out = out[:m.start()] + repl + out[end:]
-        pos = m.start() + len(repl)
-    rx = re.compile(r"\bintervalLengthSum\s*\(")
-    pos = 0
-    while True:
-        m = rx.search(out, pos)
-        if not m:
-            return out
+        return repl, end
+
+    out = _rewrite_calls(out, r"\bmaxIntersections(Position)?\s*\(",
+                         max_intersections)
+
+    def interval_length_sum(out: str, m: re.Match) -> tuple[str, int]:
         args, end = _take_call_args(out, m.end() - 1)
         if len(args) != 2:
             raise ValueError(f"intervalLengthSum(start, end): need "
@@ -1273,11 +1265,13 @@ def _rewrite_entropy_intervals(out: str) -> str:
             f"(__ia, __ie) -> {step}, "
             f"__if -> __if.t + coalesce(__if.en - __if.st, "
             f"CAST(0 AS DOUBLE)))")
-        out = out[:m.start()] + repl + out[end:]
-        pos = m.start() + len(repl)
+        return repl, end
+
+    return _rewrite_calls(out, r"\bintervalLengthSum\s*\(",
+                          interval_length_sum)
 
 
-def _rewrite_sequence_next_node(out: str, lits: list[str]) -> str:
+def _rewrite_sequence_next_node(out: str, lits: dict[str, str]) -> str:
     """ClickHouse ``sequenceNextNode(direction, base)(ts, value,
     base_cond, cond1, …, condN)`` (round 13) — the next-page
     attribution aggregate: the value of the event FOLLOWING a chain
@@ -1299,12 +1293,7 @@ def _rewrite_sequence_next_node(out: str, lits: list[str]) -> str:
     start+N in scan order, NULL when the anchored chain has no
     following event. One sorted collect per group, O(events × N)
     index scan — all codegen expressions."""
-    rx = re.compile(r"\bsequenceNextNode\s*\(")
-    pos = 0
-    while True:
-        m = rx.search(out, pos)
-        if not m:
-            return out
+    def build(out: str, m: re.Match) -> tuple[str, int]:
         params, after = _take_call_args(out, m.end() - 1)
         if len(params) != 2 \
                 or not out[after:].lstrip().startswith("("):
@@ -1314,8 +1303,7 @@ def _rewrite_sequence_next_node(out: str, lits: list[str]) -> str:
                 "base_cond, cond1, …)")
         def _p(tok: str) -> str:
             t = tok.strip()  # CH accepts bare keywords; quoted forms
-            mm = re.fullmatch(r"\x00(\d+)\x00", t)  # arrive masked
-            return lits[int(mm.group(1))][1:-1] if mm else t
+            return lits[t][1:-1] if t in lits else t  # arrive masked
 
         direction, base = _p(params[0]), _p(params[1])
         if direction not in ("forward", "backward"):
@@ -1375,8 +1363,9 @@ def _rewrite_sequence_next_node(out: str, lits: list[str]) -> str:
             f"CASE WHEN __sp IS NOT NULL "
             f"AND __sp + {n} < size(__sa) "
             f"THEN __sa[__sp + {n}].v END)[0] END)[0]")
-        out = out[:m.start()] + repl + out[end:]
-        pos = m.start() + len(repl)
+        return repl, end
+
+    return _rewrite_calls(out, r"\bsequenceNextNode\s*\(", build)
 
 
 def _rewrite_shape_stats(out: str) -> str:
@@ -1415,15 +1404,15 @@ def _rewrite_shape_stats(out: str) -> str:
     return out
 
 
-def _unmask_literal(tok: str, lits: list[str], what: str) -> str:
+def _unmask_literal(tok: str, lits: dict[str, str], what: str) -> str:
     """A masked string-literal token back to its unquoted text (the
     behavioral rewrites run on masked SQL, so parameters like funnel
-    modes and sequence patterns arrive as \\x00k\\x00 markers)."""
-    m = re.fullmatch(r"\x00(\d+)\x00", tok.strip())
-    if not m:
+    modes and sequence patterns arrive masked)."""
+    lit = lits.get(tok.strip())
+    if lit is None:
         raise ValueError(f"{what} must be a string literal, "
                          f"got {tok.strip()!r}")
-    return lits[int(m.group(1))][1:-1]
+    return lit[1:-1]
 
 
 def _require_exclusive_conds(fn: str, conds: list[str]) -> None:
@@ -1440,8 +1429,8 @@ def _require_exclusive_conds(fn: str, conds: list[str]) -> None:
     operators/funnel evaluates conditions independently."""
     seen: dict = {}
     for i, c in enumerate(conds, 1):
-        # string literals are masked (\x00k\x00) when the rewrites
-        # run, so whitespace-insensitive comparison is safe
+        # string literals are masked when the rewrites run, so
+        # whitespace-insensitive comparison is safe
         key = re.sub(r"\s+", "", c)
         if key in seen:
             raise ValueError(
@@ -1457,7 +1446,7 @@ def _require_exclusive_conds(fn: str, conds: list[str]) -> None:
         seen[key] = i
 
 
-def _rewrite_window_funnel(out: str, lits: list[str]) -> str:
+def _rewrite_window_funnel(out: str, lits: dict[str, str]) -> str:
     """ClickHouse ``windowFunnel(window[, 'mode'…])(ts, c1, …, cN)``
     (round 13 — the verbatim dashboard spelling, previously a
     pointer-refusal): per-group funnel level as ONE ``aggregate()``
@@ -1484,12 +1473,7 @@ def _rewrite_window_funnel(out: str, lits: list[str]) -> str:
         _FUNNEL_MODES,
     )
 
-    rx = re.compile(r"\bwindowFunnel\s*\(")
-    pos = 0
-    while True:
-        m = rx.search(out, pos)
-        if not m:
-            return out
+    def build(out: str, m: re.Match) -> tuple[str, int]:
         params, after = _take_call_args(out, m.end() - 1)
         if not out[after:].lstrip().startswith("("):
             raise ValueError(
@@ -1524,8 +1508,9 @@ def _rewrite_window_funnel(out: str, lits: list[str]) -> str:
         repl = _funnel_fold_sql(args[0].strip(),
                                 [a.strip() for a in args[1:]],
                                 w_us, modes)
-        out = out[:m.start()] + repl + out[end:]
-        pos = m.start() + len(repl)
+        return repl, end
+
+    return _rewrite_calls(out, r"\bwindowFunnel\s*\(", build)
 
 
 def _funnel_fold_sql(tsx: str, conds: list[str], w_us: int,
@@ -1691,7 +1676,7 @@ def _sequence_nfa_sql(tsx: str, conds: list[str],
             f"__nf -> __nf.p{mlen})")
 
 
-def _rewrite_sequence_calls(out: str, lits: list[str]) -> str:
+def _rewrite_sequence_calls(out: str, lits: dict[str, str]) -> str:
     """ClickHouse ``sequenceMatch('pat')(ts, c1, …)`` /
     ``sequenceCount('pat')(ts, c1, …)`` (round 13 — the verbatim
     spellings): patterns WITHOUT time constraints rebuild the label
@@ -1707,12 +1692,7 @@ def _rewrite_sequence_calls(out: str, lits: list[str]) -> str:
         translate_sequence_pattern,
     )
 
-    rx = re.compile(r"\b(sequenceMatch|sequenceCount)\s*\(")
-    pos = 0
-    while True:
-        m = rx.search(out, pos)
-        if not m:
-            return out
+    def build(out: str, m: re.Match) -> tuple[str, int]:
         fn = m.group(1)
         params, after = _take_call_args(out, m.end() - 1)
         if len(params) != 1:
@@ -1754,8 +1734,10 @@ def _rewrite_sequence_calls(out: str, lits: list[str]) -> str:
                         f"'{regex}', 0)) AS BIGINT)")
             else:
                 repl = f"({seq} RLIKE '{regex}')"
-        out = out[:m.start()] + repl + out[end:]
-        pos = m.start() + len(repl)
+        return repl, end
+
+    return _rewrite_calls(out, r"\b(sequenceMatch|sequenceCount)\s*\(",
+                          build)
 
 
 #: KMV sketch size for the uniqState/uniqMerge SQL spelling — MUST
@@ -1913,12 +1895,7 @@ def _rewrite_state_merge(out: str) -> str:
         return f"transform({ranked}, __ts -> {emit})"
 
     for name in ("topKState", "topKMerge"):
-        rx = re.compile(rf"\b{name}\s*\(")
-        pos = 0
-        while True:
-            m = rx.search(out, pos)
-            if not m:
-                break
+        def topk(out: str, m: re.Match) -> tuple[str, int]:
             first, after = _take_call_args(out, m.end() - 1)
             if not out[after:].lstrip().startswith("(") \
                     or len(first) != 1 \
@@ -1946,17 +1923,13 @@ def _rewrite_state_merge(out: str) -> str:
                     f"__tp -> __tp.v = __tv), CAST(0 AS BIGINT), "
                     f"(__ta, __tp) -> __ta + __tp.c)))")
                 repl = _topk_rank(resummed, n, "__ts.v")
-            out = out[:m.start()] + repl + out[end:]
-            pos = m.start() + len(repl)
+            return repl, end
+
+        out = _rewrite_calls(out, rf"\b{name}\s*\(", topk)
 
     # quantileState(x): refuse the parametric (p)(x) form loudly (the
     # level belongs to quantileMerge, like CH)
-    rx = re.compile(r"\bquantileState\s*\(")
-    pos = 0
-    while True:
-        m = rx.search(out, pos)
-        if not m:
-            break
+    def quantile_state(out: str, m: re.Match) -> tuple[str, int]:
         args, end = _take_call_args(out, m.end() - 1)
         if out[end:].lstrip().startswith("("):
             raise ValueError(
@@ -1968,14 +1941,11 @@ def _rewrite_state_merge(out: str) -> str:
         x = args[0].strip()
         repl = _runlength_hist(
             f"sort_array(collect_list(CAST(({x}) AS DOUBLE)))")
-        out = out[:m.start()] + repl + out[end:]
-        pos = m.start() + len(repl)
-    rx = re.compile(r"\bquantileMerge\s*\(")
-    pos = 0
-    while True:
-        m = rx.search(out, pos)
-        if not m:
-            break
+        return repl, end
+
+    out = _rewrite_calls(out, r"\bquantileState\s*\(", quantile_state)
+
+    def quantile_merge(out: str, m: re.Match) -> tuple[str, int]:
         first, after = _take_call_args(out, m.end() - 1)
         if not out[after:].lstrip().startswith("("):
             raise ValueError(
@@ -2007,9 +1977,9 @@ def _rewrite_state_merge(out: str) -> str:
             f"__qa ELSE named_struct('r', __qa.r + __qe.c, "
             f"'res', CASE WHEN __qa.r + __qe.c >= __qt "
             f"THEN __qe.v END) END, __qf -> __qf.res)), 1)")
-        out = out[:m.start()] + repl + out[end:]
-        pos = m.start() + len(repl)
-    return out
+        return repl, end
+
+    return _rewrite_calls(out, r"\bquantileMerge\s*\(", quantile_merge)
 
 
 def _rewrite_histogram(out: str) -> str:
@@ -2029,12 +1999,7 @@ def _rewrite_histogram(out: str) -> str:
     bit-for-bit. One collect per group, O(N × group) projection (the
     sumMap hot-group bound); N is a literal 1-256.
     """
-    rx = re.compile(r"\bhistogram\s*\(")
-    pos = 0
-    while True:
-        m = rx.search(out, pos)
-        if not m:
-            return out
+    def build(out: str, m: re.Match) -> tuple[str, int]:
         first, after = _take_call_args(out, m.end() - 1)
         if not out[after:].lstrip().startswith("("):
             raise ValueError("histogram needs the parametric form "
@@ -2063,8 +2028,9 @@ def _rewrite_histogram(out: str) -> str:
                 f"'hi', {mn} + (__hi + 1) * {width}, "
                 f"'h', CAST(size(filter({lst}, "
                 f"__hv -> {bin_of} = __hi)) AS DOUBLE)))")
-        out = out[:m.start()] + repl + out[end:]
-        pos = m.start() + len(repl)
+        return repl, end
+
+    return _rewrite_calls(out, r"\bhistogram\s*\(", build)
 
 
 #: the Map-combinator aggregates (round 12) and their per-key folds
@@ -2104,12 +2070,7 @@ def _rewrite_map_aggs(out: str) -> str:
     a value-gated oracle can replay. Filter ``v != 0`` on the result
     array to reproduce CH's drop.
     """
-    rx = re.compile(r"\b(sumMapFiltered|sumMap|minMap|maxMap)\s*\(")
-    pos = 0
-    while True:
-        m = rx.search(out, pos)
-        if not m:
-            return out
+    def build(out: str, m: re.Match) -> tuple[str, int]:
         fn = m.group(1)
         args, end = _take_call_args(out, m.end() - 1)
         keep = None
@@ -2142,8 +2103,10 @@ def _rewrite_map_aggs(out: str) -> str:
             f"transform({keys}, __mm -> struct(__mm AS k, "
             f"aggregate(filter({lst}, __me -> __me.k <=> __mm), "
             f"{init}, (__ma, __me) -> {step}) AS v))")
-        out = out[:m.start()] + repl + out[end:]
-        pos = m.start() + len(repl)
+        return repl, end
+
+    return _rewrite_calls(
+        out, r"\b(sumMapFiltered|sumMap|minMap|maxMap)\s*\(", build)
 
 
 def _rewrite_array_scalars(out: str) -> str:
@@ -2184,19 +2147,15 @@ def _rewrite_array_scalars(out: str) -> str:
          "CASE WHEN size({a}) > 0 THEN sequence(1, size({a})) "
          "ELSE array() END"),
     ):
-        rx = re.compile(rf"\b{name}\s*\(")
-        pos = 0
-        while True:
-            m = rx.search(out, pos)
-            if not m:
-                break
+        def build(out: str, m: re.Match) -> tuple[str, int]:
             args, end = _take_call_args(out, m.end() - 1)
             if len(args) != 1:
                 raise ValueError(f"{name}(a): need exactly 1 "
                                  f"argument, got {len(args)}")
             repl = tmpl.format(a=args[0].strip())
-            out = out[:m.start()] + repl + out[end:]
-            pos = m.start() + len(repl)
+            return repl, end
+
+        out = _rewrite_calls(out, rf"\b{name}\s*\(", build)
     return out
 
 
@@ -2242,12 +2201,8 @@ def _rewrite_topk(out: str) -> str:
             "topKWeighted/topKWeightedIf are rewritten — further "
             "combinators (Merge/State spellings) are not mapped; "
             "use the rollup API in plans/agg_rollup.py for states")
-    rx = re.compile(r"\btopK(WeightedIf|Weighted|If)?\s*\(")
-    pos = 0
-    while True:
-        m = rx.search(out, pos)
-        if not m:
-            break
+
+    def build(out: str, m: re.Match) -> tuple[str, int]:
         kind = m.group(1) or ""
         first, after = _take_call_args(out, m.end() - 1)
         if out[after:].lstrip().startswith("("):
@@ -2288,9 +2243,7 @@ def _rewrite_topk(out: str) -> str:
                 f"__twv), CAST(0 AS DOUBLE), "
                 f"(__twa, __twe) -> __twa + __twe.w) AS ns, "
                 f"__twv AS val))), 1, {n}), __tws -> __tws.val)")
-            out = out[:m.start()] + repl + out[end:]
-            pos = m.start() + len(repl)
-            continue
+            return repl, end
         if kind == "If":
             if len(args) != 2:
                 raise ValueError("topKIf(n)(x, cond): need exactly "
@@ -2307,9 +2260,10 @@ def _rewrite_topk(out: str) -> str:
             f"array_distinct({lst}), __tkv -> struct("
             f"-size(filter({lst}, __tke -> __tke <=> __tkv)) AS nc, "
             f"__tkv AS val))), 1, {n}), __tks -> __tks.val)")
-        out = out[:m.start()] + repl + out[end:]
-        pos = m.start() + len(repl)
-    return out
+        return repl, end
+
+    return _rewrite_calls(out, r"\btopK(WeightedIf|Weighted|If)?\s*\(",
+                          build)
 
 
 def _rewrite_quantile_if(out: str) -> str:
@@ -2322,12 +2276,7 @@ def _rewrite_quantile_if(out: str) -> str:
     group) nor the quantile token renames (the If suffix blocks the
     ``name(`` match), so without this they'd leak the CH name into
     Spark's parser. Runs on literal-masked text."""
-    rx = re.compile(r"\bquantile(Exact)?If\s*\(")
-    pos = 0
-    while True:
-        m = rx.search(out, pos)
-        if not m:
-            break
+    def build(out: str, m: re.Match) -> tuple[str, int]:
         fn = "percentile" if m.group(1) else "percentile_approx"
         first, after = _take_call_args(out, m.end() - 1)
         if out[after:].lstrip().startswith("("):
@@ -2345,9 +2294,9 @@ def _rewrite_quantile_if(out: str) -> str:
                 f"quantile{m.group(1) or ''}If(p)(x, cond): need "
                 f"exactly 2 arguments, got {len(args)}")
         repl = f"{fn}(if({args[1]}, {args[0]}, NULL), {p})"
-        out = out[:m.start()] + repl + out[end:]
-        pos = m.start() + len(repl)
-    return out
+        return repl, end
+
+    return _rewrite_calls(out, r"\bquantile(Exact)?If\s*\(", build)
 
 
 def _rewrite_avg_weighted(out: str) -> str:
@@ -2361,11 +2310,7 @@ def _rewrite_avg_weighted(out: str) -> str:
     semantics (NULL), where CH returns NaN — a DOCUMENTED deviation
     (NaN poisons downstream Spark aggregates; both render as empty
     in Grafana)."""
-    pos = 0
-    while True:
-        m = re.compile(r"\bavgWeighted\s*\(").search(out, pos)
-        if not m:
-            break
+    def build(out: str, m: re.Match) -> tuple[str, int]:
         args, end = _take_call_args(out, m.end() - 1)
         if len(args) != 2:
             raise ValueError("avgWeighted(x, w): need exactly 2 "
@@ -2375,9 +2320,9 @@ def _rewrite_avg_weighted(out: str) -> str:
         repl = (f"(sum(CASE WHEN {both} THEN ({x}) * ({w}) END) / "
                 f"sum(CASE WHEN {both} THEN CAST(({w}) AS DOUBLE) "
                 f"END))")
-        out = out[:m.start()] + repl + out[end:]
-        pos = m.start() + len(repl)
-    return out
+        return repl, end
+
+    return _rewrite_calls(out, r"\bavgWeighted\s*\(", build)
 
 
 def _rewrite_bounding_ratio(out: str) -> str:
@@ -2394,11 +2339,7 @@ def _rewrite_bounding_ratio(out: str) -> str:
     single-point group divides 0 by 0: NULL under Spark/DuckDB
     double semantics, where CH returns NaN (the avgWeighted
     deviation policy). Runs on literal-masked text."""
-    pos = 0
-    while True:
-        m = re.compile(r"\bboundingRatio\s*\(").search(out, pos)
-        if not m:
-            break
+    def build(out: str, m: re.Match) -> tuple[str, int]:
         args, end = _take_call_args(out, m.end() - 1)
         if len(args) != 2:
             raise ValueError("boundingRatio(x, y): need exactly 2 "
@@ -2410,9 +2351,9 @@ def _rewrite_bounding_ratio(out: str) -> str:
         xv = f"CASE WHEN {b} THEN CAST(({x}) AS DOUBLE) END"
         repl = (f"((max_by({yv}, {pt}) - min_by({yv}, {pt})) / "
                 f"nullif(max({xv}) - min({xv}), CAST(0 AS DOUBLE)))")
-        out = out[:m.start()] + repl + out[end:]
-        pos = m.start() + len(repl)
-    return out
+        return repl, end
+
+    return _rewrite_calls(out, r"\bboundingRatio\s*\(", build)
 
 
 #: nonNegativeDerivative's third argument: a fixed-length INTERVAL
@@ -2436,12 +2377,7 @@ def _rewrite_nonneg_derivative(out: str) -> str:
     through untouched; a named-window reference (``OVER w``) is
     refused loudly rather than guessing the window text. Runs on
     literal-masked text."""
-    pos = 0
-    while True:
-        m = re.compile(r"\bnonNegativeDerivative\s*\(").search(
-            out, pos)
-        if not m:
-            break
+    def build(out: str, m: re.Match) -> tuple[str, int]:
         args, end = _take_call_args(out, m.end() - 1)
         if len(args) not in (2, 3):
             raise ValueError(
@@ -2478,9 +2414,9 @@ def _rewrite_nonneg_derivative(out: str) -> str:
         repl = (f"greatest(CAST(0 AS DOUBLE), coalesce("
                 f"{dv} * {scale} / nullif({dt}, CAST(0 AS DOUBLE)), "
                 f"CAST(0 AS DOUBLE)))")
-        out = out[:m.start()] + repl + out[end + ov_end:]
-        pos = m.start() + len(repl)
-    return out
+        return repl, end + ov_end
+
+    return _rewrite_calls(out, r"\bnonNegativeDerivative\s*\(", build)
 
 
 def _assoc_hist(vals: str, tag: str) -> str:
@@ -2527,13 +2463,7 @@ def _rewrite_assoc_stats(out: str) -> str:
     deviation policy, every denominator nullif-guarded because
     Spark's ANSI mode makes 0/0 an error, not NaN. Runs on
     literal-masked text."""
-    rx = re.compile(r"\b(cramersVBiasCorrected|cramersV|theilsU"
-                    r"|contingency)\s*\(")
-    pos = 0
-    while True:
-        m = rx.search(out, pos)
-        if not m:
-            break
+    def build(out: str, m: re.Match) -> tuple[str, int]:
         fn = m.group(1)
         args, end = _take_call_args(out, m.end() - 1)
         if len(args) != 2:
@@ -2596,9 +2526,10 @@ def _rewrite_assoc_stats(out: str) -> str:
                 f"transform(array({ah}), __asah -> "
                 f"transform(array({bh}), __asbh -> "
                 f"{body})[0])[0])[0]))[0]")
-        out = out[:m.start()] + repl + out[end:]
-        pos = m.start() + len(repl)
-    return out
+        return repl, end
+
+    return _rewrite_calls(out, r"\b(cramersVBiasCorrected|cramersV|theilsU"
+                               r"|contingency)\s*\(", build)
 
 
 def _rank_array(arr: str, acc: str, tag: str) -> str:
@@ -2844,11 +2775,7 @@ def _rewrite_rank_corr(out: str) -> str:
     contract); groups under 2 points or with a constant side return
     NULL where CH returns NaN (the avgWeighted deviation policy —
     ANSI 0/0 is an error). Runs on literal-masked text."""
-    pos = 0
-    while True:
-        m = re.compile(r"\brankCorr\s*\(").search(out, pos)
-        if not m:
-            break
+    def build(out: str, m: re.Match) -> tuple[str, int]:
         args, end = _take_call_args(out, m.end() - 1)
         if len(args) != 2:
             raise ValueError("rankCorr(x, y): need exactly 2 "
@@ -2883,9 +2810,9 @@ def _rewrite_rank_corr(out: str) -> str:
                 f"transform(array({ryq}), __rcry -> "
                 f"transform(array({scatter}), __rcr2 -> "
                 f"{core})[0])[0])[0])[0]))[0]")
-        out = out[:m.start()] + repl + out[end:]
-        pos = m.start() + len(repl)
-    return out
+        return repl, end
+
+    return _rewrite_calls(out, r"\brankCorr\s*\(", build)
 
 
 def _rewrite_lttb(out: str) -> str:
@@ -2911,12 +2838,7 @@ def _rewrite_lttb(out: str) -> str:
     ``array<struct<x, y>>`` of DOUBLEs — serialize or explode it at
     the SELECT boundary (the driver cannot hash nested columns).
     Runs on literal-masked text."""
-    pos = 0
-    while True:
-        m = re.compile(r"\blargestTriangleThreeBuckets\s*\(").search(
-            out, pos)
-        if not m:
-            break
+    def build(out: str, m: re.Match) -> tuple[str, int]:
         first, after = _take_call_args(out, m.end() - 1)
         if not (len(first) == 1 and first[0].strip().isdigit()):
             raise ValueError(
@@ -2970,9 +2892,10 @@ def _rewrite_lttb(out: str) -> str:
         repl = (f"transform(array({pairs}), __lt -> "
                 f"CASE WHEN size(__lt) <= {nb} THEN __lt "
                 f"ELSE {fold} END)[0]")
-        out = out[:m.start()] + repl + out[end:]
-        pos = m.start() + len(repl)
-    return out
+        return repl, end
+
+    return _rewrite_calls(out, r"\blargestTriangleThreeBuckets\s*\(",
+                          build)
 
 
 def _student_p_sql() -> str:
@@ -3154,13 +3077,7 @@ def _rewrite_stat_tests(out: str) -> str:
     points for t, an empty side or all-tied values for U) return
     NULL fields where CH returns NaN (the avgWeighted deviation
     policy). Runs on literal-masked text."""
-    rx = re.compile(r"\b(studentTTest|welchTTest"
-                    r"|mannWhitneyUTest)\s*\(")
-    pos = 0
-    while True:
-        m = rx.search(out, pos)
-        if not m:
-            break
+    def build(out: str, m: re.Match) -> tuple[str, int]:
         fn = m.group(1)
         args, end = _take_call_args(out, m.end() - 1)
         if out[end:].lstrip().startswith("("):
@@ -3286,9 +3203,10 @@ def _rewrite_stat_tests(out: str) -> str:
                     f"transform(array({ranks}), __mr -> "
                     f"transform(array({ms}), __ms -> "
                     f"{res})[0])[0]))[0]")
-        out = out[:m.start()] + repl + out[end:]
-        pos = m.start() + len(repl)
-    return out
+        return repl, end
+
+    return _rewrite_calls(out, r"\b(studentTTest|welchTTest"
+                               r"|mannWhitneyUTest)\s*\(", build)
 
 
 def _rewrite_quantile_deterministic(out: str) -> str:
@@ -3299,13 +3217,7 @@ def _rewrite_quantile_deterministic(out: str) -> str:
     deterministic by construction — the estimator-upgrade policy
     every rename in this family follows (medianExact, topK). Runs on
     literal-masked text."""
-    rx = re.compile(r"\b(quantilesDeterministic|quantileDeterministic"
-                    r"|medianDeterministic)\s*\(")
-    pos = 0
-    while True:
-        m = rx.search(out, pos)
-        if not m:
-            return out
+    def build(out: str, m: re.Match) -> tuple[str, int]:
         fn = m.group(1)
         first, after = _take_call_args(out, m.end() - 1)
         if fn != "medianDeterministic" and \
@@ -3327,8 +3239,11 @@ def _rewrite_quantile_deterministic(out: str) -> str:
                                  f"expected, got {len(ps)}")
             p = ps[0].strip()
         repl = f"percentile({x}, {p})"
-        out = out[:m.start()] + repl + out[end:]
-        pos = m.start() + len(repl)
+        return repl, end
+
+    return _rewrite_calls(out, r"\b(quantilesDeterministic"
+                               r"|quantileDeterministic"
+                               r"|medianDeterministic)\s*\(", build)
 
 
 #: sparkbar's eight block glyphs, lowest to full.
@@ -3349,11 +3264,7 @@ def _rewrite_sparkbar(out: str) -> str:
     literal (the topK policy). CH leaves its exact glyph scaling
     undocumented, so this DOCUMENTED rendering is the contract — the
     bucket SUMS follow CH exactly. Runs on literal-masked text."""
-    pos = 0
-    while True:
-        m = re.compile(r"\bsparkbar\s*\(").search(out, pos)
-        if not m:
-            return out
+    def build(out: str, m: re.Match) -> tuple[str, int]:
         first, after = _take_call_args(out, m.end() - 1)
         if not (len(first) == 1 and first[0].strip().isdigit()):
             raise ValueError(
@@ -3396,8 +3307,9 @@ def _rewrite_sparkbar(out: str) -> str:
                 f"transform(array({sums}), __sv -> "
                 f"transform(array(array_max(__sv)), __sm -> "
                 f"{bars})[0])[0]))[0]")
-        out = out[:m.start()] + repl + out[end:]
-        pos = m.start() + len(repl)
+        return repl, end
+
+    return _rewrite_calls(out, r"\bsparkbar\s*\(", build)
 
 
 def _default_quantile_fraction(out: str) -> str:
@@ -3422,23 +3334,6 @@ def _default_quantile_fraction(out: str) -> str:
             else:
                 pos = m.end()
     return out
-
-
-def _split_top_level(s: str) -> list[str]:
-    """Split on commas at paren-depth 0 (literals are already masked)."""
-    parts, cur, depth = [], [], 0
-    for ch in s:
-        if ch == "(":
-            depth += 1
-        elif ch == ")":
-            depth -= 1
-        if ch == "," and depth == 0:
-            parts.append("".join(cur))
-            cur = []
-        else:
-            cur.append(ch)
-    parts.append("".join(cur))
-    return parts
 
 
 #: ClickHouse array lambda functions: the lambda comes FIRST
@@ -3468,17 +3363,10 @@ def _rewrite_array_lambdas(out: str) -> str:
             m = re.compile(rf"\b{name}\s*\(").search(out, pos)
             if not m:
                 break
-            depth, i = 1, m.end()
-            while i < len(out) and depth:
-                ch = out[i]
-                if ch == "(":
-                    depth += 1
-                elif ch == ")":
-                    depth -= 1
-                i += 1
+            close = _scan_balanced(out, m.end() - 1)
             args = [a.strip() for a in
-                    _split_top_level(out[m.end():i - 1])]
-            if depth or "->" not in args[0]:
+                    _split_top_level(out[m.end():close])]
+            if close < 0 or "->" not in args[0]:
                 raise ValueError(
                     f"{name}: expected the ClickHouse lambda form "
                     f"{name}(x -> expr, array); the lambda-less and "
@@ -3495,7 +3383,7 @@ def _rewrite_array_lambdas(out: str) -> str:
                 repl = f"size(filter({args[1]}, {lam}))"
             else:
                 repl = f"{target}({args[1]}, {lam})"
-            out = out[:m.start()] + repl + out[i:]
+            out = out[:m.start()] + repl + out[close + 1:]
             pos = m.start()
     return out
 
@@ -3515,16 +3403,9 @@ def _rewrite_multi_if(out: str) -> str:
         m = re.compile(r"\bmultiIf\s*\(").search(out, pos)
         if not m:
             break
-        depth, i = 1, m.end()
-        while i < len(out) and depth:
-            ch = out[i]
-            if ch == "(":
-                depth += 1
-            elif ch == ")":
-                depth -= 1
-            i += 1
-        args = [a.strip() for a in _split_top_level(out[m.end():i - 1])]
-        if depth or len(args) < 3 or len(args) % 2 == 0:
+        close = _scan_balanced(out, m.end() - 1)
+        args = [a.strip() for a in _split_top_level(out[m.end():close])]
+        if close < 0 or len(args) < 3 or len(args) % 2 == 0:
             raise ValueError(
                 f"multiIf takes an odd number of arguments >= 3 "
                 f"(cond, value pairs + else), got {len(args)}")
@@ -3532,7 +3413,7 @@ def _rewrite_multi_if(out: str) -> str:
             f"WHEN {args[j]} THEN {args[j + 1]}"
             for j in range(0, len(args) - 1, 2))
         repl = f"CASE {whens} ELSE {args[-1]} END"
-        out = out[:m.start()] + repl + out[i:]
+        out = out[:m.start()] + repl + out[close + 1:]
         pos = m.start()
     return out
 
@@ -3555,30 +3436,10 @@ def _rewrite_if_combinators(out: str) -> str:
     the original position, so a same-name combinator nested in the
     rewritten args (scalar subqueries) is rewritten too.
     """
-    for name, agg in IF_COMBINATORS.items():
-        pos = 0
-        while True:
-            m = re.compile(rf"\b{name}\s*\(").search(out, pos)
-            if not m:
-                break
-            depth, i = 1, m.end()
-            while i < len(out) and depth:
-                ch = out[i]
-                if ch == "(":
-                    depth += 1
-                elif ch == ")":
-                    depth -= 1
-                i += 1
-            args = _split_top_level(out[m.end():i - 1])
-            if depth or len(args) != 2:
-                pos = m.end()  # malformed/other arity: skip past it
-                continue
-            val, cond = args[0].strip(), args[1].strip()
-            repl = f"{agg}(if({cond}, {val}, NULL))"
-            if name == "sumIf":
-                repl = f"coalesce({repl}, 0)"
-            out = out[:m.start()] + repl + out[i:]
-            pos = m.start() + 1
+    forms = {name: (2, lambda a, c, agg=agg: f"{agg}(if({c}, {a[0]}, NULL))")
+             for name, agg in IF_COMBINATORS.items()}
+    forms["sumIf"] = (2, lambda a, c:
+                      f"coalesce(sum(if({c}, {a[0]}, NULL)), 0)")
     # the combinators whose target isn't a plain agg-name template
     # (round 11): uniqExactIf → the exact COUNT(DISTINCT …) form
     # uniqExact itself maps to; medianIf needs the 0.5 fraction
@@ -3586,39 +3447,32 @@ def _rewrite_if_combinators(out: str) -> str:
     # argMaxIf/argMinIf carry THREE args — the condition NULLs both
     # the returned and the ordering expression, and max_by/min_by
     # ignore NULL-ordering rows, exactly the -If filter contract.
-    specials = {
-        "uniqExactIf": (2, lambda a, c, _:
+    forms.update({
+        "uniqExactIf": (2, lambda a, c:
                         f"count(DISTINCT if({c}, {a[0]}, NULL))"),
-        "medianIf": (2, lambda a, c, _:
+        "medianIf": (2, lambda a, c:
                      f"percentile_approx(if({c}, {a[0]}, NULL), 0.5)"),
-        "argMaxIf": (3, lambda a, c, _:
+        "argMaxIf": (3, lambda a, c:
                      f"max_by(if({c}, {a[0]}, NULL), "
                      f"if({c}, {a[1]}, NULL))"),
-        "argMinIf": (3, lambda a, c, _:
+        "argMinIf": (3, lambda a, c:
                      f"min_by(if({c}, {a[0]}, NULL), "
                      f"if({c}, {a[1]}, NULL))"),
-    }
-    for name, (arity, build) in specials.items():
+    })
+    for name, (arity, build) in forms.items():
         pos = 0
         while True:
             m = re.compile(rf"\b{name}\s*\(").search(out, pos)
             if not m:
                 break
-            depth, i = 1, m.end()
-            while i < len(out) and depth:
-                ch = out[i]
-                if ch == "(":
-                    depth += 1
-                elif ch == ")":
-                    depth -= 1
-                i += 1
+            close = _scan_balanced(out, m.end() - 1)
             args = [a.strip() for a in
-                    _split_top_level(out[m.end():i - 1])]
-            if depth or len(args) != arity:
-                pos = m.end()
+                    _split_top_level(out[m.end():close])]
+            if close < 0 or len(args) != arity:
+                pos = m.end()  # malformed/other arity: skip past it
                 continue
-            repl = build(args[:-1], args[-1], None)
-            out = out[:m.start()] + repl + out[i:]
+            repl = build(args[:-1], args[-1])
+            out = out[:m.start()] + repl + out[close + 1:]
             pos = m.start() + 1
     return out
 
@@ -3976,13 +3830,7 @@ def rewrite_any_join(query: str) -> str:
     """
     if not re.search(r"(?i)\b(GLOBAL|ALL|ANY)\b", query):
         return query
-    lits: list[str] = []
-
-    def _mask(m: re.Match) -> str:
-        lits.append(m.group(0))
-        return f"\x00{len(lits) - 1}\x00"
-
-    out = _STR_LIT.sub(_mask, query)
+    out, lits = _mask_literals(query)
     out = _GLOBAL_RE.sub("", out)
     out = _ALL_JOIN_RE.sub("", out)
     n = 0
@@ -4046,7 +3894,7 @@ def rewrite_any_join(query: str) -> str:
             "USING (keys) | ON <qualified equi-conjuncts>, with a "
             "simple FROM table as the left side for RIGHT/FULL; "
             "alias a subquery side as a view first")
-    return re.sub(r"\x00(\d+)\x00", lambda m: lits[int(m.group(1))], out)
+    return _unmask_literals(out, lits)
 
 
 #: ClickHouse ``[LEFT] ARRAY JOIN <expr> AS <alias>`` — the row
@@ -4220,16 +4068,8 @@ def rewrite_settings(query: str) -> str:
     discipline: string DATA mentioning SETTINGS survives)."""
     if not re.search(r"(?i)\bSETTINGS\b", query):
         return query
-    lits: list[str] = []
-
-    def _mask(m: re.Match) -> str:
-        lits.append(m.group(0))
-        return f"\x00{len(lits) - 1}\x00"
-
-    out = _STR_LIT.sub(_mask, query)
-    out = _SETTINGS_RE.sub("", out)
-    return re.sub(r"\x00(\d+)\x00", lambda m: lits[int(m.group(1))],
-                  out)
+    out, lits = _mask_literals(query)
+    return _unmask_literals(_SETTINGS_RE.sub("", out), lits)
 
 
 def rewrite_prewhere(query: str) -> str:

@@ -150,11 +150,17 @@ def compact(spark: SparkSession, path: str, keep_old: bool = True) -> None:
     (``_epoch_*_SUCCESS``) are carried into the new version — dropping
     them would let a checkpoint replay re-ingest an epoch the
     compaction already folded in. The marker set is snapshotted BEFORE
-    the data listing: if the contract is violated anyway and an epoch
-    lands mid-compaction, its marker is NOT carried, so the replay
-    re-publishes that epoch into the new version — the failure mode is
-    bounded at duplicated-epoch (at-least-once), never silent loss
-    (a marker claiming data the compacted files don't contain).
+    the data listing, so no carried marker claims data the compacted
+    files lack. Nothing ENFORCES the contract yet, and breaking it can
+    lose rows silently: an epoch or an ``Engine.ingest`` published
+    after the listing (``read_table`` below) and before the cutover
+    lands only in the previous version. Once that epoch's checkpoint
+    commit is written nothing replays it (an ingest has no replay at
+    all), and the next compact() prunes that version with the rows in
+    it. An epoch landing between the marker snapshot and the listing
+    is duplicated instead if its commit is lost. A lock on the table
+    root, taken by ingest, the epoch sink and compact(), is what will
+    rule both out (ROADMAP item 5).
 
     Version retention: the current and the immediately-previous
     version are kept (in-flight ``read_table`` snapshot readers finish

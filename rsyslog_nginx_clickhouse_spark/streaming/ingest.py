@@ -123,6 +123,19 @@ def idempotent_epoch_writer(table_path: str, write_fn=None):
         shutil.rmtree(staging, ignore_errors=True)
         with open(marker, "w"):
             pass
+        if query_id is None:
+            return
+        # Spark plans epoch N+1 only once commits/N exists, and a restart
+        # re-runs at most the last uncommitted epoch, so only this
+        # query's newest marker is ever read: drop the older ones, or
+        # they pile up (and compact() copies each) for the life of the
+        # stream. The new marker is written first, so a crash here
+        # leaves extra markers, never a missing one.
+        prefix = os.path.join(table_path, f"_epoch_{query_id}-")
+        for old in glob.glob(glob.escape(prefix) + "*_SUCCESS"):
+            n = old[len(prefix):-len("_SUCCESS")]
+            if n.isdigit() and int(n) < epoch_id:
+                os.remove(old)
 
     return sink
 

@@ -96,11 +96,21 @@ def test_streaming_ingest_is_idempotent_across_restarts(spark, tmp_path):
     assert read_table(spark, table).count() == 8
 
 
+def _commits(ckpt):
+    return sorted(int(f) for f in os.listdir(os.path.join(ckpt, "commits"))
+                  if f.isdigit())
+
+
+def _markers(table):
+    return [f for f in os.listdir(table) if f.startswith("_epoch_")]
+
+
 def test_max_files_per_trigger_bounds_each_epoch(spark, tmp_path):
     """Back-pressure analog of rsyslog's action queues (nginx.conf:56):
     a 3-file backlog with maxFilesPerTrigger=1 drains as 3 bounded
-    epochs (3 epoch markers), never one monster batch — and the table
-    still converges to the full row set."""
+    epochs (3 checkpoint commits), never one monster batch — and the
+    table still converges to the full row set. Only the newest epoch's
+    marker is kept."""
     log_dir = str(tmp_path / "logs")
     table = str(tmp_path / "table")
     ckpt = str(tmp_path / "ckpt")
@@ -110,8 +120,8 @@ def test_max_files_per_trigger_bounds_each_epoch(spark, tmp_path):
     q = start_ingest(spark, log_dir, table, ckpt, max_files_per_trigger=1)
     q.awaitTermination(120)
     assert read_table(spark, table).count() == 8
-    markers = [f for f in os.listdir(table) if f.startswith("_epoch_")]
-    assert len(markers) == 3  # one bounded micro-batch per file
+    assert _commits(ckpt) == [0, 1, 2]  # one bounded micro-batch per file
+    assert _markers(table) == [f"_epoch_{q.id}-2_SUCCESS"]
 
 
 def test_epoch_writer_replay_never_duplicates(spark, tmp_path):
@@ -184,6 +194,30 @@ def test_stream_restart_after_lost_commit(spark, tmp_path, lose_marker):
     got = eng.sql("SELECT count(*) AS n, count(logdatetime) AS valid "
                   "FROM $table").first()
     assert (got.n, got.valid) == (len(lines), valid) == (11, 8)
+
+
+def test_restart_after_compact_replays_nothing(spark, tmp_path):
+    """Three drains keep one epoch marker; compact() carries it into the
+    new version, so a restart that lost the last checkpoint commit finds
+    the epoch committed and adds no row."""
+    log_dir = str(tmp_path / "logs")
+    table = str(tmp_path / "table")
+    ckpt = str(tmp_path / "ckpt")
+    eng = Engine(table, spark)
+    for i, chunk in enumerate((LINES[:3], LINES[3:5], LINES[5:])):
+        _write_log(log_dir, f"part{i}.log", chunk)
+        q = eng.stream(log_dir, ckpt)
+        q.awaitTermination(120)
+    assert _commits(ckpt) == [0, 1, 2]
+    assert _markers(table) == [f"_epoch_{q.id}-2_SUCCESS"]
+    eng.compact()
+    for name in ("2", ".2.crc"):
+        os.remove(os.path.join(ckpt, "commits", name))
+
+    eng.stream(log_dir, ckpt).awaitTermination(120)
+    assert _commits(ckpt) == [0, 1, 2]  # epoch 2 ran again
+    assert _markers(table) == [f"_epoch_{q.id}-2_SUCCESS"]
+    assert eng.sql("SELECT count(*) AS n FROM $table").first().n == 8
 
 
 def test_two_checkpoints_stream_into_one_table(spark, tmp_path):

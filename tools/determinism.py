@@ -23,7 +23,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from rsyslog_nginx_clickhouse_spark.queries import load_all
 from rsyslog_nginx_clickhouse_spark.session import get_spark
-from tools.selfcheck import value_hash
+from tools.selfcheck import absent_input, value_hash
 
 
 def main() -> int:
@@ -31,9 +31,14 @@ def main() -> int:
     only = set(sys.argv[2:])
     registry = load_all()
     spark = get_spark("determinism")
-    n_pass = n_flaky = n_error = 0
+    n_pass = n_flaky = n_error = n_absent = 0
     for name, q in registry.items():
         if only and name not in only:
+            continue
+        why = absent_input(name)
+        if why:
+            print(f"SKIP {name}: {why}")
+            n_absent += 1
             continue
         hashes = []
         try:
@@ -52,7 +57,8 @@ def main() -> int:
         else:
             print(f"FLAKY {name}: run1={hashes[0]} run2={hashes[1]}")
             n_flaky += 1
-    print(f"\n{n_pass} deterministic, {n_flaky} flaky, {n_error} errors")
+    print(f"\n{n_pass} deterministic, {n_flaky} flaky, {n_error} errors, "
+          f"{n_absent} not run")
     return 1 if n_flaky or n_error else 0
 
 

@@ -27,6 +27,7 @@ from rsyslog_nginx_clickhouse_spark.plans.stream_audit import (
 )
 from rsyslog_nginx_clickhouse_spark.queries import load_all
 from rsyslog_nginx_clickhouse_spark.session import get_spark
+from tools.selfcheck import absent_input
 
 
 def _map_in_pandas_under_range_sort(plan: str) -> int:
@@ -166,8 +167,15 @@ def main() -> int:
     spark = get_spark("plancheck")
     bad = 0
     skipped = 0
+    absent = 0
     for name, q in registry.items():
         if only and name not in only:
+            continue
+        why = absent_input(name)
+        if why:
+            # not a plan-build failure: the query's input is not here
+            print(f"SKIP {name}: {why}")
+            absent += 1
             continue
         drain_stream_plans()  # drop leftovers from a failed prior query
         try:
@@ -223,7 +231,7 @@ def main() -> int:
                   f"{STREAM_RESTART_EVIDENCE[name]}")
         bad += bool(flags)
         spark.catalog.clearCache()
-    print(f"\n{bad} queries flagged, {skipped} skipped")
+    print(f"\n{bad} queries flagged, {skipped} skipped, {absent} not run")
     return 1 if bad or skipped else 0
 
 
