@@ -15,11 +15,16 @@ Every text rewrite here is built on three primitives, each stated once:
 - ``_mask_literals`` / ``_unmask_literals``: string literals are
   swapped for placeholders before a rewrite and restored after it, so
   rewrites only ever see string data masked — a quoted ``(``, ``,``,
-  ``$table`` or function name is data, never syntax;
+  ``$table`` or function name is data, never syntax (``_hide`` hides
+  any one text the same way);
 - ``_scan_balanced``: the matching ``)`` of a ``(`` (``_take_call_args``
   adds the top-level argument split);
-- ``_rewrite_calls``: find a call, splice its replacement, resume the
-  search after the splice.
+- ``_rewrite_calls``: the one loop that finds calls and splices their
+  replacements. It rewrites innermost first (a call nested in another
+  call's arguments is rewritten before the call holding it) and each
+  call once (replacement text is never searched again, so a
+  replacement may keep the call's name). A ``build`` that returns the
+  call's own text skips it.
 """
 
 from __future__ import annotations
@@ -152,13 +157,15 @@ def _mask_literals(text: str) -> tuple[str, dict[str, str]]:
     is its own key: ``lits.get(tok)`` is the literal when ``tok`` is
     exactly one."""
     lits: dict[str, str] = {}
+    return _STR_LIT.sub(lambda m: _hide(m.group(0), lits), text), lits
 
-    def _mark(m: re.Match) -> str:
-        mark = f"\x00{len(lits)}\x00"
-        lits[mark] = m.group(0)
-        return mark
 
-    return _STR_LIT.sub(_mark, text), lits
+def _hide(text: str, lits: dict[str, str]) -> str:
+    """A fresh placeholder for ``text`` in ``lits``: no rewrite reads
+    what it hides, and ``_unmask_literals`` restores it verbatim."""
+    mark = f"\x00{len(lits)}\x00"
+    lits[mark] = text
+    return mark
 
 
 def _unmask_literals(text: str, lits: dict[str, str]) -> str:
@@ -206,21 +213,46 @@ def _take_call_args(sql: str, open_paren: int) -> tuple[list[str], int]:
     return _split_top_level(sql[open_paren + 1:close]), close + 1
 
 
+def _parametric_groups(out: str, m: re.Match
+                       ) -> tuple[str, str, int] | None:
+    """The raw parameter and argument text of the parametric call
+    ``name(params)(args)`` whose first ``(`` ends ``m``, with no space
+    between the groups, and the index just past it; None for any
+    other shape, an unbalanced one included."""
+    close = _scan_balanced(out, m.end() - 1)
+    if close < 0 or not out.startswith("(", close + 1):
+        return None
+    end = _scan_balanced(out, close + 1)
+    if end < 0:
+        return None
+    return out[m.end():close], out[close + 2:end], end + 1
+
+
 def _rewrite_calls(out: str, rx: str,
                    build: Callable[[str, re.Match], tuple[str, int]]
                    ) -> str:
     """Replace each call ``rx`` finds (the pattern ends at the call's
     ``(``) with ``build(out, m)``, which returns the replacement and
-    the index just past the call. The search resumes after the
-    replacement, so a call nested in the arguments is not rewritten
-    again inside it."""
+    the index just past the call. Calls are rebuilt from the last
+    match to the first, so a call nested in another's arguments is
+    rewritten before it, and replacement text is never searched
+    again. ``build`` returning ``(m.group(0), m.end())`` skips a call."""
     pattern = re.compile(rx)
-    pos = 0
-    while m := pattern.search(out, pos):
+    for start in reversed([m.start() for m in pattern.finditer(out)]):
+        m = pattern.match(out, start)
         repl, end = build(out, m)
-        out = out[:m.start()] + repl + out[end:]
-        pos = m.start() + len(repl)
+        out = out[:start] + repl + out[end:]
     return out
+
+
+def _rewrite_templates(out: str, templates: dict[str, str]) -> str:
+    """Each ``name(args)`` call of a ``templates`` name (no space
+    before the ``(``) → its template, ``{x}`` the raw argument text."""
+    def build(out: str, m: re.Match) -> tuple[str, int]:
+        args, end = _take_call_args(out, m.end() - 1)
+        return templates[m.group(1)].format(x=",".join(args)), end
+
+    return _rewrite_calls(out, rf"\b({'|'.join(templates)})\(", build)
 
 
 def expand_function_macros(sql: str, bucket: str) -> str:
@@ -343,15 +375,8 @@ def _expand_conditional_test(sql: str, template_vars: dict) -> str:
     a '$conditionalTest(' appearing only INSIDE a literal is user data
     and is left untouched.
     """
-    while True:
-        masked, lits = _mask_literals(sql)
-        # the loop exit MUST test the MASKED text: a raw-sql search
-        # finds in-literal occurrences that masking then hides, which
-        # crashed here on m2=None
-        m2 = re.search(r"\$conditionalTest\s*\(", masked)
-        if not m2:
-            return sql
-        args, after = _take_call_args(masked, m2.end() - 1)
+    def build(out: str, m: re.Match) -> tuple[str, int]:
+        args, after = _take_call_args(out, m.end() - 1)
         if len(args) < 2:
             raise ValueError(
                 "$conditionalTest(SQL, $variable) takes 2 arguments")
@@ -362,8 +387,11 @@ def _expand_conditional_test(sql: str, template_vars: dict) -> str:
         val = template_vars.get(var[1:])
         body = ",".join(args[:-1]).strip() if val not in (
             None, "", [], ()) else ""
-        sql = _unmask_literals(
-            masked[:m2.start()] + body + masked[after:], lits)
+        return body, after
+
+    masked, lits = _mask_literals(sql)
+    return _unmask_literals(
+        _rewrite_calls(masked, r"\$conditionalTest\s*\(", build), lits)
 
 
 #: ClickHouse ``PARTITION BY toYYYYMMDD(date_col)`` — the DDL tells the
@@ -509,11 +537,11 @@ def expand_macros(sql: str, table: str, time_col: str = "logdatetime",
         if not time_to:
             raise ValueError("$to used without time_to")
         out = re.sub(r"\$to\b", str(_epoch_s(time_to)), out)
-    out = _unmask_literals(out, lits)
-    # $adhoc expands after unmasking, LAST: its quoted filter VALUES
-    # are user data and were never exposed to the substitutions above
-    out = out.replace("$adhoc", adhoc_predicate(adhoc_filters))
-    return rewrite_aggregates(out)
+    # $adhoc expands LAST and hidden like a literal: its quoted filter
+    # VALUES are user data, never exposed to the substitutions above
+    # nor to the unmask, and a '$adhoc' inside a literal is data too
+    out = out.replace("$adhoc", _hide(adhoc_predicate(adhoc_filters), lits))
+    return rewrite_aggregates(_unmask_literals(out, lits))
 
 
 #: ClickHouse scalar WITH — ``WITH <expr> AS <name>[, ...] SELECT …``
@@ -625,21 +653,12 @@ def rewrite_group_array(query: str) -> str:
     # order unspecified; rows with a NULL value OR a NULL timestamp
     # are skipped without breaking the prev chain (the CH aggregate
     # NULL contract). Result is DOUBLE, like the deltaSum mapping.
-    pos0 = 0
-    pieces0: list[str] = []
-    while True:
-        dm = re.search(r"\bdeltaSumTimestamp\s*\(", out[pos0:])
-        if not dm:
-            pieces0.append(out[pos0:])
-            break
-        start = pos0 + dm.start()
-        opn = pos0 + dm.end() - 1
-        close = _scan_balanced(out, opn)
+    def delta_sum_ts(out: str, m: re.Match) -> tuple[str, int]:
+        close = _scan_balanced(out, m.end() - 1)
         if close < 0:
             raise ValueError("deltaSumTimestamp: unbalanced "
                              "parentheses")
-        args = [a.strip()
-                for a in _split_top_level(out[opn + 1:close])]
+        args = [a.strip() for a in _split_top_level(out[m.end():close])]
         if len(args) != 2:
             raise ValueError(
                 f"deltaSumTimestamp takes exactly (value, timestamp)"
@@ -649,20 +668,18 @@ def rewrite_group_array(query: str) -> str:
                    f"NOT NULL AND ({tskey}) IS NOT NULL THEN "
                    f"struct(({tskey}) AS __o0, ({val}) AS __v) "
                    f"END))")
-        pieces0.append(out[pos0:start])
-        pieces0.append(
-            f"aggregate({structs}, "
-            f"struct(CAST(0 AS DOUBLE) AS __ds, "
-            f"CAST(NULL AS DOUBLE) AS __dp), "
-            f"(__da, __de) -> struct("
-            f"__da.__ds + CASE WHEN __da.__dp IS NOT NULL "
-            f"AND CAST(__de.__v AS DOUBLE) > __da.__dp "
-            f"THEN CAST(__de.__v AS DOUBLE) - __da.__dp "
-            f"ELSE CAST(0 AS DOUBLE) END AS __ds, "
-            f"CAST(__de.__v AS DOUBLE) AS __dp), "
-            f"__df -> __df.__ds)")
-        pos0 = close + 1
-    out = "".join(pieces0)
+        return (f"aggregate({structs}, "
+                f"struct(CAST(0 AS DOUBLE) AS __ds, "
+                f"CAST(NULL AS DOUBLE) AS __dp), "
+                f"(__da, __de) -> struct("
+                f"__da.__ds + CASE WHEN __da.__dp IS NOT NULL "
+                f"AND CAST(__de.__v AS DOUBLE) > __da.__dp "
+                f"THEN CAST(__de.__v AS DOUBLE) - __da.__dp "
+                f"ELSE CAST(0 AS DOUBLE) END AS __ds, "
+                f"CAST(__de.__v AS DOUBLE) AS __dp), "
+                f"__df -> __df.__ds)"), close + 1
+
+    out = _rewrite_calls(out, r"\bdeltaSumTimestamp\s*\(", delta_sum_ts)
     # the ORDER-IMPOSING-WRAPPER composite (VERDICT r10 item 5):
     # arraySort(groupArray(x)) / arrayReverseSort(groupArray(x)) —
     # the wrapper canonicalizes the order CH never promised, so the
@@ -671,14 +688,18 @@ def rewrite_group_array(query: str) -> str:
     # BARE groupArray left after this needs an order source. The
     # keyed form arraySort(f, groupArray(x)) falls through to the
     # refusal (Spark's array_sort takes a comparator, not a key fn).
-    nested2 = r"(?:[^()]|\((?:[^()]|\([^()]*\))*\))*"
-    out = re.sub(
-        rf"\barraySort\s*\(\s*groupArray\s*\(({nested2})\)\s*\)",
-        r"sort_array(collect_list(\1))", out)
-    out = re.sub(
-        rf"\barrayReverseSort\s*\(\s*groupArray\s*\(({nested2})\)"
-        rf"\s*\)",
-        r"sort_array(collect_list(\1), false)", out)
+    def sorted_collect(out: str, m: re.Match) -> tuple[str, int]:
+        close = _scan_balanced(out, m.end() - 1)
+        wrapper = close >= 0 and re.compile(r"\s*\)").match(out, close + 1)
+        if not wrapper:  # left to the checks below
+            return m.group(0), m.end()
+        desc = ", false" if m.group(1) == "arrayReverseSort" else ""
+        return (f"sort_array(collect_list({out[m.end():close]}){desc})",
+                wrapper.end())
+
+    out = _rewrite_calls(
+        out, r"\b(arraySort|arrayReverseSort)\s*\(\s*groupArray\s*\(",
+        sorted_collect)
     if not re.search(r"\b(groupArray(?:MovingSum|MovingAvg)?|deltaSum"
                      r"|anyLast(?:If)?|anyIf)\s*\(", out):
         return _unmask_literals(out, lits)
@@ -731,23 +752,16 @@ def rewrite_group_array(query: str) -> str:
     for a, b in sorted(spans, reverse=True):
         out = out[:a] + out[b:]
     # rewrite every call, balanced-scanning each argument
-    pieces: list[str] = []
-    pos = 0
-    while True:
-        cm = re.search(r"\b(groupArrayMovingSum|groupArrayMovingAvg"
-                       r"|groupArray|deltaSum|anyLastIf|anyLast"
-                       r"|anyIf)\s*\(", out[pos:])
-        if not cm:
-            pieces.append(out[pos:])
-            break
-        start = pos + cm.start()
-        opn = pos + cm.end() - 1
-        close = _scan_balanced(out, opn)
+    fields = ", ".join(f"{k} AS __o{i}" for i, k in enumerate(keys))
+
+    def lift(out: str, m: re.Match) -> tuple[str, int]:
+        name = m.group(1)
+        close = _scan_balanced(out, m.end() - 1)
         if close < 0:
-            raise ValueError(f"{cm.group(1)}: unbalanced parentheses")
-        arg = out[opn + 1:close].strip()
+            raise ValueError(f"{name}: unbalanced parentheses")
+        arg = out[m.end():close].strip()
         max_size = None  # groupArray(N)(x): CH's bounded max_size form
-        if cm.group(1) == "groupArray" \
+        if name == "groupArray" \
                 and out[close + 1:].lstrip().startswith("("):
             if not re.fullmatch(r"\d+", arg):
                 raise ValueError(
@@ -760,21 +774,20 @@ def rewrite_group_array(query: str) -> str:
                 raise ValueError("groupArray: unbalanced parentheses")
             arg = out[opn2 + 1:close].strip()
         win = None  # moving forms: optional literal window parameter
-        if cm.group(1).startswith("groupArrayMoving"):
+        if name.startswith("groupArrayMoving"):
             if out[close + 1:].lstrip().startswith("("):
                 if not re.fullmatch(r"\d+", arg):
                     raise ValueError(
-                        f"{cm.group(1)}: the window parameter must "
+                        f"{name}: the window parameter must "
                         f"be a single literal integer (got {arg!r})")
                 win = int(arg)
                 opn2 = out.index("(", close + 1)
                 close = _scan_balanced(out, opn2)
                 if close < 0:
-                    raise ValueError(f"{cm.group(1)}: unbalanced "
+                    raise ValueError(f"{name}: unbalanced "
                                      "parentheses")
                 arg = out[opn2 + 1:close].strip()
-        fields = ", ".join(f"{k} AS __o{i}" for i, k in enumerate(keys))
-        if cm.group(1) in ("anyLast", "anyIf", "anyLastIf"):
+        if name in ("anyLast", "anyIf", "anyLastIf"):
             # anyLast(x) / anyIf(x, cond) / anyLastIf(x, cond)
             # (round 14, VERDICT r13 item 3 — the ReplacingMergeTree
             # idiom aggregates): CH picks the last/first encountered
@@ -790,7 +803,7 @@ def rewrite_group_array(query: str) -> str:
             # aggregatable collect bounded by per-group non-NULL
             # rows; empty groups yield NULL.
             parts = [a.strip() for a in _split_top_level(arg)]
-            if cm.group(1) == "anyLast":
+            if name == "anyLast":
                 if len(parts) != 1:
                     raise ValueError(
                         f"anyLast takes exactly one argument, got "
@@ -799,30 +812,25 @@ def rewrite_group_array(query: str) -> str:
             else:
                 if len(parts) != 2:
                     raise ValueError(
-                        f"{cm.group(1)}(value, cond): need exactly 2 "
+                        f"{name}(value, cond): need exactly 2 "
                         f"arguments, got {len(parts)}")
                 val = f"IF(({parts[1]}), ({parts[0]}), NULL)"
             structs = (f"sort_array(collect_list(CASE WHEN ({val}) "
                        f"IS NOT NULL THEN struct({fields}, "
                        f"({val}) AS __v) END))")
-            idx = "0" if cm.group(1) == "anyIf" else "size(__aa) - 1"
-            pieces.append(out[pos:start])
-            pieces.append(
-                f"transform(array({structs}), __aa -> "
-                f"CASE WHEN size(__aa) > 0 "
-                f"THEN __aa[{idx}].__v END)[0]")
-            pos = close + 1
-            continue
+            idx = "0" if name == "anyIf" else "size(__aa) - 1"
+            return (f"transform(array({structs}), __aa -> "
+                    f"CASE WHEN size(__aa) > 0 "
+                    f"THEN __aa[{idx}].__v END)[0]"), close + 1
         sorted_structs = (f"sort_array(collect_list(struct({fields}, "
                           f"({arg}) AS __v)))")
-        pieces.append(out[pos:start])
-        if cm.group(1) == "groupArray":
+        if name == "groupArray":
             lifted = f"transform({sorted_structs}, s -> s.__v)"
             # groupArray(N)(x): CH keeps the FIRST max_size elements
             # in order — slice after the order-imposing lift
-            pieces.append(lifted if max_size is None
-                          else f"slice({lifted}, 1, {max_size})")
-        elif cm.group(1).startswith("groupArrayMoving"):
+            return (lifted if max_size is None
+                    else f"slice({lifted}, 1, {max_size})"), close + 1
+        if name.startswith("groupArrayMoving"):
             # groupArrayMovingSum/Avg[(n)](x) (round 12): element i =
             # the sum (avg) of the last n values up to i in key
             # order; unparameterized, the window is the WHOLE prefix
@@ -842,24 +850,20 @@ def rewrite_group_array(query: str) -> str:
             ln = "__gi + 1" if win is None else f"least(__gi + 1, {win})"
             body = (f"aggregate(slice(__ga, {lo}, {ln}), "
                     f"CAST(0 AS DOUBLE), (__gs, __gy) -> __gs + __gy)")
-            if cm.group(1) == "groupArrayMovingAvg":
+            if name == "groupArrayMovingAvg":
                 div = "size(__ga)" if win is None else str(win)
                 body = f"({body}) / {div}"
-            pieces.append(
-                f"transform({vals}, (__gx, __gi) -> {body})"
-                .replace("__ga", vals))
-        else:
-            # deltaSum(x): CH's counter aggregate — the sum of the
-            # POSITIVE deltas between CONSECUTIVE values in key
-            # order (counter increases survive resets). One sorted
-            # collect, then a single left-fold tracking the previous
-            # value — sequential and deterministic, NULL rows
-            # skipped without breaking the prev chain (the CH
-            # aggregate NULL contract). Result is DOUBLE (CH keeps
-            # x's type; cast at the SELECT if integer output is
-            # wanted — DOCUMENTED deviation).
-            pieces.append(
-                f"aggregate({sorted_structs}, "
+            return (f"transform({vals}, (__gx, __gi) -> {body})"
+                    .replace("__ga", vals)), close + 1
+        # deltaSum(x): CH's counter aggregate — the sum of the
+        # POSITIVE deltas between CONSECUTIVE values in key order
+        # (counter increases survive resets). One sorted collect, then
+        # a single left-fold tracking the previous value — sequential
+        # and deterministic, NULL rows skipped without breaking the
+        # prev chain (the CH aggregate NULL contract). Result is DOUBLE
+        # (CH keeps x's type; cast at the SELECT if integer output is
+        # wanted — DOCUMENTED deviation).
+        return (f"aggregate({sorted_structs}, "
                 f"struct(CAST(0 AS DOUBLE) AS __ds, "
                 f"CAST(NULL AS DOUBLE) AS __dp), "
                 f"(__da, __de) -> CASE WHEN __de.__v IS NULL "
@@ -869,9 +873,11 @@ def rewrite_group_array(query: str) -> str:
                 f"THEN CAST(__de.__v AS DOUBLE) - __da.__dp "
                 f"ELSE CAST(0 AS DOUBLE) END AS __ds, "
                 f"CAST(__de.__v AS DOUBLE) AS __dp) END, "
-                f"__df -> __df.__ds)")
-        pos = close + 1
-    return _unmask_literals("".join(pieces), lits)
+                f"__df -> __df.__ds)"), close + 1
+
+    return _unmask_literals(_rewrite_calls(
+        out, r"\b(groupArrayMovingSum|groupArrayMovingAvg|groupArray"
+             r"|deltaSum|anyLastIf|anyLast|anyIf)\s*\(", lift), lits)
 
 
 def rewrite_aggregates(out: str) -> str:
@@ -892,24 +898,24 @@ def rewrite_aggregates(out: str) -> str:
     out = re.sub(r"\bcount\s*\(\s*\)", "count(*)", out,
                  flags=re.IGNORECASE)
     out = re.sub(r"\buniqExact\s*\(", "count(DISTINCT ", out)
-    # value arg may itself contain one level of calls, e.g.
-    # quantile(0.9)(toUInt32(t))
-    nested = r"(?:[^()]|\([^()]*\))*"
     # multi-quantile combinators FIRST (before the token renames —
     # 'quantiles' must not be left for a later partial match):
     # quantilesExact(p1,..,pn)(x) → percentile(x, array(p1,..,pn)),
     # one pass over the data returning the full array, exactly CH's
-    # one-state-many-cuts contract. The value arg may nest calls two
-    # levels deep; anything deeper is REFUSED below rather than
-    # leaking the CH name into Spark's parser.
-    nested2 = r"(?:[^()]|\((?:[^()]|\([^()]*\))*\))*"
-    out = re.sub(
-        rf"\bquantilesExact\(({nested2})\)\(({nested2})\)",
-        r"percentile(\2, array(\1))", out)
-    out = re.sub(
-        rf"\bquantiles(?:TDigest|Timing)?\(({nested2})\)"
-        rf"\(({nested2})\)",
-        r"percentile_approx(\2, array(\1))", out)
+    # one-state-many-cuts contract.
+    def quantiles(out: str, m: re.Match) -> tuple[str, int]:
+        groups = _parametric_groups(out, m)
+        if groups is None:
+            raise ValueError(f"{m.group(1)} needs the parametric form "
+                             f"{m.group(1)}(p1, …)(x)")
+        ps, x, end = groups
+        fn = "percentile" if m.group(1) == "quantilesExact" \
+            else "percentile_approx"
+        return f"{fn}({x}, array({ps}))", end
+
+    out = _rewrite_calls(
+        out, r"\b(quantilesExact|quantilesTDigest|quantilesTiming"
+             r"|quantiles)\(", quantiles)
     # groupUniqArray(x) → sorted distinct array. DOCUMENTED
     # deviation: ClickHouse returns the distinct elements in
     # nondeterministic (block) order; the deterministic sorted form
@@ -917,44 +923,46 @@ def rewrite_aggregates(out: str) -> str:
     # order) maps only in the sorted-subquery idiom — see
     # rewrite_group_array above (called first); any other shape is
     # refused there rather than silently de-determinizing.
-    out = re.sub(rf"\bgroupUniqArray\(({nested2})\)",
-                 r"sort_array(collect_set(\1))", out)
+    # sumCount(x) (round 12): CH returns the (sum, count) tuple in
+    # one state — Spark's struct of the two aggregates is the same
+    # one-pass plan (both partial-aggregate map-side)
+    out = _rewrite_templates(out, {
+        "groupUniqArray": "sort_array(collect_set({x}))",
+        "sumCount": "struct(sum({x}) AS s, count({x}) AS c)"})
+
     # uniqUpTo(N)(x) (round 12): EXACT semantics by definition —
     # "count distinct values; if more than N, return N+1" — which is
     # precisely least(count(DISTINCT x), N+1). Literal N only (the
     # topK policy); the bare form is refused below rather than
     # guessing CH's default.
-    out = re.sub(
-        rf"\buniqUpTo\((\d+)\)\(({nested2})\)",
-        lambda m: (f"least(count(DISTINCT {m.group(2)}), "
-                   f"{int(m.group(1)) + 1})"), out)
+    def uniq_up_to(out: str, m: re.Match) -> tuple[str, int]:
+        groups = _parametric_groups(out, m)
+        if groups is None or not re.fullmatch(r"\d+", groups[0]):
+            return m.group(0), m.end()
+        n, x, end = groups
+        return f"least(count(DISTINCT {x}), {int(n) + 1})", end
+
+    out = _rewrite_calls(out, r"\buniqUpTo\(", uniq_up_to)
     if re.search(r"\buniqUpTo\s*\(", out):
         raise ValueError(
             "uniqUpTo needs the parametric literal form "
             "uniqUpTo(N)(x) — the bare form's default N is a CH "
             "implementation detail this engine will not guess")
-    # sumCount(x) (round 12): CH returns the (sum, count) tuple in
-    # one state — Spark's struct of the two aggregates is the same
-    # one-pass plan (both partial-aggregate map-side)
-    out = re.sub(
-        rf"\bsumCount\(({nested2})\)",
-        r"struct(sum(\1) AS s, count(\1) AS c)", out)
 
     # simpleLinearRegression(x, y) (round 13): CH returns the (k, b)
     # tuple of y ≈ k·x + b — Spark's regr_slope/regr_intercept take
     # (y, x), so the arguments swap; same one-pass partial-agg plan
-    def _linreg(m: re.Match) -> str:
-        args = _split_top_level(m.group(1))
+    def linreg(out: str, m: re.Match) -> tuple[str, int]:
+        args, end = _take_call_args(out, m.end() - 1)
         if len(args) != 2:
             raise ValueError(
                 f"simpleLinearRegression(x, y): need exactly 2 "
                 f"arguments, got {len(args)}")
         x, y = (a.strip() for a in args)
         return (f"named_struct('k', regr_slope({y}, {x}), "
-                f"'b', regr_intercept({y}, {x}))")
+                f"'b', regr_intercept({y}, {x}))"), end
 
-    out = re.sub(rf"\bsimpleLinearRegression\(({nested2})\)",
-                 _linreg, out)
+    out = _rewrite_calls(out, r"\bsimpleLinearRegression\(", linreg)
     out = _rewrite_array_reduce(out, lits)
     out = _rewrite_entropy_intervals(out)
     out = _rewrite_shape_stats(out)
@@ -994,23 +1002,19 @@ def rewrite_aggregates(out: str) -> str:
     out = _rewrite_quantile_deterministic(out)
     out = _rewrite_sparkbar(out)
     out = _rewrite_quantile_if(out)
-    # leak check: a combinator whose argument nests deeper than the
-    # patterns above would otherwise pass through silently and hit
-    # Spark as an unknown function far from the cause — refuse HERE
-    # with the actual limitation named (literals are still masked, so
-    # string data cannot trip this)
-    leak = re.search(r"\b(quantiles(?:Exact|TDigest|Timing)?"
-                     r"|groupUniqArray)\s*\(", out)
-    if leak:
-        raise ValueError(
-            f"{leak.group(1)}: argument nests more than two call "
-            f"levels deep — flatten it (alias the inner expression "
-            f"in a subquery) or use the Spark names directly")
     for ch_name, spark_name in AGGREGATE_REWRITES.items():
         out = re.sub(rf"\b{ch_name}\s*\(", f"{spark_name}(", out)
-    out = re.sub(
-        rf"\b(percentile_approx|percentile)\(([^()]*)\)\(({nested})\)",
-        r"\1(\3, \2)", out)
+
+    # the parametric quantile(p)(x) → percentile_approx(x, p)
+    def collapse(out: str, m: re.Match) -> tuple[str, int]:
+        groups = _parametric_groups(out, m)
+        if groups is None or "(" in groups[0]:
+            return m.group(0), m.end()
+        p, x, end = groups
+        return f"{m.group(1)}({x}, {p})", end
+
+    out = _rewrite_calls(out, r"\b(percentile_approx|percentile)\(",
+                         collapse)
     # bare CH quantile(x) / quantileExact(x) default to the median;
     # Spark's percentile family REQUIRES the fraction, so a renamed
     # single-arg call gets ', 0.5' appended (arg-aware scan — skipped
@@ -1389,19 +1393,13 @@ def _rewrite_shape_stats(out: str) -> str:
     factor alike; the oracle replays the same formula from raw
     moments.
     """
-    nested2 = r"(?:[^()]|\((?:[^()]|\([^()]*\))*\))*"
-    out = re.sub(rf"\bskewPop\(({nested2})\)", r"skewness(\1)", out)
-    out = re.sub(rf"\bkurtPop\(({nested2})\)",
-                 r"(kurtosis(\1) + 3.0D)", out)
-    out = re.sub(
-        rf"\bskewSamp\(({nested2})\)",
-        r"(skewness(\1) * pow((count(\1) - 1) / "
-        r"CAST(count(\1) AS DOUBLE), 1.5D))", out)
-    out = re.sub(
-        rf"\bkurtSamp\(({nested2})\)",
-        r"((kurtosis(\1) + 3.0D) * pow((count(\1) - 1) / "
-        r"CAST(count(\1) AS DOUBLE), 2.0D))", out)
-    return out
+    return _rewrite_templates(out, {
+        "skewPop": "skewness({x})",
+        "kurtPop": "(kurtosis({x}) + 3.0D)",
+        "skewSamp": "(skewness({x}) * pow((count({x}) - 1) / "
+                    "CAST(count({x}) AS DOUBLE), 1.5D))",
+        "kurtSamp": "((kurtosis({x}) + 3.0D) * pow((count({x}) - 1) / "
+                    "CAST(count({x}) AS DOUBLE), 2.0D))"})
 
 
 def _unmask_literal(tok: str, lits: dict[str, str], what: str) -> str:
@@ -1805,25 +1803,17 @@ def _rewrite_state_merge(out: str) -> str:
     (DEPLOYMENT.md).
     """
     k = _STATE_KMV_K
-    nested2 = r"(?:[^()]|\((?:[^()]|\([^()]*\))*\))*"
     hash32 = ("CAST(conv(substring(md5(CAST(({x}) AS STRING)), 1, 8),"
               " 16, 10) AS BIGINT)")
-    out = re.sub(
-        rf"\buniqState\(({nested2})\)",
-        lambda m: (f"slice(array_sort(collect_set("
-                   f"{hash32.format(x=m.group(1))})), 1, {k})"), out)
     est = (f"transform(array(slice(array_sort(array_distinct("
-           f"flatten(collect_list({{st}})))), 1, {k})), __ua -> "
+           f"flatten(collect_list({{x}})))), 1, {k})), __ua -> "
            f"CAST(CASE WHEN size(__ua) < {k} THEN size(__ua) "
            f"ELSE floor({float(k - 1)} * 4294967296.0 "
            f"/ element_at(__ua, {k})) END AS BIGINT))[0]")
-    out = re.sub(
-        rf"\buniqMerge\(({nested2})\)",
-        lambda m: est.format(st=m.group(1)), out)
-    if re.search(r"\buniqState\s*\(|\buniqMerge\s*\(", out):
-        raise ValueError(
-            "uniqState/uniqMerge: argument nests more than two call "
-            "levels deep — alias the inner expression in a subquery")
+    # zero-arg countState() — the spelling CH MV bodies use (the
+    # zero-arg count() fix upstream can't see it: the token is still
+    # countState at that point). The state is the partial row count.
+    out = re.sub(r"\bcountState\(\s*\)", "count(*)", out)
     # the ADDITIVE -State/-Merge family (sum/count/min/max/avg —
     # the SummingMergeTree MV spellings): these states ARE their
     # partial values (CH stores the running accumulator), so State
@@ -1831,52 +1821,35 @@ def _rewrite_state_merge(out: str) -> str:
     # type-preserving for sum/min/max, BIGINT for count, and avg
     # carries the (sum, count) pair like CH's AvgState (result
     # Float64, the CH avg contract). Exact merges, zero extra state.
-    out = re.sub(rf"\bsumState\(({nested2})\)", r"sum(\1)", out)
-    out = re.sub(rf"\bsumMerge\(({nested2})\)", r"sum(\1)", out)
-    # zero-arg countState() — the spelling CH MV bodies use (the
-    # zero-arg count() fix upstream can't see it: the token is still
-    # countState at that point). The state is the partial row count.
-    out = re.sub(r"\bcountState\(\s*\)", "count(*)", out)
-    out = re.sub(rf"\bcountState\(({nested2})\)", r"count(\1)", out)
-    out = re.sub(rf"\bcountMerge\(({nested2})\)",
-                 r"CAST(sum(\1) AS BIGINT)", out)
-    out = re.sub(rf"\bminState\(({nested2})\)", r"min(\1)", out)
-    out = re.sub(rf"\bminMerge\(({nested2})\)", r"min(\1)", out)
-    out = re.sub(rf"\bmaxState\(({nested2})\)", r"max(\1)", out)
-    out = re.sub(rf"\bmaxMerge\(({nested2})\)", r"max(\1)", out)
-    out = re.sub(
-        rf"\bavgState\(({nested2})\)",
-        r"named_struct('s', sum(CAST((\1) AS DOUBLE)), "
-        r"'c', count(\1))", out)
-    out = re.sub(
-        rf"\bavgMerge\(({nested2})\)",
-        r"(sum((\1).s) / nullif(sum((\1).c), 0))", out)
-    # argMax/argMin State+Merge: the state is the lexicographic
-    # max/min of struct(ord, payload) — including the payload in the
-    # comparison makes ties total, so the state is deterministic and
-    # its merge exact (the plans/agg_rollup._ord_struct discipline).
-    # Merge re-maxes the states and projects the payload.
-    def _arg_state(m: re.Match) -> str:
-        args = _split_top_level(m.group(2))
+    # argMaxMerge/argMinMerge re-max the argMax/argMinState states
+    # (below) and project the payload.
+    out = _rewrite_templates(out, {
+        "uniqState": f"slice(array_sort(collect_set({hash32})), 1, {k})",
+        "uniqMerge": est,
+        "sumState": "sum({x})", "sumMerge": "sum({x})",
+        "countState": "count({x})",
+        "countMerge": "CAST(sum({x}) AS BIGINT)",
+        "minState": "min({x})", "minMerge": "min({x})",
+        "maxState": "max({x})", "maxMerge": "max({x})",
+        "avgState": "named_struct('s', sum(CAST(({x}) AS DOUBLE)), "
+                    "'c', count({x}))",
+        "avgMerge": "(sum(({x}).s) / nullif(sum(({x}).c), 0))",
+        "argMaxMerge": "max({x}).p", "argMinMerge": "min({x}).p"})
+
+    # argMax/argMin State: the state is the lexicographic max/min of
+    # struct(ord, payload) — including the payload in the comparison
+    # makes ties total, so the state is deterministic and its merge
+    # exact (the plans/agg_rollup._ord_struct discipline).
+    def arg_state(out: str, m: re.Match) -> tuple[str, int]:
+        args, end = _take_call_args(out, m.end() - 1)
         if len(args) != 2:
             raise ValueError(f"{m.group(1)}State(payload, ord): need "
                              f"exactly 2 arguments, got {len(args)}")
         p, o = (a.strip() for a in args)
         fn = "max" if m.group(1) == "argMax" else "min"
-        return (f"{fn}(named_struct('o', ({o}), 'p', ({p})))")
+        return f"{fn}(named_struct('o', ({o}), 'p', ({p})))", end
 
-    out = re.sub(rf"\b(argMax|argMin)State\(({nested2})\)",
-                 _arg_state, out)
-    out = re.sub(rf"\bargMaxMerge\(({nested2})\)", r"max(\1).p", out)
-    out = re.sub(rf"\bargMinMerge\(({nested2})\)", r"min(\1).p", out)
-    leak = re.search(
-        r"\b(sum|count|min|max|avg|argMax|argMin)(State|Merge)"
-        r"\s*\(", out)
-    if leak:
-        raise ValueError(
-            f"{leak.group(1)}{leak.group(2)}: argument nests more "
-            f"than two call levels deep — alias the inner expression "
-            f"in a subquery")
+    out = _rewrite_calls(out, r"\b(argMax|argMin)State\(", arg_state)
     # topKState(N)(x) / topKMerge(N)(st): the state is this group's
     # EXACT (value, count) pairs truncated to the top-N by
     # (count DESC, value ASC) — the deterministic Space-Saving
@@ -3317,23 +3290,17 @@ def _default_quantile_fraction(out: str) -> str:
     percentile): the ClickHouse no-parameter quantile defaults to the
     median, while Spark's function has no default fraction. Runs on
     literal-masked text."""
-    for name in ("percentile_approx", "percentile"):
-        pos = 0
-        while True:
-            m = re.compile(rf"\b{name}\s*\(").search(out, pos)
-            if not m:
-                break
-            try:
-                args, after = _take_call_args(out, m.end() - 1)
-            except ValueError:
-                break  # unbalanced tail: leave as-is
-            rest = out[after:].lstrip()
-            if len(args) == 1 and not rest.startswith("("):
-                out = out[:after - 1] + ", 0.5" + out[after - 1:]
-                pos = after + len(", 0.5")
-            else:
-                pos = m.end()
-    return out
+    def build(out: str, m: re.Match) -> tuple[str, int]:
+        try:
+            args, after = _take_call_args(out, m.end() - 1)
+        except ValueError:
+            return m.group(0), m.end()  # unbalanced tail: leave as-is
+        if len(args) == 1 and not out[after:].lstrip().startswith("("):
+            return out[m.start():after - 1] + ", 0.5)", after
+        return m.group(0), m.end()
+
+    return _rewrite_calls(out, r"\b(?:percentile_approx|percentile)\s*\(",
+                          build)
 
 
 #: ClickHouse array lambda functions: the lambda comes FIRST
@@ -3357,35 +3324,31 @@ def _rewrite_array_lambdas(out: str) -> str:
     argument that is not a lambda (CH's lambda-less arrayCount(arr)
     etc.), and multi-array forms except the 2-array arrayMap
     (→ zip_with)."""
-    for name, target in _ARRAY_LAMBDAS.items():
-        pos = 0
-        while True:
-            m = re.compile(rf"\b{name}\s*\(").search(out, pos)
-            if not m:
-                break
-            close = _scan_balanced(out, m.end() - 1)
-            args = [a.strip() for a in
-                    _split_top_level(out[m.end():close])]
-            if close < 0 or "->" not in args[0]:
-                raise ValueError(
-                    f"{name}: expected the ClickHouse lambda form "
-                    f"{name}(x -> expr, array); the lambda-less and "
-                    f"computed forms are not implemented")
-            lam = args[0]
-            if name == "arrayMap" and len(args) == 3:
-                repl = f"zip_with({args[1]}, {args[2]}, {lam})"
-            elif len(args) != 2:
-                raise ValueError(
-                    f"{name}: only the single-array form (and 2-array "
-                    f"arrayMap → zip_with) is implemented, got "
-                    f"{len(args) - 1} arrays")
-            elif name == "arrayCount":
-                repl = f"size(filter({args[1]}, {lam}))"
-            else:
-                repl = f"{target}({args[1]}, {lam})"
-            out = out[:m.start()] + repl + out[close + 1:]
-            pos = m.start()
-    return out
+    def build(out: str, m: re.Match) -> tuple[str, int]:
+        name = m.group(1)
+        close = _scan_balanced(out, m.end() - 1)
+        args = [a.strip() for a in _split_top_level(out[m.end():close])]
+        if close < 0 or "->" not in args[0]:
+            raise ValueError(
+                f"{name}: expected the ClickHouse lambda form "
+                f"{name}(x -> expr, array); the lambda-less and "
+                f"computed forms are not implemented")
+        lam = args[0]
+        if name == "arrayMap" and len(args) == 3:
+            repl = f"zip_with({args[1]}, {args[2]}, {lam})"
+        elif len(args) != 2:
+            raise ValueError(
+                f"{name}: only the single-array form (and 2-array "
+                f"arrayMap → zip_with) is implemented, got "
+                f"{len(args) - 1} arrays")
+        elif name == "arrayCount":
+            repl = f"size(filter({args[1]}, {lam}))"
+        else:
+            repl = f"{_ARRAY_LAMBDAS[name]}({args[1]}, {lam})"
+        return repl, close + 1
+
+    return _rewrite_calls(
+        out, rf"\b({'|'.join(_ARRAY_LAMBDAS)})\s*\(", build)
 
 
 def _rewrite_multi_if(out: str) -> str:
@@ -3395,14 +3358,8 @@ def _rewrite_multi_if(out: str) -> str:
     Argument-aware like the If-combinators: balanced scan, top-level
     split, rebuilt on literal-MASKED text. An even argument count is
     malformed in CH too — refused loudly rather than mis-bracketed.
-    Nested multiIf in the arguments is handled by resuming the scan
-    AT the replacement (the outer name is gone, inner ones remain).
     """
-    pos = 0
-    while True:
-        m = re.compile(r"\bmultiIf\s*\(").search(out, pos)
-        if not m:
-            break
+    def build(out: str, m: re.Match) -> tuple[str, int]:
         close = _scan_balanced(out, m.end() - 1)
         args = [a.strip() for a in _split_top_level(out[m.end():close])]
         if close < 0 or len(args) < 3 or len(args) % 2 == 0:
@@ -3412,10 +3369,9 @@ def _rewrite_multi_if(out: str) -> str:
         whens = " ".join(
             f"WHEN {args[j]} THEN {args[j + 1]}"
             for j in range(0, len(args) - 1, 2))
-        repl = f"CASE {whens} ELSE {args[-1]} END"
-        out = out[:m.start()] + repl + out[close + 1:]
-        pos = m.start()
-    return out
+        return f"CASE {whens} ELSE {args[-1]} END", close + 1
+
+    return _rewrite_calls(out, r"\bmultiIf\s*\(", build)
 
 
 def _rewrite_if_combinators(out: str) -> str:
@@ -3432,9 +3388,8 @@ def _rewrite_if_combinators(out: str) -> str:
     matching close paren, splits the two args at the top level, and
     rebuilds. Runs on literal-MASKED text (see rewrite_aggregates), so
     quotes need no handling here. A call without exactly two top-level
-    args is left untouched. After a rewrite the scan resumes just past
-    the original position, so a same-name combinator nested in the
-    rewritten args (scalar subqueries) is rewritten too.
+    args is left untouched; a same-name combinator nested in the args
+    (scalar subqueries) is rewritten too.
     """
     forms = {name: (2, lambda a, c, agg=agg: f"{agg}(if({c}, {a[0]}, NULL))")
              for name, agg in IF_COMBINATORS.items()}
@@ -3459,22 +3414,16 @@ def _rewrite_if_combinators(out: str) -> str:
                      f"min_by(if({c}, {a[0]}, NULL), "
                      f"if({c}, {a[1]}, NULL))"),
     })
-    for name, (arity, build) in forms.items():
-        pos = 0
-        while True:
-            m = re.compile(rf"\b{name}\s*\(").search(out, pos)
-            if not m:
-                break
-            close = _scan_balanced(out, m.end() - 1)
-            args = [a.strip() for a in
-                    _split_top_level(out[m.end():close])]
-            if close < 0 or len(args) != arity:
-                pos = m.end()  # malformed/other arity: skip past it
-                continue
-            repl = build(args[:-1], args[-1])
-            out = out[:m.start()] + repl + out[close + 1:]
-            pos = m.start() + 1
-    return out
+
+    def build(out: str, m: re.Match) -> tuple[str, int]:
+        arity, emit = forms[m.group(1)]
+        close = _scan_balanced(out, m.end() - 1)
+        args = [a.strip() for a in _split_top_level(out[m.end():close])]
+        if close < 0 or len(args) != arity:
+            return m.group(0), m.end()  # malformed/other arity: skip
+        return emit(args[:-1], args[-1]), close + 1
+
+    return _rewrite_calls(out, rf"\b({'|'.join(forms)})\s*\(", build)
 
 
 #: ClickHouse ``LIMIT n BY cols`` — supported shape only: a top-level

@@ -160,7 +160,7 @@ def compact(spark: SparkSession, path: str, keep_old: bool = True) -> None:
     it. An epoch landing between the marker snapshot and the listing
     is duplicated instead if its commit is lost. A lock on the table
     root, taken by ingest, the epoch sink and compact(), is what will
-    rule both out (ROADMAP item 5).
+    rule both out (ROADMAP item 4).
 
     Version retention: the current and the immediately-previous
     version are kept (in-flight ``read_table`` snapshot readers finish

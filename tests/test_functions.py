@@ -511,3 +511,26 @@ def test_adhoc_values_expand_last():
         time_from="2024-01-01T00:00:00", time_to="2024-01-02T00:00:00",
         adhoc_filters=[("props", "=", "pay $interval of $from costs")])
     assert "'pay $interval of $from costs'" in out
+
+
+def test_adhoc_inside_a_literal_is_data():
+    """'$adhoc' inside a string literal is a value, and a filter value
+    cannot leave its own literal, whatever it holds."""
+    from rsyslog_nginx_clickhouse_spark.functions.macros import (
+        expand_macros,
+    )
+
+    assert expand_macros(
+        "SELECT 1 FROM $table WHERE m = 'x $adhoc y' AND $adhoc",
+        table="t") == "SELECT 1 FROM t WHERE m = 'x $adhoc y' AND 1=1"
+    out = expand_macros(
+        "SELECT 1 FROM $table WHERE note = 'see $adhoc' AND $adhoc",
+        table="t", adhoc_filters=[("verb", "=", "x') OR 1=1 --")])
+    assert out == ("SELECT 1 FROM t WHERE note = 'see $adhoc' "
+                   "AND (verb = 'x'') OR 1=1 --')")
+    # a value shaped like the text layer's literal placeholder stays
+    # the value; it is not swapped for the query's literal
+    out = expand_macros(
+        "SELECT 1 FROM $table WHERE note = 'a' AND $adhoc",
+        table="t", adhoc_filters=[("verb", "=", "\x000\x00")])
+    assert out == "SELECT 1 FROM t WHERE note = 'a' AND (verb = '\x000\x00')"

@@ -86,11 +86,125 @@ def test_driver_rewrites_every_same_name_call():
 
     assert (_rewrite_calls("SELECT f(a, b), f(c, f(d, e)) FROM t",
                            r"\bf\s*\(", build)
-            == "SELECT g(b, a), g(f(d, e), c) FROM t")
+            == "SELECT g(b, a), g(g(e, d), c) FROM t")
     two = rewrite_aggregates(
         "SELECT avgWeighted(x, w) AS a, avgWeighted(y, v) AS b FROM t")
     assert "avgWeighted" not in two
     assert two.count("(sum(CASE WHEN") == 2
+
+    # a build may skip a call (its own text back) or keep the name:
+    # replacement text is never searched again
+    def keep(out: str, m: re.Match) -> tuple[str, int]:
+        args, end = _take_call_args(out, m.end() - 1)
+        if len(args) != 2:
+            return m.group(0), m.end()
+        return f"f({args[1].strip()})", end
+
+    assert (_rewrite_calls("f(a, f(b)) + f(c, d)", r"\bf\s*\(", keep)
+            == "f(f(b)) + f(d)")
+
+
+# every call the driver rewrites, as ``name(... X ...)`` in the query
+# shape it needs; the test nests the call in its own X
+_SORTED = "SELECT g, {c} AS r FROM (SELECT * FROM t ORDER BY k) GROUP BY g"
+_PLAIN = "SELECT {c} AS r FROM t"
+_DRIVER_CALLS = [
+    (c, _SORTED) for c in (
+        "groupArray(X)", "groupArray(3)(X)", "groupArrayMovingSum(X)",
+        "groupArrayMovingAvg(2)(X)", "deltaSum(X)", "anyLast(X)",
+        "anyIf(X, c)", "anyLastIf(X, c)")
+] + [(c, _PLAIN) for c in (
+    "deltaSumTimestamp(X, ts)", "arraySort(groupArray(X))",
+    "arrayReverseSort(groupArray(X))", "quantilesExact(0.5)(X)",
+    "quantiles(0.5, 0.9)(X)", "quantilesTDigest(0.5)(X)",
+    "quantilesTiming(0.5)(X)", "groupUniqArray(X)", "sumCount(X)",
+    "uniqUpTo(2)(X)", "simpleLinearRegression(X, y)", "quantile(0.9)(X)",
+    "quantileExact(X)", "quantile(X)", "retention(X, b)",
+    "quantileExactWeighted(0.5)(X, w)", "medianExactWeighted(X, w)",
+    "arrayReduce('sum', X)", "entropy(X)", "maxIntersections(X, e)",
+    "maxIntersectionsPosition(X, e)", "intervalLengthSum(X, e)",
+    "sequenceNextNode('forward', 'head')(ts, X, b, c1)", "skewPop(X)",
+    "kurtPop(X)", "skewSamp(X)", "kurtSamp(X)",
+    "windowFunnel(3600)(ts, X, c2)", "sequenceMatch('(?1)(?2)')(ts, X, c2)",
+    "sequenceCount('(?1)(?2)')(ts, X, c2)", "uniqState(X)", "uniqMerge(X)",
+    "sumState(X)", "sumMerge(X)", "countState(X)", "countMerge(X)",
+    "minState(X)", "minMerge(X)", "maxState(X)", "maxMerge(X)",
+    "avgState(X)", "avgMerge(X)", "argMaxState(X, o)", "argMinState(X, o)",
+    "argMaxMerge(X)", "argMinMerge(X)", "topKState(3)(X)",
+    "topKMerge(3)(X)", "quantileState(X)", "quantileMerge(0.5)(X)",
+    "histogram(3)(X)", "sumMap(X, v)", "minMap(X, v)", "maxMap(X, v)",
+    "sumMapFiltered([1])(X, v)", "arrayDifference(X)", "arrayCumSum(X)",
+    "arrayCompact(X)", "arrayEnumerate(X)", "topK(3)(X)", "topK(X)",
+    "topKIf(3)(X, c)", "topKWeighted(3)(X, w)", "topKWeightedIf(3)(X, w, c)",
+    "quantileIf(0.9)(X, c)", "quantileExactIf(0.9)(X, c)",
+    "avgWeighted(X, w)", "boundingRatio(X, y)",
+    "nonNegativeDerivative(X, ts) OVER (ORDER BY ts)", "cramersV(X, b)",
+    "cramersVBiasCorrected(X, b)", "theilsU(X, b)", "contingency(X, b)",
+    "rankCorr(X, y)", "largestTriangleThreeBuckets(3)(X, y)",
+    "studentTTest(X, g)", "welchTTest(X, g)", "mannWhitneyUTest(X, g)",
+    "quantileDeterministic(0.5)(X, d)", "quantilesDeterministic(0.5)(X, d)",
+    "medianDeterministic(X, d)", "sparkbar(3)(X, y)", "sumIf(X, c)",
+    "avgIf(X, c)", "minIf(X, c)", "maxIf(X, c)", "uniqIf(X, c)",
+    "uniqExactIf(X, c)", "medianIf(X, c)", "argMaxIf(X, o, c)",
+    "argMinIf(X, o, c)", "multiIf(X, 1, 2)", "arrayMap(e -> e, X)",
+    "arrayFilter(e -> e > 0, X)", "arrayExists(e -> e > 0, X)",
+    "arrayAll(e -> e > 0, X)", "arrayCount(e -> e > 0, X)")]
+
+
+@pytest.mark.parametrize("call, shape", _DRIVER_CALLS,
+                         ids=[c for c, _ in _DRIVER_CALLS])
+def test_a_call_nested_in_itself_is_rewritten(call, shape):
+    name = re.match(r"\w+", call).group(0)
+    query = shape.format(c=call.replace("X", call.replace("X", "x")))
+    try:
+        out = rewrite_aggregates(query)
+    except ValueError as e:  # a refusal must name the call it refuses
+        assert name in str(e)
+    else:
+        assert not re.search(rf"\b{name}\s*\(", out), out
+
+
+def test_nested_calls_rewrite_innermost_first():
+    assert rewrite_aggregates("SELECT quantile(quantile(x)) FROM t") == \
+        "SELECT percentile_approx(percentile_approx(x, 0.5), 0.5) FROM t"
+    assert rewrite_aggregates("SELECT skewPop(skewPop(x)) FROM t") == \
+        "SELECT skewness(skewness(x)) FROM t"
+    assert macros.expand_macros(
+        "SELECT 1 FROM $table WHERE $conditionalTest("
+        "a = 1 $conditionalTest(AND b = 2, $v), $w)", table="t",
+        template_vars={"v": "", "w": "1"}) == \
+        "SELECT 1 FROM t WHERE a = 1"
+
+
+# three-level arguments, each against the same query with the argument
+# aliased in a subquery (the form the old depth limit asked for)
+_DEEP = "lower(trim(upper(s)))"
+_DEEP_NUM = "abs(round(floor(v), 1))"
+
+
+@pytest.mark.parametrize("deep, aliased", [
+    (f"SELECT groupUniqArray({_DEEP}) AS r FROM deep",
+     f"SELECT groupUniqArray(a) AS r FROM (SELECT {_DEEP} AS a FROM deep)"),
+    (f"SELECT quantile(0.9)({_DEEP_NUM}) AS r FROM deep",
+     f"SELECT quantile(0.9)(a) AS r FROM (SELECT {_DEEP_NUM} AS a "
+     f"FROM deep)"),
+    (f"SELECT quantilesExact(0.1, 0.9)({_DEEP_NUM}) AS r FROM deep",
+     f"SELECT quantilesExact(0.1, 0.9)(a) AS r FROM (SELECT {_DEEP_NUM} "
+     f"AS a FROM deep)"),
+    (f"SELECT skewSamp({_DEEP_NUM}) AS r FROM deep",
+     f"SELECT skewSamp(a) AS r FROM (SELECT {_DEEP_NUM} AS a FROM deep)"),
+    ("SELECT uniqMerge(slice(array_sort(array_distinct(st)), 1, 2048)) AS r"
+     f" FROM (SELECT uniqState({_DEEP}) AS st FROM deep GROUP BY g)",
+     "SELECT uniqMerge(st) AS r FROM (SELECT uniqState(a) AS st FROM "
+     f"(SELECT g, {_DEEP} AS a FROM deep) GROUP BY g)"),
+])
+def test_deep_arguments_equal_their_aliased_form(spark, deep, aliased):
+    spark.createDataFrame(
+        [(i % 3, i * 1.7 % 13, [" Ab", "ab ", "CD", " x "][i % 4])
+         for i in range(40)], "g int, v double, s string") \
+        .createOrReplaceTempView("deep")
+    assert macros.sql(spark, deep).collect() == \
+        macros.sql(spark, aliased).collect()
 
 
 @pytest.mark.parametrize("query, message", [
