@@ -41,6 +41,7 @@ from rsyslog_nginx_clickhouse_spark.plans.storage import (
 )
 from rsyslog_nginx_clickhouse_spark.session import get_spark
 from rsyslog_nginx_clickhouse_spark.sources.nginx_log import (
+    NGINX_TABLE_SCHEMA,
     dead_letters,
     ingest_batch,
     parse_lines,
@@ -87,8 +88,10 @@ class Engine:
                             checkpoint, **kwargs)
 
     def compact(self) -> None:
-        """↔ MergeTree background merge (run out-of-band)."""
-        compact(self.spark, self.table_root)
+        """↔ MergeTree background merge (run out-of-band): merges only
+        the partitions that need it, under the declared schema, so no
+        schema-inference job runs."""
+        compact(self.spark, self.table_root, schema=NGINX_TABLE_SCHEMA)
 
     # ---- query (the ClickHouse/Grafana half) ----
 

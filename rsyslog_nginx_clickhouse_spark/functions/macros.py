@@ -155,9 +155,19 @@ def _mask_literals(text: str) -> tuple[str, dict[str, str]]:
     """``text`` with each string literal replaced by a placeholder, and
     the placeholder → literal map that restores them. A masked literal
     is its own key: ``lits.get(tok)`` is the literal when ``tok`` is
-    exactly one."""
+    exactly one.
+
+    The placeholders are delimited by NUL, so a NUL in ``text`` outside
+    a string literal raises ``ValueError``: unmasking would take it for
+    a placeholder. A NUL inside a literal is masked with it."""
     lits: dict[str, str] = {}
-    return _STR_LIT.sub(lambda m: _hide(m.group(0), lits), text), lits
+    out = _STR_LIT.sub(lambda m: _hide(m.group(0), lits), text)
+    if out.count("\x00") != 2 * len(lits):
+        raise ValueError(
+            "query text holds a NUL character (\\x00) outside a string "
+            "literal; NUL delimits the SQL text layer's literal "
+            "placeholders")
+    return out, lits
 
 
 def _hide(text: str, lits: dict[str, str]) -> str:
@@ -246,13 +256,13 @@ def _rewrite_calls(out: str, rx: str,
 
 
 def _rewrite_templates(out: str, templates: dict[str, str]) -> str:
-    """Each ``name(args)`` call of a ``templates`` name (no space
-    before the ``(``) → its template, ``{x}`` the raw argument text."""
+    """Each ``name(args)`` call of a ``templates`` name → its
+    template, ``{x}`` the raw argument text."""
     def build(out: str, m: re.Match) -> tuple[str, int]:
         args, end = _take_call_args(out, m.end() - 1)
         return templates[m.group(1)].format(x=",".join(args)), end
 
-    return _rewrite_calls(out, rf"\b({'|'.join(templates)})\(", build)
+    return _rewrite_calls(out, rf"\b({'|'.join(templates)})\s*\(", build)
 
 
 def expand_function_macros(sql: str, bucket: str) -> str:
@@ -915,7 +925,7 @@ def rewrite_aggregates(out: str) -> str:
 
     out = _rewrite_calls(
         out, r"\b(quantilesExact|quantilesTDigest|quantilesTiming"
-             r"|quantiles)\(", quantiles)
+             r"|quantiles)\s*\(", quantiles)
     # groupUniqArray(x) → sorted distinct array. DOCUMENTED
     # deviation: ClickHouse returns the distinct elements in
     # nondeterministic (block) order; the deterministic sorted form
@@ -942,7 +952,7 @@ def rewrite_aggregates(out: str) -> str:
         n, x, end = groups
         return f"least(count(DISTINCT {x}), {int(n) + 1})", end
 
-    out = _rewrite_calls(out, r"\buniqUpTo\(", uniq_up_to)
+    out = _rewrite_calls(out, r"\buniqUpTo\s*\(", uniq_up_to)
     if re.search(r"\buniqUpTo\s*\(", out):
         raise ValueError(
             "uniqUpTo needs the parametric literal form "
@@ -962,7 +972,7 @@ def rewrite_aggregates(out: str) -> str:
         return (f"named_struct('k', regr_slope({y}, {x}), "
                 f"'b', regr_intercept({y}, {x}))"), end
 
-    out = _rewrite_calls(out, r"\bsimpleLinearRegression\(", linreg)
+    out = _rewrite_calls(out, r"\bsimpleLinearRegression\s*\(", linreg)
     out = _rewrite_array_reduce(out, lits)
     out = _rewrite_entropy_intervals(out)
     out = _rewrite_shape_stats(out)
@@ -1013,7 +1023,7 @@ def rewrite_aggregates(out: str) -> str:
         p, x, end = groups
         return f"{m.group(1)}({x}, {p})", end
 
-    out = _rewrite_calls(out, r"\b(percentile_approx|percentile)\(",
+    out = _rewrite_calls(out, r"\b(percentile_approx|percentile)\s*\(",
                          collapse)
     # bare CH quantile(x) / quantileExact(x) default to the median;
     # Spark's percentile family REQUIRES the fraction, so a renamed
@@ -1813,7 +1823,7 @@ def _rewrite_state_merge(out: str) -> str:
     # zero-arg countState() — the spelling CH MV bodies use (the
     # zero-arg count() fix upstream can't see it: the token is still
     # countState at that point). The state is the partial row count.
-    out = re.sub(r"\bcountState\(\s*\)", "count(*)", out)
+    out = re.sub(r"\bcountState\s*\(\s*\)", "count(*)", out)
     # the ADDITIVE -State/-Merge family (sum/count/min/max/avg —
     # the SummingMergeTree MV spellings): these states ARE their
     # partial values (CH stores the running accumulator), so State
@@ -1849,7 +1859,7 @@ def _rewrite_state_merge(out: str) -> str:
         fn = "max" if m.group(1) == "argMax" else "min"
         return f"{fn}(named_struct('o', ({o}), 'p', ({p})))", end
 
-    out = _rewrite_calls(out, r"\b(argMax|argMin)State\(", arg_state)
+    out = _rewrite_calls(out, r"\b(argMax|argMin)State\s*\(", arg_state)
     # topKState(N)(x) / topKMerge(N)(st): the state is this group's
     # EXACT (value, count) pairs truncated to the top-N by
     # (count DESC, value ASC) — the deterministic Space-Saving

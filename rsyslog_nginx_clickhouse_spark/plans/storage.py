@@ -30,7 +30,11 @@ Spark mapping (SURVEY §1.3):
   readable, and the next ``compact()`` rewrites them as zstd.
 - ``compact()``                       ↔ background merges: micro-batch
   appends create small sorted parts; periodic compaction rewrites each
-  partition into one sorted file.
+  partition that holds more than one part or a part that is not zstd
+  into one sorted file, and hard-links every other partition's one part
+  into the new version under a fresh name, as a MergeTree merge leaves
+  a partition of one part alone. The previous version then costs only
+  the rewritten partitions, once disk is counted per inode.
 - ``read_table(schema=...)``          ↔ the DDL's column list: the table
   is read with its declared schema (``NGINX_TABLE_SCHEMA`` by default),
   so opening it lists the files but runs no schema-inference job.
@@ -70,7 +74,9 @@ def _salted_repartition(df: DataFrame,
     would coalesce an expression-only repartition) scaled by session
     parallelism so a multi-day backfill isn't capped at
     files_per_partition writers TOTAL. Per-day FILE count stays bounded
-    by the salt domain. Shared by the write and compaction paths.
+    by the salt domain. ``compact()`` writes one part per partition and
+    repartitions on ``PARTITION_COL`` alone instead: its salt would be
+    the constant 0.
     """
     salt = F.pmod(F.xxhash64(*[F.col(c) for c in SORT_COLS]),
                   F.lit(files_per_partition))
@@ -117,12 +123,81 @@ def read_table(spark: SparkSession, path: str,
     return reader.parquet(os.path.realpath(path))
 
 
-def compact(spark: SparkSession, path: str, keep_old: bool = True) -> None:
-    """↔ MergeTree background merge: rewrite each partition into one
-    sorted part.
+#: Hive's directory value for a null partition value
+_NULL_PARTITION = "__HIVE_DEFAULT_PARTITION__"
 
-    The current version is read with its inferred schema, so a table of
-    any shape keeps every column it has.
+
+def _is_zstd(part: str) -> bool:
+    """Whether every column chunk of the parquet file ``part`` is zstd,
+    read from its footer (an epoch part's name carries no codec)."""
+    import pyarrow.parquet as pq
+
+    md = pq.read_metadata(part)
+    return md.num_row_groups > 0 and all(
+        md.row_group(rg).column(c).compression == COMPRESSION.upper()
+        for rg in range(md.num_row_groups)
+        for c in range(md.num_columns))
+
+
+def _merge_plan(real: str) -> tuple[list[tuple[str, str]], list[str]]:
+    """List the partitions of the table version ``real``: the clean
+    ones as ``(directory, part)`` and the dirty ones' directory values.
+
+    A partition is clean when it holds exactly one part and that part
+    is zstd; every other partition is dirty. Parts are the files a
+    parquet reader reads: those not named ``.*`` or ``_*``."""
+    import os
+
+    clean, dirty = [], []
+    for d in sorted(os.listdir(real)):
+        if not d.startswith(PARTITION_COL + "="):
+            continue
+        parts = [f for f in os.listdir(os.path.join(real, d))
+                 if not f.startswith((".", "_"))]
+        if len(parts) == 1 and _is_zstd(os.path.join(real, d, parts[0])):
+            clean.append((d, parts[0]))
+        else:
+            dirty.append(d.split("=", 1)[1])
+    return clean, dirty
+
+
+def _dirty_rows(spark: SparkSession, real: str, dirty: list[str],
+                schema: StructType | None) -> DataFrame:
+    """The rows of the ``dirty`` partitions of ``real``, read through
+    the whole table and filtered on the partition values, so Catalyst
+    prunes the scan to their directories. Reading the directories by
+    themselves would infer the partition column from them alone: a
+    null partition alone infers as VOID, which no write accepts."""
+    from urllib.parse import unquote
+
+    values = [unquote(v) for v in dirty if v != _NULL_PARTITION]
+    keep = F.col(PARTITION_COL).cast("string").isin(values)
+    if len(values) < len(dirty):
+        keep = keep | F.col(PARTITION_COL).isNull()
+    return read_table(spark, real, schema).where(keep)
+
+
+def compact(spark: SparkSession, path: str, keep_old: bool = True,
+            schema: StructType | None = None) -> None:
+    """↔ MergeTree background merge: merge the parts of each partition
+    that needs it into one sorted part, and leave the rest alone.
+
+    A partition needs a merge (is *dirty*) unless it holds exactly one
+    part and that part is zstd (the codec is read from the footer).
+    One part is already sorted by ``SORT_COLS``: ``write_mergetree_like``
+    is the table's only writer and sorts every part it writes. Only the
+    dirty partitions are read and rewritten, one part each; every clean
+    partition is carried into the new version by hard link (same inode,
+    no bytes copied) under a fresh name, ``part-v<N>-<k>.zstd.parquet``
+    with its ``.crc`` sidecar, so file names stay unique per version
+    (see ``read_table``). With nothing dirty no Spark job runs. Since a
+    carried part shares its inode with the previous version, that
+    version costs only the rewritten partitions once disk is counted
+    per inode.
+
+    ``schema`` is the table's declared schema; ``None`` infers it from
+    the current version, so a table of any shape keeps every column it
+    has.
 
     Publication is a VERSIONED-DIRECTORY + symlink flip (the local-FS
     analog of a table-format manifest commit):
@@ -153,7 +228,8 @@ def compact(spark: SparkSession, path: str, keep_old: bool = True) -> None:
     the data listing, so no carried marker claims data the compacted
     files lack. Nothing ENFORCES the contract yet, and breaking it can
     lose rows silently: an epoch or an ``Engine.ingest`` published
-    after the listing (``read_table`` below) and before the cutover
+    after the listing (``_merge_plan``'s listing of the partitions,
+    and the read of the dirty ones after it) and before the cutover
     lands only in the previous version. Once that epoch's checkpoint
     commit is written nothing replays it (an ingest has no replay at
     all), and the next compact() prunes that version with the rows in
@@ -165,12 +241,18 @@ def compact(spark: SparkSession, path: str, keep_old: bool = True) -> None:
     Version retention: the current and the immediately-previous
     version are kept (in-flight ``read_table`` snapshot readers finish
     against the previous one); older versions are pruned here, so disk
-    holds at most two copies. ``keep_old=False`` prunes the previous
-    version too (single-reader / caller-owns-readers mode).
+    holds at most two copies of the rewritten partitions and one of the
+    carried ones. ``keep_old=False`` prunes the previous version too
+    (single-reader / caller-owns-readers mode).
     """
     import glob
     import os
     import shutil
+    import stat
+
+    def mkdir_like(src: str, dst: str) -> None:
+        os.mkdir(dst)
+        os.chmod(dst, stat.S_IMODE(os.stat(src).st_mode))
 
     base = path.rstrip("/")
     n = 1 + max((int(p.rsplit("-v", 1)[1])
@@ -187,9 +269,23 @@ def compact(spark: SparkSession, path: str, keep_old: bool = True) -> None:
     real = os.path.realpath(base)
     # snapshot markers BEFORE listing data files — see docstring
     markers = glob.glob(os.path.join(real, "_epoch_*_SUCCESS"))
-    df = read_table(spark, real, None)
+    clean, dirty = _merge_plan(real)
     new = f"{base}.compact-v{n}"
-    write_mergetree_like(df, new, "overwrite", files_per_partition=1)
+    if dirty:
+        # one task per partition, so one part each
+        write_mergetree_like(
+            _dirty_rows(spark, real, dirty, schema).repartition(
+                PARTITION_COL), new, "overwrite")
+    else:
+        mkdir_like(real, new)
+    for k, (d, part) in enumerate(clean):
+        src, dst = os.path.join(real, d), os.path.join(new, d)
+        mkdir_like(src, dst)
+        name = f"part-v{n}-{k}.{COMPRESSION}.parquet"
+        os.link(os.path.join(src, part), os.path.join(dst, name))
+        crc = os.path.join(src, f".{part}.crc")
+        if os.path.exists(crc):
+            os.link(crc, os.path.join(dst, f".{name}.crc"))
     for marker in markers:
         shutil.copy2(marker, new)
     tmplink = base + ".swap"

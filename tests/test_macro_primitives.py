@@ -176,6 +176,38 @@ def test_nested_calls_rewrite_innermost_first():
         "SELECT 1 FROM t WHERE a = 1"
 
 
+def _outcome(query: str) -> str:
+    try:
+        return rewrite_aggregates(query)
+    except ValueError as e:
+        return f"ValueError: {e}"
+
+
+@pytest.mark.parametrize("call, shape", _DRIVER_CALLS,
+                         ids=[c for c, _ in _DRIVER_CALLS])
+def test_a_space_before_the_paren_rewrites_the_same(call, shape):
+    """ClickHouse accepts ``name (args)``; so must every rewrite."""
+    spaced = re.sub(r"^(\w+)\(", r"\1 (", call)
+    assert _outcome(shape.format(c=spaced.replace("X", "x"))) == \
+        _outcome(shape.format(c=call.replace("X", "x")))
+
+
+@pytest.mark.parametrize("nul", ["\x000\x00", "\x007\x00"])
+def test_a_nul_is_never_taken_for_a_literal_placeholder(nul):
+    """The placeholders are NUL-delimited: NUL in the query text is
+    refused outside a string literal and kept as data inside one."""
+    with pytest.raises(ValueError, match="NUL character"):
+        rewrite_aggregates(f"SELECT 'a' AS s, {nul} AS t FROM t")
+    with pytest.raises(ValueError, match="NUL character"):
+        macros.expand_macros("SELECT 'a' AS s, $v AS t FROM $table",
+                             table="t", template_vars={"v": nul})
+    quoted = f"SELECT 'a' AS s, '{nul}' AS t FROM t"
+    assert rewrite_aggregates(quoted) == quoted
+    assert macros.expand_macros("SELECT 'a' AS s, '$v' AS t FROM $table",
+                                table="t", template_vars={"v": nul}) \
+        == quoted
+
+
 # three-level arguments, each against the same query with the argument
 # aliased in a subquery (the form the old depth limit asked for)
 _DEEP = "lower(trim(upper(s)))"
