@@ -26,10 +26,12 @@ import re
 
 from pyspark.sql import DataFrame, SparkSession
 
-#: declared dictionaries: name -> {attr -> fn_name}; consulted by the
-#: rewrite so an undeclared dictionary fails loudly at rewrite time
-#: (not as an UNRESOLVED_ROUTINE deep inside Spark's analyzer)
-_DICTIONARIES: dict[str, dict[str, str]] = {}
+# the dictGet rewrite is a pass of the SQL text layer (macros.py);
+# declare_dictionary fills its registry
+from rsyslog_nginx_clickhouse_spark.functions.macros import (  # noqa: F401
+    _DICTIONARIES,
+    rewrite_dict_get,
+)
 
 MAX_DICT_ROWS = 10_000
 
@@ -208,50 +210,3 @@ def _declare_join_dictionary(spark: SparkSession, name: str,
             f"{default})")
         fns[attr] = fn
     _DICTIONARIES[name] = fns
-
-
-_DICT_GET_RE = re.compile(
-    r"(?is)\bdictGet\s*\(\s*'(?P<name>\w+)'\s*,\s*'(?P<attr>\w+)'\s*,")
-
-
-def rewrite_dict_get(query: str) -> str:
-    """``dictGet('name', 'attr', key_expr)`` →
-    ``__dict_name_attr(key_expr)``. Literal name/attr only (the CH
-    form — computed dictionary names are refused loudly). String
-    literals are masked first so data mentioning ``dictGet`` comes
-    back byte-identical (the rewrite_aggregates discipline) — BUT the
-    mask must not hide the name/attr literals the pattern itself
-    consumes, so masking applies only when the quote is not part of a
-    dictGet call head (the pattern runs before the mask)."""
-    lits: list[str] = []
-
-    def _mask(m: re.Match) -> str:
-        lits.append(m.group(0))
-        return f"\x00{len(lits) - 1}\x00"
-
-    def _sub(m: re.Match) -> str:
-        d = _DICTIONARIES.get(m.group("name"))
-        if d is None:
-            raise ValueError(
-                f"dictGet: dictionary {m.group('name')!r} is not "
-                f"declared — call declare_dictionary(...) first (the "
-                f"CH CREATE DICTIONARY DDL analog)")
-        fn = d.get(m.group("attr"))
-        if fn is None:
-            raise ValueError(
-                f"dictGet: dictionary {m.group('name')!r} has no "
-                f"attribute {m.group('attr')!r} (declared: "
-                f"{sorted(d)})")
-        return f"{fn}("
-
-    out = _DICT_GET_RE.sub(_sub, query)
-    # leak check on literal-MASKED text: a string literal mentioning
-    # dictGet must not trip the refusal (and comes back untouched)
-    masked = re.sub(r"'(?:[^']|'')*'", _mask, out)
-    if re.search(r"(?is)\bdictGet\w*\s*\(", masked):
-        raise ValueError(
-            "unsupported dictGet form — needs literal "
-            "dictGet('<name>', '<attr>', <key expr>); the typed "
-            "dictGetString/dictGetInt variants and computed names "
-            "are not implemented")
-    return out

@@ -10,13 +10,22 @@ The reference's one published query (/root/reference/README.md:279-285):
 touches the planner (SURVEY §3.3), so Catalyst sees plain SQL and all
 pushdown/pruning applies to the expanded predicate.
 
+String literals are masked once at the entry of each layer: the macro
+layer (``expand_macros``), the aggregate layer (``rewrite_aggregates``)
+and the statement layer (``sql``, whose passes before and after the
+macro layer run as two groups). Every pass receives the masked text
+and the layer's literal map and never masks for itself, so a quoted
+``(``, ``,``, ``$table`` or ``PREWHERE`` is data, never syntax. Only
+the template stage reads quoted text: Grafana substitutes ``$var``
+inside quotes too, and ``$unescape('…')`` turns a literal into SQL.
+A public rewrite taking raw text is its pass run through
+``_run_masked``.
+
 Every text rewrite here is built on three primitives, each stated once:
 
 - ``_mask_literals`` / ``_unmask_literals``: string literals are
-  swapped for placeholders before a rewrite and restored after it, so
-  rewrites only ever see string data masked — a quoted ``(``, ``,``,
-  ``$table`` or function name is data, never syntax (``_hide`` hides
-  any one text the same way);
+  swapped for placeholders at a layer's entry and restored at its
+  exit;
 - ``_scan_balanced``: the matching ``)`` of a ``(`` (``_take_call_args``
   adds the top-level argument split);
 - ``_rewrite_calls``: the one loop that finds calls and splices their
@@ -29,6 +38,7 @@ Every text rewrite here is built on three primitives, each stated once:
 
 from __future__ import annotations
 
+import functools
 import re
 from collections.abc import Callable
 
@@ -151,18 +161,27 @@ def _split_expr_alias(arg: str) -> tuple[str, str]:
 _STR_LIT = re.compile(r"'(?:[^'\\]|\\.|'')*'")
 
 
-def _mask_literals(text: str) -> tuple[str, dict[str, str]]:
+def _mask_literals(text: str, lits: dict[str, str] | None = None
+                   ) -> tuple[str, dict[str, str]]:
     """``text`` with each string literal replaced by a placeholder, and
-    the placeholder → literal map that restores them. A masked literal
-    is its own key: ``lits.get(tok)`` is the literal when ``tok`` is
-    exactly one.
+    the placeholder → literal map that restores them (``lits``, when
+    given, is extended, for raw text spliced into masked text). A masked
+    literal is its own key: ``lits.get(tok)`` is the literal when
+    ``tok`` is exactly one.
 
     The placeholders are delimited by NUL, so a NUL in ``text`` outside
     a string literal raises ``ValueError``: unmasking would take it for
     a placeholder. A NUL inside a literal is masked with it."""
-    lits: dict[str, str] = {}
-    out = _STR_LIT.sub(lambda m: _hide(m.group(0), lits), text)
-    if out.count("\x00") != 2 * len(lits):
+    lits = {} if lits is None else lits
+    known = len(lits)
+
+    def hide(m: re.Match) -> str:
+        mark = f"\x00{len(lits)}\x00"
+        lits[mark] = m.group(0)
+        return mark
+
+    out = _STR_LIT.sub(hide, text)
+    if out.count("\x00") != 2 * (len(lits) - known):
         raise ValueError(
             "query text holds a NUL character (\\x00) outside a string "
             "literal; NUL delimits the SQL text layer's literal "
@@ -170,17 +189,30 @@ def _mask_literals(text: str) -> tuple[str, dict[str, str]]:
     return out, lits
 
 
-def _hide(text: str, lits: dict[str, str]) -> str:
-    """A fresh placeholder for ``text`` in ``lits``: no rewrite reads
-    what it hides, and ``_unmask_literals`` restores it verbatim."""
-    mark = f"\x00{len(lits)}\x00"
-    lits[mark] = text
-    return mark
-
-
 def _unmask_literals(text: str, lits: dict[str, str]) -> str:
     """Every placeholder of ``_mask_literals`` back to its literal."""
     return re.sub(r"\x00\d+\x00", lambda m: lits[m.group(0)], text)
+
+
+def _run_masked(query: str,
+                *passes: Callable[[str, dict[str, str]], str]) -> str:
+    """``query`` through ``passes`` in order, masked once before the
+    first and unmasked once after the last: how a layer runs. A pass
+    takes the masked text and the layer's literal map."""
+    out, lits = _mask_literals(query)
+    for p in passes:
+        out = p(out, lits)
+    return _unmask_literals(out, lits)
+
+
+def _raw_text(p: Callable[..., str]) -> Callable[..., str]:
+    """The public, raw-text form of pass ``p``: ``f(query, *args)``
+    runs ``p(masked, lits, *args)`` through ``_run_masked``."""
+    @functools.wraps(p)
+    def on_raw(query: str, *args, **kwargs) -> str:
+        return _run_masked(
+            query, lambda out, lits: p(out, lits, *args, **kwargs))
+    return on_raw
 
 
 def _scan_balanced(text: str, open_pos: int) -> int:
@@ -288,7 +320,7 @@ def expand_function_macros(sql: str, bucket: str) -> str:
     ``bucket`` is the already-rendered $timeSeries expression;
     windows order by the bucket, so the lag is the PREVIOUS NON-EMPTY
     bucket, exactly like runningDifference over the plugin's grouped
-    subquery.
+    subquery. ``sql`` is literal-masked (a pass of ``expand_macros``).
     """
     m = re.match(
         r"\s*\$(rate|perSecond|columns|rateColumns|perSecondColumns)"
@@ -296,9 +328,6 @@ def expand_function_macros(sql: str, bucket: str) -> str:
     if not m:
         return sql
     name = m.group(1)
-    # mask string literals so a ')' or ',' INSIDE a quoted value can't
-    # derail the paren scan / arg split; restored on the final string
-    sql, lits = _mask_literals(sql)
     args, after = _take_call_args(sql, m.end() - 1)
     tail = sql[after:].strip()  # "FROM $table WHERE ..." — kept intact
     if not tail.lower().startswith("from"):
@@ -321,11 +350,10 @@ def expand_function_macros(sql: str, bucket: str) -> str:
                  (_split_expr_alias(a) for a in args)]
         inner = ", ".join(f"{e} AS {al}" for e, al in pairs)
         outer = ", ".join(f"{al} / dt AS {al}" for _, al in pairs)
-        return _unmask_literals(
-            f"SELECT t, {outer} FROM ("
-            f"SELECT t, {', '.join(al for _, al in pairs)}, {dt} AS dt"
-            f" FROM (SELECT {bucket} AS t, {inner} {tail}"
-            f" GROUP BY t)) ORDER BY t", lits)
+        return (f"SELECT t, {outer} FROM ("
+                f"SELECT t, {', '.join(al for _, al in pairs)}, {dt} AS dt"
+                f" FROM (SELECT {bucket} AS t, {inner} {tail}"
+                f" GROUP BY t)) ORDER BY t")
 
     if name == "perSecond":
         pairs = [(e, _check_alias(al)) for e, al in
@@ -337,11 +365,10 @@ def expand_function_macros(sql: str, bucket: str) -> str:
         outer = ", ".join(
             f"CASE WHEN d_{al} < 0 THEN NULL ELSE d_{al} / dt END"
             f" AS {al}PerSecond" for _, al in pairs)
-        return _unmask_literals(
-            f"SELECT t, {outer} FROM ("
-            f"SELECT t, {diffs}, {dt} AS dt"
-            f" FROM (SELECT {bucket} AS t, {inner} {tail}"
-            f" GROUP BY t)) ORDER BY t", lits)
+        return (f"SELECT t, {outer} FROM ("
+                f"SELECT t, {diffs}, {dt} AS dt"
+                f" FROM (SELECT {bucket} AS t, {inner} {tail}"
+                f" GROUP BY t)) ORDER BY t")
 
     # the *Columns family: args = (key, value)
     if len(args) != 2:
@@ -351,39 +378,35 @@ def expand_function_macros(sql: str, bucket: str) -> str:
     vexpr, val = _split_expr_alias(args[1])
     _check_alias(val)
     if name == "columns":
-        return _unmask_literals(
-            f"SELECT {bucket} AS t, {kexpr} AS {kal}, "
-            f"{vexpr} AS {val} {tail} "
-            f"GROUP BY t, {kal} ORDER BY t, {kal}", lits)
+        return (f"SELECT {bucket} AS t, {kexpr} AS {kal}, "
+                f"{vexpr} AS {val} {tail} "
+                f"GROUP BY t, {kal} ORDER BY t, {kal}")
     pdt = ("(unix_timestamp(t) - unix_timestamp("
            f"lag(t) OVER (PARTITION BY {kal} ORDER BY t)))")
     if name == "rateColumns":
-        return _unmask_literals(
-            f"SELECT t, {kal}, {val} / dt AS {val} FROM ("
-            f"SELECT t, {kal}, {val}, {pdt} AS dt"
-            f" FROM (SELECT {bucket} AS t, {kexpr} AS {kal},"
-            f" {vexpr} AS {val} {tail} GROUP BY t, {kal}))"
-            f" ORDER BY t, {kal}", lits)
+        return (f"SELECT t, {kal}, {val} / dt AS {val} FROM ("
+                f"SELECT t, {kal}, {val}, {pdt} AS dt"
+                f" FROM (SELECT {bucket} AS t, {kexpr} AS {kal},"
+                f" {vexpr} AS {val} {tail} GROUP BY t, {kal}))"
+                f" ORDER BY t, {kal}")
     # perSecondColumns
-    return _unmask_literals(
-        f"SELECT t, {kal}, CASE WHEN d < 0 THEN NULL"
-        f" ELSE d / dt END AS {val}PerSecond FROM ("
-        f"SELECT t, {kal},"
-        f" ({val} - lag({val}) OVER (PARTITION BY {kal} ORDER BY t))"
-        f" AS d, {pdt} AS dt"
-        f" FROM (SELECT {bucket} AS t, {kexpr} AS {kal},"
-        f" max({vexpr}) AS {val} {tail} GROUP BY t, {kal}))"
-        f" ORDER BY t, {kal}", lits)
+    return (f"SELECT t, {kal}, CASE WHEN d < 0 THEN NULL"
+            f" ELSE d / dt END AS {val}PerSecond FROM ("
+            f"SELECT t, {kal},"
+            f" ({val} - lag({val}) OVER (PARTITION BY {kal} ORDER BY t))"
+            f" AS d, {pdt} AS dt"
+            f" FROM (SELECT {bucket} AS t, {kexpr} AS {kal},"
+            f" max({vexpr}) AS {val} {tail} GROUP BY t, {kal}))"
+            f" ORDER BY t, {kal}")
 
 
 def _expand_conditional_test(sql: str, template_vars: dict) -> str:
     """``$conditionalTest(SQL, $var)`` → SQL when the dashboard
     template variable ``var`` holds a non-empty value, else nothing —
     the plugin helper for optional WHERE fragments. The split is the
-    LAST top-level comma (the SQL part may itself contain commas);
-    string literals are masked during the scan like everywhere else —
-    a '$conditionalTest(' appearing only INSIDE a literal is user data
-    and is left untouched.
+    LAST top-level comma (the SQL part may itself contain commas).
+    ``sql`` is literal-masked, so a '$conditionalTest(' appearing only
+    INSIDE a literal is user data and is left untouched.
     """
     def build(out: str, m: re.Match) -> tuple[str, int]:
         args, after = _take_call_args(out, m.end() - 1)
@@ -399,9 +422,36 @@ def _expand_conditional_test(sql: str, template_vars: dict) -> str:
             None, "", [], ()) else ""
         return body, after
 
-    masked, lits = _mask_literals(sql)
-    return _unmask_literals(
-        _rewrite_calls(masked, r"\$conditionalTest\s*\(", build), lits)
+    return _rewrite_calls(sql, r"\$conditionalTest\s*\(", build)
+
+
+def _substitute_template_vars(sql: str, lits: dict[str, str],
+                              template_vars: dict) -> str:
+    """The template stage, the one pass that reads quoted text. Like
+    Grafana core, ``$var`` is substituted inside quoted literals too
+    (``... WHERE etype = '$etype'``): in every literal of ``lits``,
+    and in the masked text with the value's own literals masked.
+    ``$unescape('expr')`` then splices expr without the quotes."""
+    for var, val in template_vars.items():
+        if var in _RESERVED_MACRO_NAMES:  # would corrupt expansion
+            raise ValueError(
+                f"template variable ${var} shadows a plugin macro")
+        token = re.compile(rf"\${re.escape(var)}\b")
+        # lambda replacements: a plain str(val) would be parsed for
+        # regex escapes — a value containing '\l' raises re.error and
+        # '\t' silently becomes a TAB in the emitted SQL
+        for mark, lit in list(lits.items()):
+            lits[mark] = token.sub(lambda _m: str(val), lit)
+        sql = token.sub(
+            lambda _m: _mask_literals(str(val), lits)[0], sql)
+
+    def unescape(m: re.Match) -> str:
+        inner = re.fullmatch(r"'([^']*)'", lits[m.group(1)])
+        # the unquoted text is SQL now: masking it only refuses a NUL
+        return _mask_literals(inner.group(1), lits)[0] if inner \
+            else m.group(0)
+
+    return re.sub(r"\$unescape\(\s*(\x00\d+\x00)\s*\)", unescape, sql)
 
 
 #: ClickHouse ``PARTITION BY toYYYYMMDD(date_col)`` — the DDL tells the
@@ -458,46 +508,31 @@ def expand_macros(sql: str, table: str, time_col: str = "logdatetime",
     ``$unescape('expr')`` splices expr without the quotes.
     """
 
+    sql, lits = _mask_literals(sql)
+
     def bucket_expr(width_s: int) -> str:
         return (f"timestamp_seconds(floor(unix_timestamp({time_col})"
                 f" / {width_s}) * {width_s})")
 
+    def ts(iso: str) -> str:  # a timestamp literal, masked like any
+        return _mask_literals(f"timestamp'{iso}'", lits)[0]
+
     def col_bounds(col: str) -> str:
         b = []
         if time_from:
-            b.append(f"{col} >= timestamp'{time_from}'")
+            b.append(f"{col} >= {ts(time_from)}")
         if time_to:
-            b.append(f"{col} <= timestamp'{time_to}'")
+            b.append(f"{col} <= {ts(time_to)}")
         return " AND ".join(b) if b else "1=1"
 
     # template-level macros first — they decide which SQL text even
     # exists before any other expansion sees it
     sql = _expand_conditional_test(sql, template_vars or {})
-    # Grafana core substitutes $var template tokens before the
-    # datasource plugin runs; mirror that here. Names must not shadow
-    # the plugin macro set (that would silently corrupt expansion).
-    for var, val in (template_vars or {}).items():
-        if var in _RESERVED_MACRO_NAMES:
-            raise ValueError(
-                f"template variable ${var} shadows a plugin macro")
-        # lambda replacement: a plain str(val) would be parsed for
-        # regex escapes — a value containing '\l' raises re.error and
-        # '\t' silently becomes a TAB in the emitted SQL
-        sql = re.sub(rf"\${re.escape(var)}\b",
-                     lambda _m, v=str(val): v, sql)
-    sql = re.sub(r"\$unescape\(\s*'([^']*)'\s*\)", r"\1", sql)
+    sql = _substitute_template_vars(sql, lits, template_vars or {})
     # function-style macros next: they rewrite the SELECT head into
     # plain SQL whose FROM/WHERE tail still holds $table/$timeFilter
     # for the generic replacements below
     sql = expand_function_macros(sql, bucket_expr(interval_s))
-
-    # Everything from here on must NOT touch string literals: a quoted
-    # value containing "$table"/"$interval"/... is query DATA (the
-    # invariant $adhoc and rewrite_aggregates already hold). NOTE the
-    # template-var substitution above intentionally runs UNMASKED —
-    # Grafana core substitutes '$var' inside quoted literals too, and
-    # dashboards rely on it ('... WHERE etype = ''$etype''').
-    sql, lits = _mask_literals(sql)
 
     # $timeFilterByColumn(col) — identifier-validated, same bounds
     # translation as $timeFilter but on the named column
@@ -517,10 +552,10 @@ def expand_macros(sql: str, table: str, time_col: str = "logdatetime",
         days = [filt]
         if time_from:
             days.append(f"{part[1]} >= date_sub(CAST("
-                        f"timestamp'{time_from}' AS DATE), 1)")
+                        f"{ts(time_from)} AS DATE), 1)")
         if time_to:
             days.append(f"{part[1]} <= date_add(CAST("
-                        f"timestamp'{time_to}' AS DATE), 1)")
+                        f"{ts(time_to)} AS DATE), 1)")
         lo, hi = m.span("f")
         sql = sql[:lo] + " AND ".join(days) + sql[hi:]
     if "$naturalTimeSeries" in sql:
@@ -547,11 +582,11 @@ def expand_macros(sql: str, table: str, time_col: str = "logdatetime",
         if not time_to:
             raise ValueError("$to used without time_to")
         out = re.sub(r"\$to\b", str(_epoch_s(time_to)), out)
-    # $adhoc expands LAST and hidden like a literal: its quoted filter
-    # VALUES are user data, never exposed to the substitutions above
-    # nor to the unmask, and a '$adhoc' inside a literal is data too
-    out = out.replace("$adhoc", _hide(adhoc_predicate(adhoc_filters), lits))
-    return rewrite_aggregates(_unmask_literals(out, lits))
+    # $adhoc expands LAST: its quoted filter VALUES are user data,
+    # never exposed to the substitutions above
+    out = out.replace("$adhoc", _mask_literals(
+        adhoc_predicate(adhoc_filters), lits)[0])
+    return _unmask_literals(_aggregates(out, lits), lits)
 
 
 #: ClickHouse scalar WITH — ``WITH <expr> AS <name>[, ...] SELECT …``
@@ -567,10 +602,9 @@ _SCALAR_WITH_RE = re.compile(r"(?is)^\s*WITH\s+(?P<items>.+?)\s+"
                              r"(?P<body>SELECT\b.*)$")
 
 
-def rewrite_scalar_with(query: str) -> str:
+def _scalar_with(query: str, lits: dict[str, str]) -> str:
     """``WITH 50 AS threshold SELECT … WHERE v > threshold`` →
-    ``SELECT … WHERE v > (50)``. Identifier-context substitution on
-    literal-masked text, like rewrite_aggregates."""
+    ``SELECT … WHERE v > (50)``. Identifier-context substitution."""
     m = _SCALAR_WITH_RE.match(query)
     if not m:
         return query
@@ -584,22 +618,65 @@ def rewrite_scalar_with(query: str) -> str:
                       r"(?P<name>\w+)\s*$", it)
         if not sm or re.match(r"(?is)^\s*\w+\s+AS\s*\(", it):
             raise ValueError(
-                f"unsupported WITH item {it.strip()!r} — scalar form "
+                f"unsupported WITH item "
+                f"{_unmask_literals(it.strip(), lits)!r} — scalar form "
                 f"is '<const-expr> AS <name>'; mixing scalar items "
                 f"with subquery CTEs in one WITH list is refused")
         expr = sm.group("expr")
         if re.search(r"(?is)\bSELECT\b", expr):
             raise ValueError(
-                f"WITH {expr.strip()!r}: scalar-WITH expressions must "
+                f"WITH {_unmask_literals(expr.strip(), lits)!r}: "
+                f"scalar-WITH expressions must "
                 f"be constants — subqueries belong in a standard CTE")
         binds[sm.group("name")] = expr.strip()
-    body, lits = _mask_literals(m.group("body"))
+    body = m.group("body")
     for name, expr in binds.items():
         # (?<!\.) keeps qualified references (t.k) pointing at the
         # COLUMN, as ClickHouse resolves them — only bare identifiers
         # are the named constant
         body = re.sub(rf"(?<!\.)\b{name}\b", f"({expr})", body)
-    return _unmask_literals(body, lits)
+    return body
+
+
+#: declared ClickHouse dictionaries: name -> {attr -> SQL function
+#: name}, filled by ``functions/dictionary.declare_dictionary``; an
+#: undeclared one fails loudly at rewrite time (not as an
+#: UNRESOLVED_ROUTINE deep inside Spark's analyzer)
+_DICTIONARIES: dict[str, dict[str, str]] = {}
+
+_DICT_GET_RE = re.compile(
+    r"(?is)\bdictGet\s*\(\s*(?P<name>\x00\d+\x00)\s*,"
+    r"\s*(?P<attr>\x00\d+\x00)\s*,")
+
+
+def _dict_get(query: str, lits: dict[str, str]) -> str:
+    """``dictGet('name', 'attr', key_expr)`` →
+    ``__dict_name_attr(key_expr)``. Literal name/attr only (the CH
+    form — computed dictionary names are refused loudly)."""
+    def _sub(m: re.Match) -> str:
+        name = _unmask_literal(m.group("name"), lits, "dictGet name")
+        attr = _unmask_literal(m.group("attr"), lits, "dictGet attr")
+        d = _DICTIONARIES.get(name)
+        if d is None:
+            raise ValueError(
+                f"dictGet: dictionary {name!r} is not declared — call "
+                f"declare_dictionary(...) first (the CH CREATE "
+                f"DICTIONARY DDL analog)")
+        fn = d.get(attr)
+        if fn is None:
+            raise ValueError(
+                f"dictGet: dictionary {name!r} has no attribute "
+                f"{attr!r} (declared: {sorted(d)})")
+        return f"{fn}("
+
+    out = _DICT_GET_RE.sub(_sub, query)
+    if re.search(r"(?is)\bdictGet\w*\s*\(", out):
+        raise ValueError(
+            "unsupported dictGet form — needs literal "
+            "dictGet('<name>', '<attr>', <key expr>); the typed "
+            "dictGetString/dictGetInt variants and computed names "
+            "are not implemented")
+    return out
 
 
 #: trailing ORDER BY of an inner subquery: bare-identifier keys only,
@@ -609,7 +686,7 @@ _INNER_ORDER_RE = re.compile(
     r"(?:\s*,\s*\w+(?:\s+ASC)?)*)\s*$")
 
 
-def rewrite_group_array(query: str) -> str:
+def _group_array(out: str, lits: dict[str, str]) -> str:
     """ClickHouse ``groupArray(x)`` (insertion-order array aggregate)
     → a DETERMINISTIC Spark spelling, but only when the query itself
     carries a derivable order: the CH idiom ``SELECT g, groupArray(x)
@@ -644,12 +721,8 @@ def rewrite_group_array(query: str) -> str:
     name collision — functions/clickhouse.py).
     """
     if not re.search(r"\b(groupArray|deltaSum|any(?:Last)?If\s*\(|"
-                     r"anyLast\s*\()", query):
-        return query
-    out, lits = _mask_literals(query)
-    if not re.search(r"\b(groupArray|deltaSum|any(?:Last)?If\s*\(|"
                      r"anyLast\s*\()", out):
-        return query  # only string DATA mentions it — untouched
+        return out
     # deltaSumTimestamp(x, ts) (VERDICT r11 item 6): SELF-ORDERING
     # here by construction — CH itself folds rows in processing order
     # and uses the timestamp only to ORDER STATE MERGES (the
@@ -712,7 +785,7 @@ def rewrite_group_array(query: str) -> str:
         sorted_collect)
     if not re.search(r"\b(groupArray(?:MovingSum|MovingAvg)?|deltaSum"
                      r"|anyLast(?:If)?|anyIf)\s*\(", out):
-        return _unmask_literals(out, lits)
+        return out
     # collect the ORDER BY key lists of all immediate FROM/JOIN (…)
     # blocks. EVERY such subquery must be sorted with the SAME key
     # list (ADVICE r10): with several subqueries, only one of them
@@ -885,23 +958,22 @@ def rewrite_group_array(query: str) -> str:
                 f"CAST(__de.__v AS DOUBLE) AS __dp) END, "
                 f"__df -> __df.__ds)"), close + 1
 
-    return _unmask_literals(_rewrite_calls(
+    return _rewrite_calls(
         out, r"\b(groupArrayMovingSum|groupArrayMovingAvg|groupArray"
-             r"|deltaSum|anyLastIf|anyLast|anyIf)\s*\(", lift), lits)
+             r"|deltaSum|anyLastIf|anyLast|anyIf)\s*\(", lift)
 
 
-def rewrite_aggregates(out: str) -> str:
+def _aggregates(out: str, lits: dict[str, str]) -> str:
     """ClickHouse aggregate names → Spark builtins, including the
     parametric syntax ``agg(p)(x)`` (no Spark equivalent) collapsed to
     ``agg(x, p)`` for the quantile family, and the If-combinators.
 
-    String literals are MASKED before any rewrite and restored after:
-    a query whose string DATA mentions ``sumIf``/``uniq``/... must come
-    back byte-identical (rewriting inside literals silently corrupts
-    values), and masking also makes the paren/comma scanning immune to
+    The aggregate layer: ``out`` is literal-masked, so a query whose
+    string DATA mentions ``sumIf``/``uniq``/... comes back
+    byte-identical, and the paren/comma scanning is immune to
     quote-escape conventions.
     """
-    out, lits = _mask_literals(rewrite_group_array(out))
+    out = _group_array(out, lits)
     # ClickHouse's zero-arg count() — Spark requires an argument.
     # IGNORECASE: CH resolves standard aggregates case-insensitively,
     # so a reference-era COUNT() must rewrite too.
@@ -1032,7 +1104,7 @@ def rewrite_aggregates(out: str) -> str:
     out = _default_quantile_fraction(out)
     out = _rewrite_if_combinators(out)
     out = _rewrite_multi_if(out)
-    return _unmask_literals(_rewrite_array_lambdas(out), lits)
+    return _rewrite_array_lambdas(out)
 
 
 def _rewrite_retention(out: str) -> str:
@@ -1413,9 +1485,7 @@ def _rewrite_shape_stats(out: str) -> str:
 
 
 def _unmask_literal(tok: str, lits: dict[str, str], what: str) -> str:
-    """A masked string-literal token back to its unquoted text (the
-    behavioral rewrites run on masked SQL, so parameters like funnel
-    modes and sequence patterns arrive masked)."""
+    """A masked string-literal token back to its unquoted text."""
     lit = lits.get(tok.strip())
     if lit is None:
         raise ValueError(f"{what} must be a string literal, "
@@ -2168,12 +2238,11 @@ def _rewrite_topk(out: str) -> str:
     ``w`` over its rows (the quantity CH's weighted Space-Saving
     counters approximate), computed by a higher-order ``aggregate``
     over one collect of (value, weight) structs; rows where either
-    side is NULL are skipped (the CH aggregate NULL contract).
-    Runs on literal-masked text; the candidate-set distinct is
-    group-local, so the whole expression is one partial-aggregatable
-    collect — no second shuffle. Non-literal k or the WeightedIf
-    combinator is refused loudly here rather than leaking the CH
-    name into Spark's parser.
+    side is NULL are skipped (the CH aggregate NULL contract). The
+    candidate-set distinct is group-local, so the whole expression is
+    one partial-aggregatable collect — no second shuffle. Non-literal
+    k or the WeightedIf combinator is refused loudly here rather than
+    leaking the CH name into Spark's parser.
     """
     bad = re.search(
         r"\btopK(?!\s*\()(?!If\s*\()(?!Weighted\s*\()"
@@ -2258,7 +2327,7 @@ def _rewrite_quantile_if(out: str) -> str:
     If-combinator template (the parameter lives in a separate call
     group) nor the quantile token renames (the If suffix blocks the
     ``name(`` match), so without this they'd leak the CH name into
-    Spark's parser. Runs on literal-masked text."""
+    Spark's parser."""
     def build(out: str, m: re.Match) -> tuple[str, int]:
         fn = "percentile" if m.group(1) else "percentile_approx"
         first, after = _take_call_args(out, m.end() - 1)
@@ -2321,7 +2390,7 @@ def _rewrite_bounding_ratio(out: str) -> str:
     divergence (any tie choice is within CH's contract). A
     single-point group divides 0 by 0: NULL under Spark/DuckDB
     double semantics, where CH returns NaN (the avgWeighted
-    deviation policy). Runs on literal-masked text."""
+    deviation policy)."""
     def build(out: str, m: re.Match) -> tuple[str, int]:
         args, end = _take_call_args(out, m.end() - 1)
         if len(args) != 2:
@@ -2358,8 +2427,7 @@ def _rewrite_nonneg_derivative(out: str) -> str:
     is the caller's contract violation in CH too. The OVER clause
     is captured verbatim, so PARTITION BY/ORDER BY spellings pass
     through untouched; a named-window reference (``OVER w``) is
-    refused loudly rather than guessing the window text. Runs on
-    literal-masked text."""
+    refused loudly rather than guessing the window text."""
     def build(out: str, m: re.Match) -> tuple[str, int]:
         args, end = _take_call_args(out, m.end() - 1)
         if len(args) not in (2, 3):
@@ -2444,8 +2512,7 @@ def _rewrite_assoc_stats(out: str) -> str:
     contract). Degenerate inputs (single distinct value, n ≤ 1,
     H(A) = 0) return NULL where CH returns NaN — the avgWeighted
     deviation policy, every denominator nullif-guarded because
-    Spark's ANSI mode makes 0/0 an error, not NaN. Runs on
-    literal-masked text."""
+    Spark's ANSI mode makes 0/0 an error, not NaN."""
     def build(out: str, m: re.Match) -> tuple[str, int]:
         fn = m.group(1)
         args, end = _take_call_args(out, m.end() - 1)
@@ -2605,7 +2672,7 @@ def _rewrite_grouped_rank_stats(out: str) -> str:
     Anything non-canonical (subqueries, joins, HAVING, parametric or
     wrong-arity calls, a call outside the select list) leaves the
     statement UNCHANGED for the sorted-collect rewrites below — the
-    arbitrary-shape fallback. Runs on literal-masked text."""
+    arbitrary-shape fallback."""
     if not _RANK_STAT_CALL.search(out):
         return out
     if len(re.findall(r"(?i)\bselect\b", out)) != 1 \
@@ -2757,7 +2824,7 @@ def _rewrite_rank_corr(out: str) -> str:
     Rows with either side NULL are skipped (the CH pair-aggregate
     contract); groups under 2 points or with a constant side return
     NULL where CH returns NaN (the avgWeighted deviation policy —
-    ANSI 0/0 is an error). Runs on literal-masked text."""
+    ANSI 0/0 is an error)."""
     def build(out: str, m: re.Match) -> tuple[str, int]:
         args, end = _take_call_args(out, m.end() - 1)
         if len(args) != 2:
@@ -2819,8 +2886,7 @@ def _rewrite_lttb(out: str) -> str:
     range clamped to the tail. N must be a literal ≥ 3 (two fixed
     endpoints + at least one bucket). Result is an
     ``array<struct<x, y>>`` of DOUBLEs — serialize or explode it at
-    the SELECT boundary (the driver cannot hash nested columns).
-    Runs on literal-masked text."""
+    the SELECT boundary (the driver cannot hash nested columns)."""
     def build(out: str, m: re.Match) -> tuple[str, int]:
         first, after = _take_call_args(out, m.end() - 1)
         if not (len(first) == 1 and first[0].strip().isdigit()):
@@ -3059,7 +3125,7 @@ def _rewrite_stat_tests(out: str) -> str:
     computing the wrong tail. Degenerate inputs (a sample with < 2
     points for t, an empty side or all-tied values for U) return
     NULL fields where CH returns NaN (the avgWeighted deviation
-    policy). Runs on literal-masked text."""
+    policy)."""
     def build(out: str, m: re.Match) -> tuple[str, int]:
         fn = m.group(1)
         args, end = _take_call_args(out, m.end() - 1)
@@ -3198,8 +3264,7 @@ def _rewrite_quantile_deterministic(out: str) -> str:
     with the determinator DROPPED: CH's determinator only makes its
     reservoir sampling reproducible, and an exact quantile is
     deterministic by construction — the estimator-upgrade policy
-    every rename in this family follows (medianExact, topK). Runs on
-    literal-masked text."""
+    every rename in this family follows (medianExact, topK)."""
     def build(out: str, m: re.Match) -> tuple[str, int]:
         fn = m.group(1)
         first, after = _take_call_args(out, m.end() - 1)
@@ -3246,7 +3311,7 @@ def _rewrite_sparkbar(out: str) -> str:
     all spaces. O(width · group) fold over one collect; width is a
     literal (the topK policy). CH leaves its exact glyph scaling
     undocumented, so this DOCUMENTED rendering is the contract — the
-    bucket SUMS follow CH exactly. Runs on literal-masked text."""
+    bucket SUMS follow CH exactly."""
     def build(out: str, m: re.Match) -> tuple[str, int]:
         first, after = _take_call_args(out, m.end() - 1)
         if not (len(first) == 1 and first[0].strip().isdigit()):
@@ -3298,8 +3363,7 @@ def _rewrite_sparkbar(out: str) -> str:
 def _default_quantile_fraction(out: str) -> str:
     """``percentile_approx(x)`` → ``percentile_approx(x, 0.5)`` (and
     percentile): the ClickHouse no-parameter quantile defaults to the
-    median, while Spark's function has no default fraction. Runs on
-    literal-masked text."""
+    median, while Spark's function has no default fraction."""
     def build(out: str, m: re.Match) -> tuple[str, int]:
         try:
             args, after = _take_call_args(out, m.end() - 1)
@@ -3329,11 +3393,10 @@ _ARRAY_LAMBDAS: dict[str, str] = {
 
 
 def _rewrite_array_lambdas(out: str) -> str:
-    """``arrayMap(f, a)`` → ``transform(a, f)`` and friends (masked
-    text). Forms refused loudly rather than mis-bracketed: a first
-    argument that is not a lambda (CH's lambda-less arrayCount(arr)
-    etc.), and multi-array forms except the 2-array arrayMap
-    (→ zip_with)."""
+    """``arrayMap(f, a)`` → ``transform(a, f)`` and friends. Forms
+    refused loudly rather than mis-bracketed: a first argument that is
+    not a lambda (CH's lambda-less arrayCount(arr) etc.), and
+    multi-array forms except the 2-array arrayMap (→ zip_with)."""
     def build(out: str, m: re.Match) -> tuple[str, int]:
         name = m.group(1)
         close = _scan_balanced(out, m.end() - 1)
@@ -3449,7 +3512,7 @@ _LIMIT_BY_RE = re.compile(
     r"(?:\s+LIMIT\s+(?P<m>\d+))?\s*;?\s*$")
 
 
-def rewrite_limit_by(query: str) -> str:
+def _limit_by(query: str, lits: dict[str, str]) -> str:
     """ClickHouse ``LIMIT n BY a, b`` → a ranked-window subquery:
     first n rows of each (a, b) group in the query's ORDER BY order,
     then the global order (and optional global LIMIT) re-applied.
@@ -3485,7 +3548,7 @@ _WITH_TOTALS_RE = re.compile(
     r"WITH\s+TOTALS\b")
 
 
-def rewrite_with_totals(query: str) -> str:
+def _with_totals(query: str, lits: dict[str, str]) -> str:
     """``GROUP BY a, b WITH TOTALS`` → ``GROUP BY GROUPING SETS
     ((a, b), ())`` — one pass, same shuffle: Spark plans grouping
     sets as a single partial-agg expand, so the totals row costs one
@@ -3515,7 +3578,7 @@ _TOP_RE = re.compile(
     r"(?is)^(?P<head>\s*SELECT\s+(?:DISTINCT\s+)?)TOP\s+(?P<n>\d+)\s+")
 
 
-def rewrite_top(query: str) -> str:
+def _top(query: str, lits: dict[str, str]) -> str:
     """``SELECT TOP n <cols> …`` → ``SELECT <cols> … LIMIT n``."""
     m = _TOP_RE.match(query)
     if not m:
@@ -3540,7 +3603,7 @@ _WITH_TIES_RE = re.compile(
     r"LIMIT\s+(?P<n>\d+)\s+WITH\s+TIES\s*;?\s*$")
 
 
-def rewrite_limit_with_ties(query: str) -> str:
+def _limit_with_ties(query: str, lits: dict[str, str]) -> str:
     """``<body> ORDER BY k LIMIT n WITH TIES`` → rank-filtered form:
     rank() ties share a rank, so ``rank <= n`` keeps exactly the rows
     ClickHouse keeps."""
@@ -3597,7 +3660,7 @@ def sample_hash_sql(key_expr: str) -> str:
             f"1, 8), 16, 10) AS BIGINT)")
 
 
-def rewrite_sample(query: str, count_of=None) -> str:
+def _sample(query: str, lits: dict[str, str], count_of=None) -> str:
     """``FROM t SAMPLE f [OFFSET o]`` → a filtered subquery aliased back
     to ``t``: WHERE hash(key) in the [o, o+f) slice of [0, 2^32), with
     ``_sample_factor`` = 1/f projected alongside the table's columns.
@@ -3759,7 +3822,7 @@ def _on_join_keys(on: str, ralias: str, lalias: str | None
     return lkeys, rkeys
 
 
-def rewrite_any_join(query: str) -> str:
+def _any_join(query: str, lits: dict[str, str]) -> str:
     """ClickHouse join modifiers → Spark:
 
     - ``GLOBAL …`` → stripped (Spark's planner owns distribution);
@@ -3789,8 +3852,7 @@ def rewrite_any_join(query: str) -> str:
     """
     if not re.search(r"(?i)\b(GLOBAL|ALL|ANY)\b", query):
         return query
-    out, lits = _mask_literals(query)
-    out = _GLOBAL_RE.sub("", out)
+    out = _GLOBAL_RE.sub("", query)
     out = _ALL_JOIN_RE.sub("", out)
     n = 0
 
@@ -3853,7 +3915,7 @@ def rewrite_any_join(query: str) -> str:
             "USING (keys) | ON <qualified equi-conjuncts>, with a "
             "simple FROM table as the left side for RIGHT/FULL; "
             "alias a subquery side as a view first")
-    return _unmask_literals(out, lits)
+    return out
 
 
 #: ClickHouse ``[LEFT] ARRAY JOIN <expr> AS <alias>`` — the row
@@ -3872,7 +3934,7 @@ _ARRAY_JOIN_RE = re.compile(
     r"(?=\s+(?:WHERE|GROUP|ORDER|LIMIT|HAVING)\b|\s*$)")
 
 
-def rewrite_array_join(query: str) -> str:
+def _array_join(query: str, lits: dict[str, str]) -> str:
     """``FROM t [LEFT] ARRAY JOIN expr AS x`` → ``FROM t LATERAL VIEW
     [OUTER] explode(expr) __aj AS x``. The explode is a narrow
     generator inside the same stage as the scan — no shuffle; Catalyst
@@ -3928,7 +3990,7 @@ def declare_final_table(table: str, kind: str, keys: list[str],
                             "sign_col": sign_col}
 
 
-def rewrite_final(query: str) -> str:
+def _final(query: str, lits: dict[str, str]) -> str:
     """``FROM t FINAL`` → the merge-on-read subquery aliased back to
     ``t``: latest-wins ``max(struct(version, payload...))`` per key for
     replacing tables, net-``sign > 0`` groups for collapsing tables —
@@ -3995,7 +4057,7 @@ _PREWHERE_RE = re.compile(
 #: condition — if one does, the boundary lookahead failed to stop at
 #: a construct it doesn't know (QUALIFY, WINDOW, a second statement…)
 #: and folding would silently swallow query text into the WHERE.
-#: Loud refusal instead, mirroring rewrite_asof_join (ADVICE r8).
+#: Loud refusal instead, mirroring _asof_join (ADVICE r8).
 _PREWHERE_LEAK_RE = re.compile(
     r"(?is)\b(?:UNION|INTERSECT|EXCEPT|QUALIFY|WINDOW|SELECT"
     r"|PREWHERE)\b|;")
@@ -4022,16 +4084,12 @@ _SETTINGS_RE = re.compile(
     r"(?:\s*,\s*\w+\s*=\s*[^,\s]+)*\s*$")
 
 
-def rewrite_settings(query: str) -> str:
-    """Strip a trailing ``SETTINGS k = v[, …]`` clause (masked-literal
-    discipline: string DATA mentioning SETTINGS survives)."""
-    if not re.search(r"(?i)\bSETTINGS\b", query):
-        return query
-    out, lits = _mask_literals(query)
-    return _unmask_literals(_SETTINGS_RE.sub("", out), lits)
+def _settings(query: str, lits: dict[str, str]) -> str:
+    """Strip a trailing ``SETTINGS k = v[, …]`` clause."""
+    return _SETTINGS_RE.sub("", query)
 
 
-def rewrite_prewhere(query: str) -> str:
+def _prewhere(query: str, lits: dict[str, str]) -> str:
     """``FROM t PREWHERE p [WHERE q]`` → ``FROM t WHERE (p) AND (q)``
     — Spark's pushdown already implements the PREWHERE strategy.
     Both conditions are parenthesized (a bare ``q = a OR b`` must not
@@ -4045,7 +4103,7 @@ def rewrite_prewhere(query: str) -> str:
             "unsupported PREWHERE form — the condition runs into a "
             "clause the folder does not bound (UNION/QUALIFY/WINDOW/"
             "subquery/second statement); move the predicate to WHERE "
-            f"or simplify it: {cond[:120]!r}")
+            f"or simplify it: {_unmask_literals(cond, lits)[:120]!r}")
     before, after = query[:m.start()], query[m.end():]
     wm = re.match(
         r"(?is)\s*WHERE\s+(?P<w>.+?)"
@@ -4057,7 +4115,7 @@ def rewrite_prewhere(query: str) -> str:
     return f"{before}WHERE {cond}{after}"
 
 
-def rewrite_format(query: str) -> str:
+def _format(query: str, lits: dict[str, str]) -> str:
     """Strip a trailing ``FORMAT <name>`` output directive."""
     return _FORMAT_RE.sub("", query)
 
@@ -4081,7 +4139,8 @@ _ASOF_RE = re.compile(
     r"(?P<c4>\w+)\.(?P<t2>\w+)")
 
 
-def rewrite_asof_join(spark: SparkSession, query: str) -> str:
+def _asof_join(query: str, lits: dict[str, str],
+               spark: SparkSession) -> str:
     """``FROM a ASOF [LEFT] JOIN b ON a.k = b.k AND b.t <= a.t`` →
     ``FROM <asof view>`` with alias references substituted.
 
@@ -4162,20 +4221,13 @@ def rewrite_asof_join(spark: SparkSession, query: str) -> str:
                 f"ASOF JOIN alias {alias!r} is redefined elsewhere "
                 f"in the query — alias-reference rewriting would "
                 f"mangle that scope; rename one of the aliases")
-    # alias-reference substitution onto the view's columns —
-    # identifier contexts only: segments inside single-quoted string
-    # literals are left untouched (ADVICE r8)
-    def _sub_ident(pat: str, repl: str, text: str) -> str:
-        parts = re.split(r"('(?:[^']|'')*')", text)
-        return "".join(p if i % 2 else re.sub(pat, repl, p)
-                       for i, p in enumerate(parts))
-
+    # alias-reference substitution onto the view's columns
     for col in value_cols:
-        rest = _sub_ident(rf"\b{ra}\.{col}\b", f"{col}_asof", rest)
-    rest = _sub_ident(rf"\b{ra}\.{rtime}\b", f"{rtime}_asof", rest)
-    rest = _sub_ident(rf"\b{ra}\.{rkey}\b", rkey, rest)
-    rest = _sub_ident(rf"\b{la}\.(\w+)", r"\1", rest)
-    return rest
+        rest = re.sub(rf"\b{ra}\.{col}\b", f"{col}_asof", rest)
+    rest = re.sub(rf"\b{ra}\.{rtime}\b", f"{rtime}_asof", rest)
+    rest = re.sub(rf"\b{ra}\.{rkey}\b", rkey, rest)
+    return re.sub(rf"\b{la}\.(\w+)", r"\1", rest)
+
 
 
 #: ClickHouse ``ORDER BY col WITH FILL [FROM a] [TO b] [STEP s]`` —
@@ -4187,20 +4239,21 @@ def rewrite_asof_join(spark: SparkSession, query: str) -> str:
 #: policy as ARRAY JOIN / WITH TOTALS): filled rows carry NULL in the
 #: non-key columns — the relational spelling — where ClickHouse
 #: writes the column type's default (0 / ''); wrap with coalesce for
-#: CH-exact output.
+#: CH-exact output. A quoted FROM/TO bound arrives masked, so the bound
+#: groups take a literal placeholder as well as a bare word.
 _WITH_FILL_RE = re.compile(
     r"(?is)\bORDER\s+BY\s+(?P<pre>(?:\w+\s*,\s*)*)"
     r"(?P<col>\w+)(?:\s+(?P<desc>DESC))?"
     r"\s+WITH\s+FILL"
-    r"(?:\s+FROM\s+(?P<frm>-?[\w.'-]+))?"
-    r"(?:\s+TO\s+(?P<to>-?[\w.'-]+))?"
+    r"(?:\s+FROM\s+(?P<frm>-?(?:[\w.-]|\x00\d+\x00)+))?"
+    r"(?:\s+TO\s+(?P<to>-?(?:[\w.-]|\x00\d+\x00)+))?"
     r"(?:\s+STEP\s+(?P<step>INTERVAL\s+-?\d+\s+\w+|-?[\d.]+))?"
     r"(?:\s+INTERPOLATE\s*\("
     r"(?P<interp>(?:[^()]|\([^()]*\))*)\))?"
     r"(?P<tail>\s+LIMIT\s+\d+)?\s*$")
 
 
-def rewrite_with_fill(query: str) -> str:
+def _with_fill(query: str, lits: dict[str, str]) -> str:
     """``<q> ORDER BY c [DESC] WITH FILL ...`` → spine LEFT JOIN over
     the original query: ``WITH __fill_src AS (<q>) SELECT * FROM
     (sequence spine) LEFT JOIN __fill_src USING (c) ORDER BY c`` —
@@ -4307,7 +4360,8 @@ def rewrite_with_fill(query: str) -> str:
                           r"(?:\s+AS\s+(?P<e>.+\S))?\s*$", it)
             if not im:
                 raise ValueError(
-                    f"unsupported INTERPOLATE item {it.strip()!r} — "
+                    f"unsupported INTERPOLATE item "
+                    f"{_unmask_literals(it.strip(), lits)!r} — "
                     f"need a bare column (carry-forward) or "
                     f"'col AS expr'")
             c, e = im.group("c"), im.group("e")
@@ -4404,36 +4458,43 @@ def rewrite_with_fill(query: str) -> str:
             f"ORDER BY {order_keys}{tail}")
 
 
-def sql(spark: SparkSession, query: str, **macro_kwargs) -> DataFrame:
-    """engine.sql(): expand macros, ensure compat fns, run spark.sql."""
-    register_clickhouse_functions(spark)
-    from rsyslog_nginx_clickhouse_spark.functions.dictionary import (
-        rewrite_dict_get,
-    )
+# the public, raw-text form of each statement and aggregate pass
+rewrite_aggregates = _raw_text(_aggregates)
+rewrite_scalar_with = _raw_text(_scalar_with)
+rewrite_dict_get = _raw_text(_dict_get)
+rewrite_group_array = _raw_text(_group_array)
+rewrite_limit_by = _raw_text(_limit_by)
+rewrite_with_totals = _raw_text(_with_totals)
+rewrite_top = _raw_text(_top)
+rewrite_limit_with_ties = _raw_text(_limit_with_ties)
+rewrite_sample = _raw_text(_sample)
+rewrite_any_join = _raw_text(_any_join)
+rewrite_array_join = _raw_text(_array_join)
+rewrite_final = _raw_text(_final)
+rewrite_settings = _raw_text(_settings)
+rewrite_prewhere = _raw_text(_prewhere)
+rewrite_format = _raw_text(_format)
+rewrite_with_fill = _raw_text(_with_fill)
 
-    query = rewrite_dict_get(rewrite_scalar_with(query))
+
+def sql(spark: SparkSession, query: str, **macro_kwargs) -> DataFrame:
+    """engine.sql(): expand macros, ensure compat fns, run spark.sql.
+
+    The statement layer: the passes that bind before the macros, then
+    those after them, each group over text masked once. The macro (or
+    aggregate) layer between them takes raw text, as Grafana does."""
+    register_clickhouse_functions(spark)
+    query = _run_masked(query, _scalar_with, _dict_get)
     if "$" in query and "table" in macro_kwargs:
         query = expand_macros(query, **macro_kwargs)
     else:
         query = rewrite_aggregates(query)
-    # row-count SAMPLE needs the table's cardinality to invert; for
-    # parquet-backed tables count(*) reduces to row-group stats, but
-    # for a temp view over a filtered/derived plan it re-runs that
-    # plan — so the count is MEMOIZED per table within this sql()
-    # call (ADVICE r10: several SAMPLE-n occurrences of one table
-    # must not pay the job repeatedly), and only runs when the
-    # row-count form actually appears
-    _counts: dict[str, int] = {}
-
-    def count_of(t: str) -> int:
-        if t not in _counts:
-            _counts[t] = spark.table(t).count()
-        return _counts[t]
-    return spark.sql(
-        rewrite_with_fill(rewrite_with_totals(rewrite_limit_with_ties(
-            rewrite_limit_by(rewrite_sample(rewrite_array_join(
-                rewrite_final(rewrite_prewhere(rewrite_asof_join(
-                    spark, rewrite_any_join(
-                        rewrite_top(rewrite_settings(
-                            rewrite_format(query)))))))),
-                count_of))))))
+    # row-count SAMPLE needs each table's cardinality; count(*) may
+    # re-run a temp view's plan, so it runs only when the form appears
+    # and at most once per table in this call (ADVICE r10)
+    count_of = functools.cache(lambda t: spark.table(t).count())
+    return spark.sql(_run_masked(
+        query, _format, _settings, _top, _any_join,
+        functools.partial(_asof_join, spark=spark), _prewhere, _final,
+        _array_join, functools.partial(_sample, count_of=count_of),
+        _limit_by, _limit_with_ties, _with_totals, _with_fill))

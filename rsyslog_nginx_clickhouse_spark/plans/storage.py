@@ -115,7 +115,13 @@ def read_table(spark: SparkSession, path: str,
     local-FS snapshot isolation. A reader over the raw ``path`` instead
     follows the symlink per-file and FAILS CLEANLY (FILE_NOT_EXIST)
     if a flip lands mid-scan; it can never silently mix versions,
-    because file names are unique per version.
+    because file names are unique per version. The one exception to
+    the snapshot: on a table that was never compacted there is no
+    symlink yet, so this reader pins the plain ``path`` itself, and
+    the first ``compact()`` moves that directory to ``.compact-v0``
+    and points ``path`` at the new version. The reader then fails
+    cleanly (``FileNotFoundException``) the same way, never mixing
+    versions.
     """
     import os
 
@@ -209,6 +215,10 @@ def compact(spark: SparkSession, path: str, keep_old: bool = True,
       the default) so a reader that resolved the old version mid-scan
       finishes correctly — delete it out-of-band once readers drain,
       or pass ``keep_old=False`` when the caller owns all readers.
+      Except at the first compaction of a plain directory: a reader
+      opened on it before the migration below resolved the plain
+      path, which then names the new version, so that reader fails
+      cleanly (``FileNotFoundException``) instead of finishing.
 
     The only non-atomic moment is the one-time MIGRATION of a plain
     directory into the versioned layout (dir-rename + symlink create,

@@ -382,7 +382,7 @@ def purchase_last_view_asof(spark: SparkSession, sf_dir: str) -> DataFrame:
         "composition (ONE shuffle on the key, no range cross-product) "
         "— and rewrites the surrounding alias references onto the "
         "result; strict/forward inequalities and subquery sides are "
-        "refused loudly (functions/macros.rewrite_asof_join); inner "
+        "refused loudly (functions/macros._asof_join); inner "
         "ASOF JOIN drops unmatched left rows like ClickHouse",
 )
 def asof_join_sql(spark: SparkSession, sf_dir: str) -> DataFrame:

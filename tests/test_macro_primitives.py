@@ -268,3 +268,105 @@ def test_unbalanced_function_macro_raises():
 ])
 def test_unbalanced_call_is_skipped(query, expected):
     assert rewrite_aggregates(query) == expected
+
+
+# a clause keyword inside a string literal is data: each query below
+# counts the one row of ``kw`` whose ``s`` equals the literal
+_KEYWORD_LITERALS = [
+    ("SELECT count(*) AS c FROM kw WHERE s = '{v}'", v) for v in (
+        "GROUP BY a WITH TOTALS", "PREWHERE x", "FROM kw FINAL",
+        "FROM kw SAMPLE 0.5", "x ARRAY JOIN y", "ORDER BY a LIMIT 1 BY a",
+        "ORDER BY a LIMIT 1 WITH TIES", "x SETTINGS max_threads = 1",
+        "x FORMAT JSON", "a GLOBAL IN (b)", "dictGet(x)")
+] + [("SELECT TOP 5 count(*) AS c FROM kw WHERE s = '{v}'", "LIMIT 5")]
+
+
+@pytest.fixture(scope="module")
+def kw(spark):
+    spark.createDataFrame([(v,) for _, v in _KEYWORD_LITERALS],
+                          "s string").createOrReplaceTempView("kw")
+
+
+@pytest.mark.parametrize("query, value", _KEYWORD_LITERALS,
+                         ids=[v for _, v in _KEYWORD_LITERALS])
+def test_a_clause_keyword_in_a_literal_is_data(spark, kw, query, value):
+    assert macros.sql(spark, query.format(v=value)).collect() == [(1,)]
+
+
+@pytest.fixture(scope="module")
+def keyword_engine(spark, tmp_path_factory):
+    from rsyslog_nginx_clickhouse_spark.engine import Engine
+
+    # the decoy "x WHERE y" is what a PREWHERE fold inside the
+    # literal would select
+    root = tmp_path_factory.mktemp("keyword_engine")
+    log = root / "access.log"
+    log.write_text("".join(
+        f'1.1.1.1 - - [06/Apr/2020:09:00:0{i} +0000] "GET /a HTTP/1.1" '
+        f'200 10 "-" "{agent}" "-"\n'
+        for i, agent in enumerate(["x PREWHERE y", "x WHERE y", "ua"])))
+    eng = Engine(table_root=str(root / "nginx"), spark=spark)
+    assert eng.ingest(str(log)) == 3
+    return eng
+
+
+def test_a_clause_keyword_in_an_adhoc_value_is_data(keyword_engine):
+    rows = keyword_engine.sql(
+        "SELECT agent FROM $table WHERE $adhoc",
+        adhoc_filters=[("agent", "=", "x PREWHERE y")]).collect()
+    assert rows == [("x PREWHERE y",)]
+
+
+def test_a_clause_keyword_in_a_template_value_is_data(keyword_engine):
+    rows = keyword_engine.sql(
+        "SELECT agent FROM $table WHERE agent = '$ua'",
+        template_vars={"ua": "x PREWHERE y"}).collect()
+    assert rows == [("x PREWHERE y",)]
+
+
+def test_dict_get_beside_a_backslash_escaped_literal(spark):
+    from rsyslog_nginx_clickhouse_spark.functions.dictionary import (
+        declare_dictionary,
+    )
+
+    declare_dictionary(
+        spark, "esc_dict",
+        spark.createDataFrame([(1, "one")], "k int, v string"),
+        key_col="k", attrs={"v": "''"})
+    spark.createDataFrame([(1,)], "k int").createOrReplaceTempView("esc_k")
+    rows = macros.sql(
+        spark, r"SELECT dictGet('esc_dict', 'v', k) AS v, "
+               r"'it\'s dictGet(' AS s FROM esc_k").collect()
+    assert rows == [("one", "it's dictGet(")]
+
+
+def test_asof_alias_substitution_skips_a_backslash_escaped_literal(spark):
+    spark.createDataFrame([(1, 10)], "k long, t long") \
+        .createOrReplaceTempView("asof_esc_l")
+    spark.createDataFrame([(1, 8, "r1")], "k long, t long, rv string") \
+        .createOrReplaceTempView("asof_esc_r")
+    rows = macros.sql(spark, r"""
+        SELECT a.k, b.rv, 'it\'s b.rv' AS note
+        FROM asof_esc_l a ASOF LEFT JOIN asof_esc_r b
+          ON a.k = b.k AND b.t <= a.t
+    """).collect()
+    assert rows == [(1, "r1", "it's b.rv")]
+
+
+def test_a_quoted_with_fill_bound_rewrites_as_a_bare_one():
+    """FROM/TO bounds arrive masked; a quoted bound still fills."""
+    assert macros.rewrite_with_fill(
+        "SELECT d, c FROM t ORDER BY d WITH FILL FROM '2020-01-01' "
+        "TO '2020-01-04' STEP INTERVAL 1 DAY") == (
+        "WITH __fill_src AS (SELECT d, c FROM t) SELECT * FROM (SELECT * "
+        "FROM (SELECT d FROM (SELECT explode(sequence('2020-01-01', "
+        "'2020-01-04', INTERVAL 1 DAY)) AS d) WHERE d < '2020-01-04') "
+        "LEFT JOIN __fill_src USING (d)) ORDER BY d")
+    assert macros.rewrite_with_fill(
+        "SELECT d, c FROM t ORDER BY g, d WITH FILL FROM '2020-01-01' "
+        "STEP INTERVAL 1 DAY") == (
+        "WITH __fill_src AS (SELECT d, c FROM t) SELECT * FROM (SELECT * "
+        "FROM (SELECT g, explode(sequence(__f0, __f1, INTERVAL 1 DAY)) "
+        "AS d FROM (SELECT g, '2020-01-01' AS __f0, max(d) AS __f1 FROM "
+        "__fill_src GROUP BY g)) LEFT JOIN __fill_src USING (g, d)) "
+        "ORDER BY g, d")

@@ -1,7 +1,7 @@
 """Record what the SQL text layer rewrites, and compare two recordings.
 
     python tools/rewritereplay.py record LOG -- CMD [ARG ...]
-    python tools/rewritereplay.py compare OLD_LOG NEW_LOG
+    python tools/rewritereplay.py compare OLD_LOG NEW_LOG [--fn NAME]
 
 ``record`` runs CMD with a ``sitecustomize`` that hooks the import of
 ``functions/macros.py`` in every Python process CMD starts (pytest and
@@ -11,8 +11,8 @@ of ``expand_macros`` and ``rewrite_aggregates``, and each text that
 the function, its input and keyword arguments, and its output or the
 exception's type and message. The program under test is not edited;
 the hook wraps the module's globals after it loads, so internal calls
-through the module global (``expand_macros`` -> ``rewrite_aggregates``)
-are recorded too.
+through a module global (``macros.sql`` -> ``expand_macros``) are
+recorded too.
 
 ``compare`` treats both logs as multisets of records and prints every
 record whose count differs, grouped by call, so a changed rewrite shows
@@ -20,6 +20,13 @@ as its old and new result side by side. It exits 1 when the logs
 differ. Use it on a copy of the parent and a copy of the change, run
 over the same commands, to show that a refactor rewrites every
 recorded query to the same bytes.
+
+``--fn NAME`` compares only the records of one function. A refactor
+that moves the layer's internal calls (``expand_macros`` calling the
+aggregate layer's pass directly instead of the module global
+``rewrite_aggregates``) shifts the ``expand_macros`` and
+``rewrite_aggregates`` records, while the text handed to Spark must
+not move: ``compare OLD NEW --fn sql`` checks that alone.
 """
 
 from __future__ import annotations
@@ -158,14 +165,15 @@ def record(log: str, cmd: list[str]) -> int:
         return subprocess.call(cmd, env=env)
 
 
-def _load(log: str) -> Counter:
+def _load(log: str, fn: str | None) -> Counter:
     with open(log) as f:
-        return Counter(json.dumps(json.loads(line), sort_keys=True)
-                       for line in f if line.strip())
+        records = (json.loads(line) for line in f if line.strip())
+        return Counter(json.dumps(rec, sort_keys=True) for rec in records
+                       if fn is None or rec["fn"] == fn)
 
 
-def compare(old_log: str, new_log: str) -> int:
-    old, new = _load(old_log), _load(new_log)
+def compare(old_log: str, new_log: str, fn: str | None = None) -> int:
+    old, new = _load(old_log, fn), _load(new_log, fn)
     print(f"{old_log}: {sum(old.values())} records, {len(old)} distinct")
     print(f"{new_log}: {sum(new.values())} records, {len(new)} distinct")
     calls: dict[str, dict[str, list]] = defaultdict(
@@ -192,6 +200,8 @@ def main(argv: list[str]) -> int:
         return record(argv[1], argv[3:])
     if len(argv) == 3 and argv[0] == "compare":
         return compare(argv[1], argv[2])
+    if len(argv) == 5 and argv[0] == "compare" and argv[3] == "--fn":
+        return compare(argv[1], argv[2], argv[4])
     print(__doc__, file=sys.stderr)
     return 2
 
